@@ -87,7 +87,3 @@ def trunc_avg_exact(col: str, out: str = "sum_val") -> Column:
         f"CAST(FLOOR(SUM(CAST({col} AS DECIMAL(18,6))) / COUNT(*)) AS BIGINT)"
     ).alias(out)
 
-
-def floor_div_avg(col: str, out: str = "sum_val") -> Column:
-    """floor(avg(col)) for INTEGER inputs via pure integer division."""
-    return F.expr(f"CAST(SUM({col}) DIV COUNT(*) AS BIGINT)").alias(out)

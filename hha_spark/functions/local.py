@@ -70,7 +70,21 @@ def sql_over_views(
     avoided), and scoped to `session` (foreachBatch bodies run on a
     per-batch clone, so nothing leaks to the main session). Every
     frame must already live on `session`.
+
+    `literals` are formatted into the SQL text, so only int and float
+    (never bool) are accepted; anything else raises TypeError here
+    rather than as a parse error far away. Reusing one view name per
+    key is safe only because classic PySpark analyzes ``session.sql``
+    eagerly: the returned frame is bound to the plan the view names
+    NOW, so a later call re-pointing the view cannot retarget it.
+    Spark Connect analyzes lazily — audit this helper before any move
+    to Connect.
     """
+    for key, val in literals.items():
+        if isinstance(val, bool) or not isinstance(val, (int, float)):
+            raise TypeError(
+                f"sql_over_views literal {key}={val!r}: only int or float"
+            )
     names = {}
     for key, df in (frames or {}).items():
         name = f"_hha_fused_{key}"
@@ -84,7 +98,9 @@ def arrow_rows_frame(
 ) -> DataFrame:
     """Bounded driver-local rows (tuples or pyspark Rows, positional)
     as an Arrow-backed DataFrame with the given DDL or StructType
-    `schema`."""
+    `schema`. A null in a NOT NULL field raises ValueError: neither
+    pyarrow (16.1, not even ``validate(full=True)``) nor the Arrow
+    ``createDataFrame`` path checks it."""
     import pyarrow as pa
 
     if isinstance(schema, StructType):
@@ -94,12 +110,12 @@ def arrow_rows_frame(
         if st is None:
             st = StructType.fromDDL(schema)
             _PARSED[schema] = st
-    tbl = pa.table(
-        {
-            f.name: pa.array(
-                [r[i] for r in rows], _pa_type(f.dataType)
+    cols = {}
+    for i, f in enumerate(st.fields):
+        arr = pa.array([r[i] for r in rows], _pa_type(f.dataType))
+        if not f.nullable and arr.null_count:
+            raise ValueError(
+                f"arrow_rows_frame: null in NOT NULL column {f.name!r}"
             )
-            for i, f in enumerate(st.fields)
-        }
-    )
-    return spark.createDataFrame(tbl, schema)
+        cols[f.name] = arr
+    return spark.createDataFrame(pa.table(cols), schema)

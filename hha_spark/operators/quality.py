@@ -8,10 +8,10 @@ TRAINING — with the same discipline the BPE trainer
 (`operators/text.py::bpe_train_merges`) proved for iterative
 algorithms under the oracle gate:
 
-    unrolled gradient steps, each ONE map-side-combinable aggregate
-    over the feature frame + a 1-row driver collect; the model is a
-    bounded driver-side artifact (B+1 exact integers) folded into the
-    next step as literals.
+    unrolled gradient steps, each reducing the feature frame to B+3
+    exact integers (row count, max feature mass, B+1 gradient sums);
+    the model is a bounded driver-side artifact (B+1 exact integers)
+    updated between steps.
 
 The pipeline is the fastText / DCLM quality-classifier shape: labels
 come from a cheap SEED HEURISTIC (here the doc-length quality proxy),
@@ -34,10 +34,29 @@ Exactness (the cross-engine oracle-gate contract):
   cast the accumulator to DECIMAL(38,0) like operators/dq.py does.
 
 Scale: the feature frame is one explode + one combinable conditional
-aggregate per doc (persisted across steps); each gradient step is one
-combinable aggregate producing B+2 numbers; the driver holds only the
-weight vector. Nothing grows with corpus size except the aggregates
-Spark already does tree-style.
+aggregate per doc (persisted by the caller). Training takes one of two
+paths, chosen by one bounded Arrow collect of (ym, x0..x{B-1}, xb)
+capped at QC_DRIVER_MAX_ROWS + 1 rows:
+- driver path (at most QC_DRIVER_MAX_ROWS rows come back, none null):
+  the rows ARE the sufficient statistics, so every step runs on the
+  driver in numpy int64 — z = X @ w, the truncating z div 4, the
+  hard-sigmoid clamp, g = X^T e. One bounded collect instead of one
+  aggregate + collect per step, and no logit Column rebuilt per step.
+  The cap bounds driver memory: (B+2) int64 per row is ~80 MB at the
+  default 1M rows, held once as Arrow and once as numpy.
+- distributed path (more rows, or a null feature): each step is one
+  combinable aggregate producing B+3 numbers and a 1-row collect; the
+  driver holds only the weight vector, and nothing grows with corpus
+  size except the aggregates Spark already does tree-style.
+Both paths return the same weights bit for bit. The logit and the
+gradient sums are 64-bit two's-complement arithmetic on both sides:
+numpy int64 wraps on overflow, and so does Spark's BIGINT in the
+engine's non-ANSI session (session.py). Sums modulo 2^64 do not depend
+on the order rows are added in, so partitioning cannot change them.
+The step update, its Python-int division and the 2^53 logit guard are
+one shared loop. (Under ANSI, Spark raises where numpy would wrap;
+neither happens while |g| <= 1e6 * total tokens stays under 2^63,
+the ~9e12 bound above.)
 
 Reference parity note: the reference engine (hha.py) has no trainer —
 this is part of the LLM-data-pipeline surface the rebuild adds on top
@@ -60,6 +79,11 @@ QC_STEPS = 6  # unrolled gradient steps (train acc 0.99 at sf0.01)
 QC_LR_DEN = 100  # step = -tdiv(gradient_sum, n_docs * QC_LR_DEN)
 QC_LABEL_NTOK = 55  # seed heuristic: quality doc <=> >= 55 tokens
 _Q = 1_000_000  # micro-unit fixed point
+# Largest feature frame trained on the driver. Measured on a 4-core
+# host, 8 buckets, frame persisted: driver path 1.9 s vs per-step loop
+# 3.4 s at 1M rows, but 4.3 s vs 3.9 s at 2M; driver Python peak RSS
+# grew 0.22 GB at 1M rows (CHANGES.md).
+QC_DRIVER_MAX_ROWS = 1_000_000
 
 
 # IEEE-double integer exactness limit: _tdiv's floor(abs/abs) routes
@@ -128,22 +152,11 @@ def _logit(weights: list[int], n_buckets: int) -> Column:
     return z + F.lit(int(weights[n_buckets])) * F.col("xb")
 
 
-def train_logreg_fixedpoint(
-    feat: DataFrame,
-    *,
-    n_buckets: int = QC_BUCKETS,
-    steps: int = QC_STEPS,
-    lr_den: int = QC_LR_DEN,
-) -> list[int]:
-    """Unrolled fixed-point gradient descent; returns the B+1 exact
-    integer weight vector (micro-units). Each step is one combinable
-    aggregate + a 1-row collect; the update happens driver-side in
-    arbitrary-precision Python ints, so no overflow is possible there.
-    """
-    cols = [f"x{j}" for j in range(n_buckets)] + ["xb"]
-    w = [0] * (n_buckets + 1)
-    n_docs: int | None = None
-    for _ in range(steps):
+def _spark_step(feat: DataFrame, cols: list[str], n_buckets: int):
+    """Distributed step statistics: one combinable aggregate + a 1-row
+    collect per call, the logit folded in from `w` as literals."""
+
+    def step(w: list[int]) -> tuple[int, int, list[int]]:
         z = _logit(w, n_buckets)
         sig = F.greatest(
             F.lit(0).cast("long"),
@@ -167,20 +180,83 @@ def train_logreg_fixedpoint(
             )
             .collect()[0]
         )
-        n_docs = int(row["n"])
+        g = [int(row[f"g{i}"]) for i in range(len(cols))]
+        return int(row["n"]), int(row["mx"]), g
+
+    return step
+
+
+def _driver_step(tbl, cols: list[str]):
+    """Driver-side step statistics over the collected rows, in the
+    same int64 arithmetic the aggregate in _spark_step runs."""
+    import numpy as np
+
+    x = np.column_stack([tbl.column(c).to_numpy() for c in cols])
+    ym = tbl.column("ym").to_numpy()
+    n = len(ym)
+    mx = int(x.sum(axis=1).max())
+
+    def step(w: list[int]) -> tuple[int, int, list[int]]:
+        z = x @ np.array(w, dtype=np.int64)
+        q = np.abs(z) // 4
+        sig = np.clip(_Q // 2 + np.where(z < 0, -q, q), 0, _Q)
+        g = (sig - ym) @ x
+        return n, mx, [int(v) for v in g]
+
+    return step
+
+
+def train_logreg_fixedpoint(
+    feat: DataFrame,
+    *,
+    n_buckets: int = QC_BUCKETS,
+    steps: int = QC_STEPS,
+    lr_den: int = QC_LR_DEN,
+) -> list[int]:
+    """Unrolled fixed-point gradient descent; returns the B+1 exact
+    integer weight vector (micro-units).
+
+    One Arrow collect of at most QC_DRIVER_MAX_ROWS + 1 rows picks the
+    path. If it holds the whole frame (and no nulls), every step runs
+    on the driver in numpy int64 (_driver_step); otherwise each step is
+    one combinable aggregate + a 1-row collect (_spark_step), the
+    collected rows discarded. Both compute the step's gradient sums in
+    64-bit arithmetic that wraps identically (numpy int64; Spark BIGINT
+    in the engine's non-ANSI session), so the paths agree bit for bit.
+    The update happens driver-side in arbitrary-precision Python ints,
+    so no overflow is possible there.
+    """
+    cols = [f"x{j}" for j in range(n_buckets)] + ["xb"]
+    # cast: an INT column would reach numpy as int32 and wrap at 2^31,
+    # where Spark's e * x is already BIGINT
+    tbl = (
+        feat.select(*[F.col(c).cast("long") for c in ["ym", *cols]])
+        .limit(QC_DRIVER_MAX_ROWS + 1)
+        .toArrow()
+    )
+    if tbl.num_rows <= QC_DRIVER_MAX_ROWS and not any(
+        c.null_count for c in tbl.columns
+    ):
+        step = _driver_step(tbl, cols)
+    else:
+        step = _spark_step(feat, cols, n_buckets)
+    del tbl  # _driver_step keeps a numpy copy; free the Arrow one
+    w = [0] * (n_buckets + 1)
+    for _ in range(steps):
+        n_docs, mx, g = step(w)
         den = n_docs * lr_den
 
         def upd(wj: int, gj: int) -> int:
             q = abs(gj) // den
             return wj - (-q if gj < 0 else q)
 
-        w = [upd(w[i], int(row[f"g{i}"])) for i in range(len(cols))]
+        w = [upd(wj, gj) for wj, gj in zip(w, g)]
         # the weights just computed feed the next step's logit z (and,
         # after the last step, logreg_scores over this same feature
         # frame); _tdiv(z, 4) is exact only for |z| < 2^53, so pin the
         # invariant here in exact Python-int arithmetic rather than
         # assuming the docstring's magnitude argument
-        z_bound = max(abs(x) for x in w) * int(row["mx"])
+        z_bound = max(abs(x) for x in w) * mx
         if z_bound >= _TDIV_EXACT_BOUND:
             raise OverflowError(
                 f"logit bound {z_bound} exceeds _tdiv's 2^53 double-"

@@ -652,8 +652,8 @@ ORACLES["bpe_tokenize_compression"] = _bpe_apply_oracle()
 
 
 def quality_classifier_trained(spark, sf_dir):
-    """The trained counterpart of quality_classifier_keep: distributed
-    fixed-point logistic regression (operators/quality.py) distilling
+    """The trained counterpart of quality_classifier_keep: fixed-point
+    logistic regression (operators/quality.py) distilling
     the doc-length seed heuristic into hashed bag-of-words weights,
     then serving the model as a narrow map. The oracle re-runs the
     ENTIRE unrolled training loop as chained CTEs, so a green row
@@ -670,9 +670,10 @@ def quality_classifier_trained(spark, sf_dir):
     from hha_spark.caching import tracked_persist
 
     docs = load_table(spark, sf_dir, "documents")
-    # the feature frame feeds every gradient step AND the returned
-    # scores — persist via the session-scoped registry so the caller's
-    # cycle boundary releases it after materializing (caching.py)
+    # the feature frame feeds the trainer's collect (every gradient
+    # step, past the driver-path row cap) AND the returned scores —
+    # persist via the session-scoped registry so the caller's cycle
+    # boundary releases it after materializing (caching.py)
     feat = tracked_persist(doc_features(docs))
     weights = train_logreg_fixedpoint(feat)
     return logreg_scores(feat, weights)

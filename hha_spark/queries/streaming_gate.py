@@ -31,6 +31,9 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+# gate results are bounded rollups, collected before the gate's scratch
+# dirs vanish: arrow_rows_frame makes them pure-JVM LocalTableScans
+from hha_spark.functions.local import arrow_rows_frame
 from hha_spark.queries.llm_ops import (
     NEW_BATCH_PRED,
     ORACLE_INCREMENTAL,
@@ -60,23 +63,6 @@ GATE_SHUFFLE_PARTITIONS = "2"
 # moving scratch there, else an environment detail turns green
 # streaming gates into 'No space left on device' reds.
 _SHM_MIN_FREE_BYTES = 2 << 30
-
-
-def _local_rows(spark: SparkSession, rows, schema: str) -> DataFrame:
-    """Gate-result frame from driver-local rows as an Arrow table —
-    a pure-JVM scan with ZERO Python tasks.
-
-    The round-11 shape (``parallelize(rows, 1)``) fixed the
-    32-partition Python-RDD fanout but still paid one Python worker
-    task (~0.2 s protocol latency on this sandbox) on every
-    downstream scan — the bench's noop force, the oracle collect.
-    The Arrow path ships the same rows as one Arrow batch the JVM
-    reads directly. Gate results are bounded rollups by construction
-    (collected before the gate's scratch dirs vanish), so a
-    driver-local frame is the right layout at any scale factor."""
-    from hha_spark.functions.local import arrow_rows_frame
-
-    return arrow_rows_frame(spark, rows, schema)
 
 
 def _scratch_dir(prefix: str) -> str:
@@ -311,7 +297,7 @@ def _spike_gate_body(spark, tmp, hist, now, zones, params):
         .select("num_protocol", "type_proto", "dst_ip", "sum_val", "scope")
         .collect()
     )
-    return _local_rows(
+    return arrow_rows_frame(
         spark,
         rows,
         "num_protocol int, type_proto int, dst_ip long, sum_val long, scope string",
@@ -778,7 +764,7 @@ def _sessions_rollup(spark: SparkSession, sessions: DataFrame) -> DataFrame:
         .cast("long")
         .alias("sum_len_us"),
     )
-    return _local_rows(spark, out.collect(), _SESS_ROLLUP_SCHEMA)
+    return arrow_rows_frame(spark, out.collect(), _SESS_ROLLUP_SCHEMA)
 
 
 def stream_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -949,7 +935,7 @@ def stream_cms_heavy(
         )
         q.awaitTermination()
 
-    counters = _local_rows(
+    counters = arrow_rows_frame(
         spark,
         [(r, c, v) for (r, c), v in sorted(state.items())],
         "row long, col long, counter long",
@@ -1055,7 +1041,7 @@ def stream_temperature_mixture(
         )
         q.awaitTermination()
 
-    per_source = _local_rows(
+    per_source = arrow_rows_frame(
         spark,
         [(s, v[0], v[1]) for s, v in sorted(state.items())],
         "source string, n_docs long, n_tokens long",
@@ -1277,7 +1263,7 @@ def stream_attribution_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("min_delay"),
         )
         # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _ATTR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(spark, out.collect(), _ATTR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_attribution_disorder"] = stream_attribution_disorder
@@ -1363,7 +1349,7 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
             salt=FILL_SALT,
         )
         # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_funnel"] = stream_curation_funnel
@@ -1457,7 +1443,7 @@ def stream_curation_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
             salt=FILL_SALT,
         )
         # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_compacted"] = stream_curation_compacted
@@ -1537,7 +1523,7 @@ def stream_curation_spilled(spark: SparkSession, sf_dir: str) -> DataFrame:
             salt=FILL_SALT,
         )
         # collected before the gate's scratch directories vanish
-        return _local_rows(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_spilled"] = stream_curation_spilled

@@ -8,7 +8,7 @@ with ~17 s of executor wait and ~0.3 s of CPU per probe)."""
 
 from __future__ import annotations
 
-from hha_spark.queries.streaming_gate import _local_rows
+from hha_spark.functions.local import arrow_rows_frame, sql_over_views
 from hha_spark.streaming.sessionize import (
     _empty_frame,
     _read_versioned,
@@ -65,8 +65,6 @@ def test_sql_over_views_preserves_persist_cache(spark):
     frame, so a persisted frame referenced by a fused statement is
     both recomputed by that statement and evicted for every later
     consumer (measured round 12: funnel t_write ~6x)."""
-    from hha_spark.functions.local import sql_over_views
-
     df = spark.range(100).selectExpr("id", "id * 2 AS y").persist()
     try:
         df.count()  # materialize the cache entry
@@ -90,12 +88,39 @@ def test_local_rows_arrow_localtablescan_roundtrip(spark):
     Python tasks on any downstream scan (round-12 follow-up to the
     round-11 1-partition fix), values and nulls round-tripping."""
     rows = [(1, "a"), (2, None), (3, "c")]
-    df = _local_rows(spark, rows, "k long, v string")
+    df = arrow_rows_frame(spark, rows, "k long, v string")
     plan = df._jdf.queryExecution().executedPlan().toString()
     assert "LocalTableScan" in plan
     assert "PythonRDD" not in plan and "ExistingRDD" not in plan
     got = sorted((r.k, r.v) for r in df.collect())
     assert got == sorted(rows)
-    empty = _local_rows(spark, [], "k long, v string")
+    empty = arrow_rows_frame(spark, [], "k long, v string")
     assert empty.count() == 0
     assert empty.schema.simpleString() == df.schema.simpleString()
+
+
+def test_arrow_rows_frame_rejects_null_in_not_null_field(spark):
+    """pyarrow 16.1 accepts a null under a non-nullable field (even
+    with validate(full=True)), so the helper itself must reject it:
+    ZONES_SCHEMA declares ip NOT NULL."""
+    import pytest
+
+    from hha_spark.schemas import ZONES_SCHEMA
+
+    assert arrow_rows_frame(spark, [(1,), (2,)], ZONES_SCHEMA).count() == 2
+    with pytest.raises(ValueError, match="'ip'"):
+        arrow_rows_frame(spark, [(1,), (None,)], ZONES_SCHEMA)
+
+
+def test_sql_over_views_rejects_non_numeric_literals(spark):
+    """Literals are formatted into the SQL text: only int and float
+    pass, so a string (or a bool, an int subclass) fails at the
+    helper instead of as a parse error or an injected clause."""
+    import pytest
+
+    sql = "SELECT {v} AS v"
+    assert sql_over_views(spark, sql, v=3).collect()[0]["v"] == 3
+    assert sql_over_views(spark, sql, v=0.5).collect()[0]["v"] == 0.5
+    for bad in ("1 AS v, 2", True, None):
+        with pytest.raises(TypeError, match="only int or float"):
+            sql_over_views(spark, sql, v=bad)

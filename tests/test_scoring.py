@@ -4,6 +4,7 @@ operators/dq.py::robust_outlier_report)."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from hha_spark.operators.dq import robust_outlier_report
@@ -298,7 +299,27 @@ def _py_train(texts, n_buckets, steps, lr_den, bias, thresh):
     return w
 
 
-def test_trained_classifier_matches_sequential_reference(spark):
+@pytest.fixture(params=["driver", "distributed"])
+def trainer_path(request, monkeypatch):
+    """Run a trainer test on each path of train_logreg_fixedpoint: the
+    driver path at the default row cap, and the per-step distributed
+    loop forced by a cap of 0. The other path's step builder is
+    replaced by one that fails, so a test cannot pass on the wrong
+    path."""
+    from hha_spark.operators import quality
+
+    def unused(*_):
+        raise AssertionError(f"{request.param} path not taken")
+
+    if request.param == "driver":
+        monkeypatch.setattr(quality, "_spark_step", unused)
+    else:
+        monkeypatch.setattr(quality, "QC_DRIVER_MAX_ROWS", 0)
+        monkeypatch.setattr(quality, "_driver_step", unused)
+    return request.param
+
+
+def test_trained_classifier_matches_sequential_reference(spark, trainer_path):
     from hha_spark.operators.quality import (
         QC_BIAS_X,
         QC_BUCKETS,
@@ -332,10 +353,31 @@ def test_trained_classifier_matches_sequential_reference(spark):
         assert scored[i]["keep"] == (scored[i]["logit_q"] >= 0)
 
 
-def test_trained_classifier_learns_the_heuristic(spark):
+def test_trainer_null_feature_takes_distributed_path(spark, monkeypatch):
+    """A null feature has SQL semantics (the row drops out of that
+    gradient sum) that the int64 driver path cannot express, so a
+    frame with one trains on the distributed path even under the
+    row cap."""
+    from hha_spark.operators import quality
+
+    def unused(*_):
+        raise AssertionError("driver path taken")
+
+    feat = spark.createDataFrame(
+        [(1, 1_000_000, 30, 16), (2, 0, None, 16), (3, 0, 5, 16)],
+        "doc_id long, ym long, x0 long, xb long",
+    )
+    monkeypatch.setattr(quality, "_driver_step", unused)
+    w = quality.train_logreg_fixedpoint(feat, n_buckets=1)
+    assert any(wi != 0 for wi in w)
+
+
+def test_trained_classifier_learns_the_heuristic(spark, monkeypatch):
     """On the sf0.001 fixture the trained model must beat the
     keep-everything baseline on its own training labels — i.e. the
-    gradient steps actually move the weights."""
+    gradient steps actually move the weights — and the driver and
+    distributed trainer paths must return the same weights."""
+    from hha_spark.operators import quality
     from hha_spark.operators.quality import (
         doc_features,
         logreg_scores,
@@ -347,6 +389,8 @@ def test_trained_classifier_learns_the_heuristic(spark):
     feat = doc_features(docs).persist()
     w = train_logreg_fixedpoint(feat)
     assert any(wi != 0 for wi in w)
+    monkeypatch.setattr(quality, "QC_DRIVER_MAX_ROWS", 0)
+    assert train_logreg_fixedpoint(feat) == w
     rows = logreg_scores(feat, w).collect()
     feat.unpersist()
     n = len(rows)
@@ -489,12 +533,10 @@ def test_tdiv_exact_to_double_boundary(spark):
     assert got["q"] == 2**53 != 2**53 + 1
 
 
-def test_trainer_guard_trips_past_tdiv_bound(spark):
+def test_trainer_guard_trips_past_tdiv_bound(spark, trainer_path):
     """A feature frame engineered so the first weight update lands
     max|w| * max(sum x) past 2^53 must raise, not silently train on
     inexact logits."""
-    import pytest
-
     from hha_spark.operators.quality import train_logreg_fixedpoint
 
     # one doc, one huge bucket count: gradient g0 = (sig - ym) * x0 =

@@ -644,8 +644,9 @@ def probes(spark, k: int):
             k=5,
         ),
         "gopher_rules": lambda: gopher_repetition_rules(docs),
-        # full train + serve: QC_STEPS gradient aggregates (each one
-        # combinable pass over the feature frame) then a narrow map
+        # full train + serve: one bounded Arrow collect feeding
+        # QC_STEPS driver-side steps (per-step combinable aggregates
+        # past QC_DRIVER_MAX_ROWS rows) then a narrow map
         "logreg_trained": lambda: (
             lambda feat: logreg_scores(feat, train_logreg_fixedpoint(feat))
         )(doc_features(docs)),
