@@ -68,8 +68,26 @@ def run_cycle(
     # layout would.
     lower = hour_start - (p.history_hours - 1) * 3600 - 1
     hist = read_window(spark, data_root, lower=lower, upper=now + 1)
+    return detect_and_append(
+        spark, hist, alerts_path=alerts_path, params=p, now=now,
+        zones=zones, metrics_out=metrics_out,
+    )
 
-    obs_in = obs_alerts = None
+
+def detect_and_append(
+    spark: SparkSession,
+    hist: DataFrame,
+    *,
+    alerts_path: str,
+    params: DetectorParams,
+    now: int,
+    zones: DataFrame | None = None,
+    metrics_out: dict | None = None,
+) -> list[dict]:
+    """The cycle body after the read, shared by `run_cycle` and the
+    streaming micro-batch processor (streaming/spike_stream.py):
+    TTL-suppressed S1-S8 over `hist`, rules collected, alerts appended
+    at `now`, the cycle's persists released. Returns the rules."""
     if metrics_out is not None:
         obs_in = Observation("cycle_input")
         hist = hist.observe(
@@ -79,13 +97,12 @@ def run_cycle(
             F.max("timestamp").alias("max_ts"),
         )
 
-    prior = recent_alerts(spark, alerts_path, now=now, ttl_sec=p.limit_detect_time_sec)
+    prior = recent_alerts(spark, alerts_path, now=now, ttl_sec=params.limit_detect_time_sec)
     alerts = detect_spikes(
-        hist, params=p, now=now, zones=zones, prior_alerts=prior
+        hist, params=params, now=now, zones=zones, prior_alerts=prior
     )
-    if obs_alerts is None and metrics_out is not None:
+    if metrics_out is not None:
         obs_alerts = Observation("cycle_alerts")
-    if obs_alerts is not None:
         alerts = alerts.observe(
             obs_alerts,
             F.count(F.lit(1)).alias("n_alerts"),
@@ -107,7 +124,7 @@ def run_cycle(
         return rules
     finally:
         alerts.unpersist()
-        # detect_spikes registers its fused/cur/prev persists with the
+        # detect_spikes registers its fused-frame persist with the
         # session cache registry; a long-lived detector must release
-        # them every cycle or the cache grows without bound
+        # it every cycle or the cache grows without bound
         release_tracked()

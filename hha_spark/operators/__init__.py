@@ -1,15 +1,6 @@
-from hha_spark.operators.spike import (
-    compare_windows,
-    detect_spikes,
-    rollup_averages,
-    spike_filter,
-    window_averages,
-)
+from hha_spark.operators.spike import detect_spikes, window_averages
 
 __all__ = [
     "window_averages",
-    "rollup_averages",
-    "compare_windows",
-    "spike_filter",
     "detect_spikes",
 ]

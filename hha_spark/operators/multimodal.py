@@ -6,11 +6,10 @@ feature-extract) runs through Arrow-batched `mapInPandas`, which is
 the right shape at 100 TB: each task streams pandas batches, no
 row-at-a-time pickling, and the schema contract is explicit.
 
-The container has no image/audio libraries, so the actual decoders
-are STUBS: `decode_image_stub` raises NotImplementedError by design,
-and `fake_decode_meta` produces a deterministic stand-in so the
-Spark-side plumbing (schema, batching, partitioning) is fully
-testable. `blob_stats` is real (byte length + md5) and oracle-checked.
+The `fake_*` operators are deterministic stand-ins for media
+decoders, so the Spark-side plumbing (schema, batching, partitioning)
+is testable without an imaging library. `blob_stats` is real (byte
+length + md5) and oracle-checked.
 """
 
 from __future__ import annotations
@@ -58,28 +57,8 @@ def blob_stats(df_with_blob: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return src.mapInPandas(fn, BLOB_STATS_SCHEMA)
 
 
-def decode_image_stub(df_with_blob: DataFrame) -> DataFrame:
-    """Real decoder entry point — requires an image library.
-
-    Kept as an explicit stub (no silent fallback) so callers know the
-    capability boundary; `fake_decode_meta` is the testable shape.
-    """
-    raise NotImplementedError(
-        "image decoding requires an imaging library not present in this "
-        "environment; use fake_decode_meta() for plumbing tests"
-    )
-
-
 RESIZED_SCHEMA = "doc_id bigint, width int, height int, thumb binary"
 FRAMES_SCHEMA = "doc_id bigint, frame_idx int, frame_md5 string"
-
-
-def resize_stub(df_with_blob: DataFrame, *, max_px: int = 256) -> DataFrame:
-    """Real resize entry point — requires an image library (stub)."""
-    raise NotImplementedError(
-        "image resizing requires an imaging library not present in this "
-        "environment; use fake_resize() for plumbing tests"
-    )
 
 
 def fake_resize(

@@ -8,10 +8,12 @@ SURVEY.md §2.1; every quirk preserved here is cited.
 Spark-first design decisions (vs the reference):
   * /24 derivation is a native bitmask expression (functions/ip.py),
     not a Python UDF (hha.py:20) — keeps whole-stage codegen intact.
-  * cur/prev frames are persist()ed, replacing the RDD round-trip
-    materialization hack (`recreateDF`, hha.py:119-128); each frame is
-    consumed twice (the /32 join and the /24 rollup), so one shuffle's
-    output is reused instead of recomputed.
+  * both windows come from ONE conditional aggregation
+    (`fused_window_compare`: one scan, one shuffle, no /32 join), and
+    that one fused frame is persist()ed, replacing the RDD round-trip
+    materialization hack (`recreateDF`, hha.py:119-128); it is
+    consumed three times (the /32 filter and the cur and prev /24
+    rollups), so one shuffle's output is reused instead of recomputed.
   * joins use a column-name list (no alias dance, hha.py:150,165-176).
   * watchlist gating is a broadcast left-semi join BEFORE any collect,
     replacing the driver-side `in zones` loop (hha.py:233-242).
@@ -21,13 +23,13 @@ Spark-first design decisions (vs the reference):
     the query behaves identically under ANSI and legacy modes (the
     reference relied on legacy int/0 -> NULL row-drop, SURVEY.md S6).
 
-Scale notes (100 TB design): the aggregations are partial-aggregated
-map-side by Catalyst before the shuffle; both joins are post-aggregate
-(cardinality = distinct keys, not raw rows) and AQE picks broadcast
-when the previous-window side is small. The /24 rollup consumes the
-already-aggregated /32 frame (avg-of-avg, hha.py:160-168 semantics),
-so raw data is scanned exactly twice (cur + prev windows) and shuffled
-once per window.
+Scale notes (100 TB design): the fused aggregation is
+partial-aggregated map-side by Catalyst before its shuffle; the /24
+join is post-aggregate (cardinality = distinct networks, not raw rows)
+and AQE picks broadcast when the previous-window side is small. The
+/24 rollups consume the already-aggregated /32 frame (avg-of-avg,
+hha.py:160-168 semantics), so raw data is scanned once and shuffled
+once for both windows.
 """
 
 from __future__ import annotations
@@ -245,6 +247,59 @@ def spike_filter(
     )
 
 
+def alerts_from_fused(
+    fused: DataFrame,
+    *,
+    group_cols: Sequence[str],
+    entity_col: str,
+    bucket_expr: Column,
+    bucket_name: str,
+    q: float,
+    limit_new_net: int,
+    scopes: tuple[str, str],
+) -> DataFrame:
+    """S2-S7 over a `fused_window_compare` frame keyed by
+    (*group_cols, entity_col): per-entity and per-bucket alerts, unioned.
+
+    The entity alerts filter the fused frame's current keys directly
+    (S6). The bucket branch re-averages the cur and prev columns into
+    `bucket_expr` buckets (S2, avg-of-avg), compares them without the
+    clamp guard and with `limit_new_net` as the new-key baseline
+    (S3-S5), then filters (S6). The fused frame is read three times,
+    so callers persist it first.
+
+    Returns (*group_cols, sum_val, <entity_col>, scope): `sum_val` is
+    the BASELINE (hha.py:199,210), bucket rows carry the bucket value
+    in `entity_col` (hha.py:213-214), and `scope` is scopes[0] for
+    entity rows and scopes[1] for bucket rows (S7).
+    """
+    keys = [*group_cols, entity_col]
+    cur_rows = fused.where(F.col("sum_val").isNotNull())
+    cur = cur_rows.select(*keys, "sum_val")
+    prev = fused.where(F.col("prev_sum_val").isNotNull()).select(
+        *keys, F.col("prev_sum_val").alias("sum_val")
+    )
+    cur_net = rollup_averages(
+        cur, group_cols=group_cols, bucket_expr=bucket_expr, bucket_name=bucket_name
+    )
+    prev_net = rollup_averages(
+        prev, group_cols=group_cols, bucket_expr=bucket_expr, bucket_name=bucket_name
+    )
+    net_cmp = compare_windows(
+        cur_net, prev_net, key_cols=[*group_cols, bucket_name], q=q,
+        limit_new=limit_new_net, clamp_guard=False,
+    )
+    entity_alerts = spike_filter(cur_rows, q=q).select(
+        *group_cols, F.col("prev_sum_val2").alias("sum_val"),
+        entity_col, F.lit(scopes[0]).alias("scope"),
+    )
+    net_alerts = spike_filter(net_cmp, q=q).select(
+        *group_cols, F.col("prev_sum_val2").alias("sum_val"),
+        F.col(bucket_name).alias(entity_col), F.lit(scopes[1]).alias("scope"),
+    )
+    return entity_alerts.unionByName(net_alerts)
+
+
 def detect_spikes(
     histograms: DataFrame,
     *,
@@ -253,9 +308,16 @@ def detect_spikes(
     zones: DataFrame | None = None,
     prior_alerts: DataFrame | None = None,
     persist: bool = True,
-    fused: bool = True,
 ) -> DataFrame:
     """Full S1-S8 detection cycle over the histogram fact table.
+
+    One `fused_window_compare` over `histograms` yields both window
+    averages and the /32 comparison (S1, S3, S4); with `persist` that
+    frame is cached once (and released by `caching.release_tracked`)
+    before `alerts_from_fused` derives the /32 and /24 alerts from it
+    (S2-S7). Gating and TTL dedup (S8) are broadcast joins on the
+    result. `persist=False` leaves the frame uncached, so each of its
+    three readers recomputes it from `histograms`.
 
     Returns alerts with columns
         (num_protocol, type_proto, sum_val, dst_ip, scope)
@@ -275,76 +337,24 @@ def detect_spikes(
     """
     p = params
     keys = ["num_protocol", "type_proto", "dst_ip"]
-    net_keys = ["num_protocol", "type_proto", "dst_net"]
-
-    if fused:
-        # scale path: ONE scan + ONE shuffle produces both window
-        # averages and the /32 comparison; the /24 rollups derive
-        # from the same persisted frame (fused == two-frame proven by
-        # tests/test_equivalence.py). floor(avg(int)) via the exact
-        # decimal path is identical for integral counters and immune
-        # to double-precision loss on huge partial sums.
-        base = fused_window_compare(
-            histograms, key_cols=keys, value_col="CountPkt",
-            time_col="timestamp", cur_lower=now - p.cur_window_sec,
-            prev_upper=now - p.prev_window_sec,
-            q=p.quotient_amplification, limit_new=p.limit_new_data,
-            clamp_guard=True,
-        )
-        if persist:
-            base = tracked_persist(base)
-        cur = base.where(F.col("sum_val").isNotNull()).select(*keys, "sum_val")
-        prev = base.where(F.col("prev_sum_val").isNotNull()).select(
-            *keys, F.col("prev_sum_val").alias("sum_val")
-        )
-        ip_cmp = base.where(F.col("sum_val").isNotNull())
-    else:
-        # reference-shape two-frame path (mirrors the two ReadData
-        # calls, hha.py:137,147); kept for parity documentation and
-        # for callers whose windows come from different sources
-        # exact=True so this branch is bit-identical to the fused path
-        # (which always sums exactly): a double avg landing on an
-        # integer boundary could otherwise floor differently
-        cur = window_averages(
-            histograms, key_cols=keys, value_col="CountPkt",
-            lower=now - p.cur_window_sec, exact=True,
-        )
-        prev = window_averages(
-            histograms, key_cols=keys, value_col="CountPkt",
-            upper=now - p.prev_window_sec, exact=True,
-        )
-        if persist:
-            # each frame feeds both the /32 comparison and the /24
-            # rollup (replaces recreateDF, hha.py:119-128,155-156)
-            cur = tracked_persist(cur)
-            prev = tracked_persist(prev)
-        ip_cmp = compare_windows(
-            cur, prev, key_cols=keys, q=p.quotient_amplification,
-            limit_new=p.limit_new_data, clamp_guard=True,
-        )
-
-    cur_net = rollup_averages(
-        cur, group_cols=keys[:2], bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net"
+    # floor(avg(int)) via the exact decimal path is identical for
+    # integral counters and immune to double-precision loss on huge
+    # partial sums
+    base = fused_window_compare(
+        histograms, key_cols=keys, value_col="CountPkt",
+        time_col="timestamp", cur_lower=now - p.cur_window_sec,
+        prev_upper=now - p.prev_window_sec,
+        q=p.quotient_amplification, limit_new=p.limit_new_data,
+        clamp_guard=True,
     )
-    prev_net = rollup_averages(
-        prev, group_cols=keys[:2], bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net"
+    if persist:
+        base = tracked_persist(base)
+    alerts = alerts_from_fused(
+        base, group_cols=keys[:2], entity_col="dst_ip",
+        bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net",
+        q=p.quotient_amplification, limit_new_net=p.limit_new_data_net,
+        scopes=("ip", "net"),
     )
-    net_cmp = compare_windows(
-        cur_net, prev_net, key_cols=net_keys, q=p.quotient_amplification,
-        limit_new=p.limit_new_data_net, clamp_guard=False,
-    )
-
-    ip_alerts = spike_filter(ip_cmp, q=p.quotient_amplification).select(
-        "num_protocol", "type_proto",
-        F.col("prev_sum_val2").alias("sum_val"),  # hha.py:210 aliases baseline as sum_val
-        "dst_ip", F.lit("ip").alias("scope"),
-    )
-    net_alerts = spike_filter(net_cmp, q=p.quotient_amplification).select(
-        "num_protocol", "type_proto",
-        F.col("prev_sum_val2").alias("sum_val"),  # hha.py:199
-        F.col("dst_net").alias("dst_ip"), F.lit("net").alias("scope"),
-    )
-    alerts = ip_alerts.unionByName(net_alerts)  # S7 (hha.py:213-214), schema-aligned
 
     if zones is not None:
         # S8 gating — exact membership, pushed below any collect

@@ -14,8 +14,9 @@ Windows: current = last 2 days, previous = everything older than
 7 days before `now` — both one-sided like the reference's
 (hha.py:141,148; endTime computed but unused, hha.py:321-323).
 
-All three queries compose the same operators as the histogram-domain
-`detect_spikes` (operators/spike.py), so the oracle checks pin the
+The queries compose the same operators as the histogram-domain
+`detect_spikes` (operators/spike.py); `spike_events_alerts` runs the
+same S2-S7 body, `alerts_from_fused`. So the oracle checks pin the
 operator semantics themselves.
 """
 
@@ -25,10 +26,9 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from hha_spark.operators.spike import (
-    compare_windows,
+    alerts_from_fused,
     fused_window_compare,
     rollup_averages,
-    spike_filter,
 )
 from hha_spark.sources.tables import US_PER_DAY, events_ts_us, load_table
 
@@ -77,16 +77,6 @@ def _fused(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _cur_from(fused: DataFrame) -> DataFrame:
-    return fused.where(F.col("sum_val").isNotNull()).select(*KEYS, "sum_val")
-
-
-def _prev_from(fused: DataFrame) -> DataFrame:
-    return fused.where(F.col("prev_sum_val").isNotNull()).select(
-        *KEYS, F.col("prev_sum_val").alias("sum_val")
-    )
-
-
 def spike_events_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S3+S4 exposed: per-key cur/prev/clamped-baseline frame."""
     fused = _fused(spark, sf_dir)
@@ -108,29 +98,11 @@ def spike_events_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     rollups.
     """
     fused = tracked_persist(_fused(spark, sf_dir))
-    ip_alerts = spike_filter(
-        fused.where(F.col("sum_val").isNotNull()), q=Q
-    ).select(
-        F.col("user_id").alias("entity_id"), "event_type",
-        F.col("prev_sum_val2").alias("sum_val"), F.lit("user").alias("scope"),
-    )
-    cur_net = rollup_averages(
-        _cur_from(fused), group_cols=["event_type"], bucket_expr=F.expr(BUCKET),
-        bucket_name="bucket_id",
-    )
-    prev_net = rollup_averages(
-        _prev_from(fused), group_cols=["event_type"], bucket_expr=F.expr(BUCKET),
-        bucket_name="bucket_id",
-    )
-    net_cmp = compare_windows(
-        cur_net, prev_net, key_cols=["event_type", "bucket_id"], q=Q,
-        limit_new=LIMIT_NEW_NET, clamp_guard=False,
-    )
-    net_alerts = spike_filter(net_cmp, q=Q).select(
-        F.col("bucket_id").alias("entity_id"), "event_type",
-        F.col("prev_sum_val2").alias("sum_val"), F.lit("bucket").alias("scope"),
-    )
-    return ip_alerts.unionByName(net_alerts)
+    return alerts_from_fused(
+        fused, group_cols=["event_type"], entity_col="user_id",
+        bucket_expr=F.expr(BUCKET), bucket_name="bucket_id",
+        q=Q, limit_new_net=LIMIT_NEW_NET, scopes=("user", "bucket"),
+    ).select(F.col("user_id").alias("entity_id"), "event_type", "sum_val", "scope")
 
 
 TTL_US = 1 * US_PER_DAY          # LimitDetectTimeSec analogue
@@ -191,8 +163,9 @@ def spike_events_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def spike_events_net_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 isolated: avg-of-avg bucket rollup of the current window."""
+    fused = _fused(spark, sf_dir)
     return rollup_averages(
-        _cur_from(_fused(spark, sf_dir)),
+        fused.where(F.col("sum_val").isNotNull()).select(*KEYS, "sum_val"),
         group_cols=["event_type"],
         bucket_expr=F.expr(BUCKET),
         bucket_name="bucket_id",

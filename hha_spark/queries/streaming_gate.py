@@ -240,7 +240,6 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver-side copy is bounded.
     """
     from hha_spark.config import DetectorParams
-    from hha_spark.streaming.spike_stream import run_streaming_detector
 
     ev = load_table(spark, sf_dir, "events")
     ts_s = (

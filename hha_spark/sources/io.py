@@ -3,9 +3,6 @@
 The reference reads exactly one format (parquet over HDFS). A usable
 engine needs the standard set; these wrappers pin explicit schemas
 (never inferSchema in production paths) and centralize options.
-Lakehouse table formats (Delta/Iceberg/Hudi) need their runtime jars,
-which this environment doesn't ship — those entry points are explicit
-stubs behind import probes, not silent fallbacks.
 """
 
 from __future__ import annotations
@@ -30,10 +27,6 @@ def read_csv(
 
 def read_json(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
     return spark.read.schema(schema).json(path)
-
-
-def read_orc(spark: SparkSession, path: str) -> DataFrame:
-    return spark.read.orc(path)
 
 
 def read_binary_files(
@@ -103,10 +96,9 @@ def upsert_parquet(
     row count.
 
     At 100 TB this full-table rewrite is the wrong tool — that is
-    exactly what Delta/Iceberg row-level MERGE exists for (see the
-    jar-gated readers below); this covers the gap for plain-parquet
-    deployments where updates are rare and batch-shaped, and for
-    partition-scoped rewrites.
+    exactly what Delta/Iceberg row-level MERGE exists for; this covers
+    the gap for plain-parquet deployments where updates are rare and
+    batch-shaped, and for partition-scoped rewrites.
     """
     from hha_spark.sources import fs
 
@@ -134,69 +126,3 @@ def upsert_parquet(
     fs.rename(spark, tmp, path)
     fs.delete(spark, old)
     return n
-
-
-def _require(module: str, feature: str) -> None:
-    import importlib
-
-    try:
-        importlib.import_module(module)
-    except ImportError as exc:  # pragma: no cover - env-dependent
-        raise NotImplementedError(
-            f"{feature} requires the '{module}' package and its runtime jars, "
-            "which are not available in this environment"
-        ) from exc
-
-
-def _require_kafka(spark: SparkSession) -> None:
-    """Kafka needs the spark-sql-kafka runtime jar on the session
-    classpath; probe the JVM-side provider instead of a Python import."""
-    try:
-        spark._jvm.java.lang.Class.forName(
-            "org.apache.spark.sql.kafka010.KafkaSourceProvider"
-        )
-    except Exception as exc:  # noqa: BLE001 - jar absent
-        raise NotImplementedError(
-            "Kafka support requires the spark-sql-kafka-0-10 jar, which is "
-            "not available in this environment"
-        ) from exc
-
-
-def read_kafka_stream(
-    spark: SparkSession, *, bootstrap: str, topic: str, starting: str = "latest"
-) -> DataFrame:
-    """Streaming Kafka source (key/value binary columns) — jar-gated."""
-    _require_kafka(spark)
-    return (  # pragma: no cover - jar-dependent
-        spark.readStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("subscribe", topic)
-        .option("startingOffsets", starting)
-        .load()
-    )
-
-
-def write_kafka_stream(
-    df: DataFrame, *, bootstrap: str, topic: str, checkpoint: str
-):
-    """Streaming Kafka sink (expects key/value columns) — jar-gated."""
-    _require_kafka(df.sparkSession)
-    return (  # pragma: no cover - jar-dependent
-        df.writeStream.format("kafka")
-        .option("kafka.bootstrap.servers", bootstrap)
-        .option("topic", topic)
-        .option("checkpointLocation", checkpoint)
-        .start()
-    )
-
-
-def read_delta(spark: SparkSession, path: str) -> DataFrame:
-    """Delta Lake table read — stub until delta-spark jars are present."""
-    _require("delta", "Delta Lake support")
-    return spark.read.format("delta").load(path)  # pragma: no cover
-
-
-def read_iceberg(spark: SparkSession, table: str) -> DataFrame:
-    """Iceberg table read — stub until iceberg-spark-runtime is present."""
-    _require("pyiceberg", "Apache Iceberg support")
-    return spark.read.format("iceberg").load(table)  # pragma: no cover

@@ -19,9 +19,10 @@ full S1-S8 batch operators incrementally:
                         (a filesystem unlink, not a rewrite)
     GlobalRowList    -> the persisted alerts table + anti-join
                         (sinks/alerts.py), restart-safe
-    /24 rollup       -> included — foreachBatch reuses detect_spikes
-                        verbatim, so streaming = batch semantics by
-                        construction (S1-S8, not a /32-only subset)
+    /24 rollup       -> included — foreachBatch reuses the detector's
+                        cycle body (detector.detect_and_append), so
+                        streaming = batch semantics by construction
+                        (S1-S8, not a /32-only subset)
 
 Why foreachBatch instead of applyInPandasWithState: two reasons.
 Architecturally, the reference's prev-window is unbounded-below and
@@ -48,10 +49,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 
 from hha_spark.config import DetectorParams
-from hha_spark.operators.spike import detect_spikes
+from hha_spark.detector import detect_and_append
 from hha_spark.schemas import HISTOGRAM_SCHEMA
-from hha_spark.sinks.alerts import append_alerts, collect_rules, recent_alerts
-from hha_spark.caching import release_tracked
 from hha_spark.sources.histograms import (
     SECONDS_PER_HOUR,
     read_window,
@@ -126,23 +125,13 @@ def make_batch_processor(
             samples_root, now=now, retention_sec=retention_sec, spark=spark
         )
 
-        # 2. full S1-S8 over the bounded window (pruned scan)
+        # 2. the detector's cycle body over the bounded window (pruned
+        #    scan): full S1-S8, TTL dedup, collect, append, release
         hist = read_window(spark, samples_root, lower=now - retention_sec)
-        prior = recent_alerts(
-            spark, alerts_path, now=now, ttl_sec=params.limit_detect_time_sec
+        rules = detect_and_append(
+            spark, hist, alerts_path=alerts_path, params=params, now=now,
+            zones=zones,
         )
-        alerts = detect_spikes(
-            hist, params=params, now=now, zones=zones, prior_alerts=prior
-        ).persist()
-        try:
-            # collect BEFORE appending — the anti-join reads the table
-            # the append writes (see detector.run_cycle)
-            rules = collect_rules(alerts)
-            append_alerts(alerts, alerts_path, detected_at=now)
-        finally:
-            alerts.unpersist()
-            # release detect_spikes' registered persists per micro-batch
-            release_tracked()
         if on_rules is not None:
             on_rules(rules)
 

@@ -10,13 +10,19 @@ from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
+from hha_spark.config import DetectorParams
+from hha_spark.functions.ip import ip_to_net24
 from hha_spark.operators.dedup import jaccard_pairs, with_token_set
 from hha_spark.operators.spike import (
     compare_windows,
+    detect_spikes,
     fused_window_compare,
+    rollup_averages,
+    spike_filter,
     window_averages,
 )
 from hha_spark.operators.temporal import asof_join
+from hha_spark.schemas import HISTOGRAM_SCHEMA
 
 SET = settings(
     max_examples=10,
@@ -70,6 +76,76 @@ def test_fused_equals_two_frame_compare(spark, rows):
         if r.sum_val is not None  # two-frame output = cur keys only
     }
     assert fused == two_frame
+
+
+# --- full S1-S7 detect_spikes == two-frame reference ------------------------
+
+P = DetectorParams()
+HIST_NOW = 1_700_000_000
+
+hist_strategy = st.lists(
+    st.tuples(
+        st.integers(min_value=1, max_value=3),        # num_protocol
+        st.sampled_from([11, 41]),                    # type_proto
+        st.integers(174327296, 174327296 + 511),      # dst_ip (2 /24s)
+        st.sampled_from([HIST_NOW - 10, HIST_NOW - 400]),  # cur or prev window
+        st.integers(min_value=0, max_value=20_000),   # CountPkt
+    ),
+    min_size=1,
+    max_size=30,
+)
+
+
+def two_frame_alerts(hist):
+    """S1-S7 the reference's way: one frame per window, a /32 left
+    join, and /24 rollups of each window frame."""
+    keys = ["num_protocol", "type_proto", "dst_ip"]
+    q = P.quotient_amplification
+    cur = window_averages(
+        hist, key_cols=keys, value_col="CountPkt",
+        lower=HIST_NOW - P.cur_window_sec, exact=True,
+    )
+    prev = window_averages(
+        hist, key_cols=keys, value_col="CountPkt",
+        upper=HIST_NOW - P.prev_window_sec, exact=True,
+    )
+    ip_cmp = compare_windows(
+        cur, prev, key_cols=keys, q=q, limit_new=P.limit_new_data,
+        clamp_guard=True,
+    )
+    net24 = ip_to_net24("dst_ip")
+    cur_net = rollup_averages(
+        cur, group_cols=keys[:2], bucket_expr=net24, bucket_name="dst_net"
+    )
+    prev_net = rollup_averages(
+        prev, group_cols=keys[:2], bucket_expr=net24, bucket_name="dst_net"
+    )
+    net_cmp = compare_windows(
+        cur_net, prev_net, key_cols=["num_protocol", "type_proto", "dst_net"],
+        q=q, limit_new=P.limit_new_data_net, clamp_guard=False,
+    )
+    return {
+        (r.num_protocol, r.type_proto, r.prev_sum_val2, r.dst_ip, "ip")
+        for r in spike_filter(ip_cmp, q=q).collect()
+    } | {
+        (r.num_protocol, r.type_proto, r.prev_sum_val2, r.dst_net, "net")
+        for r in spike_filter(net_cmp, q=q).collect()
+    }
+
+
+@given(rows=hist_strategy)
+@settings(
+    max_examples=12, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+def test_detect_spikes_equals_two_frame_reference(spark, rows):
+    data = [(ts, 1, np_, tp, cnt, ip) for (np_, tp, ip, ts, cnt) in rows]
+    hist = spark.createDataFrame(data, HISTOGRAM_SCHEMA)
+    got = {
+        (r.num_protocol, r.type_proto, r.sum_val, r.dst_ip, r.scope)
+        for r in detect_spikes(hist, params=P, now=HIST_NOW, persist=False).collect()
+    }
+    assert got == two_frame_alerts(hist)
 
 
 # --- inverted-index jaccard == naive set arithmetic ------------------------

@@ -8,7 +8,7 @@ import pytest
 from pyspark.sql import types as T
 
 from hha_spark.config import DetectorParams
-from hha_spark.sources.io import read_csv, read_delta, read_json, write_table
+from hha_spark.sources.io import read_csv, read_json, write_table
 
 SCHEMA = T.StructType(
     [
@@ -37,11 +37,6 @@ def test_json_and_orc_write_roundtrip(spark, tmp_path):
     op = str(tmp_path / "o")
     write_table(src, op, fmt="orc", mode="overwrite")
     assert spark.read.orc(op).count() == 1
-
-
-def test_delta_stub_raises_cleanly(spark, tmp_path):
-    with pytest.raises(NotImplementedError, match="Delta Lake"):
-        read_delta(spark, str(tmp_path))
 
 
 def test_detector_params_from_ini(tmp_path):
@@ -84,12 +79,3 @@ def test_upsert_parquet_merges_by_key(spark, tmp_path):
     assert upsert_parquet(spark, delta, path, key_cols=["k"], schema=schema) == 4
     got = {(r.k, r.v) for r in spark.read.schema(schema).parquet(path).collect()}
     assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}
-
-
-def test_kafka_stub_raises_cleanly(spark):
-    import pytest as _pytest
-
-    from hha_spark.sources.io import read_kafka_stream
-
-    with _pytest.raises(NotImplementedError, match="spark-sql-kafka"):
-        read_kafka_stream(spark, bootstrap="b:9092", topic="t")

@@ -418,3 +418,37 @@ def test_ccnet_buckets_windows_are_lang_partitioned(spark):
         # separator-count heuristic used elsewhere misreads it)
         assert "windowspecdefinition(lang" in ln, f"unpartitioned: {ln}"
     assert "BroadcastHashJoin" in plan  # head-vocabulary join
+
+
+def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
+    from hha_spark.caching import release_tracked
+    from hha_spark.config import DetectorParams
+    from hha_spark.operators.spike import detect_spikes
+    from hha_spark.schemas import HISTOGRAM_SCHEMA
+
+    now = 1_700_000_000
+    path = str(tmp_path / "histograms")
+    spark.createDataFrame(
+        [
+            (now - 10, 1, 1, 11, 9000, 174327308),
+            (now - 400, 1, 1, 11, 100, 174327308),
+            (now - 10, 1, 2, 41, 50, 174327555),
+        ],
+        HISTOGRAM_SCHEMA,
+    ).write.parquet(path)
+    hist = spark.read.schema(HISTOGRAM_SCHEMA).parquet(path)
+    alerts = detect_spikes(hist, params=DetectorParams(), now=now)
+    try:
+        leaves = alerts._jdf.queryExecution().optimizedPlan().collectLeaves()
+        leaves = [leaves.apply(i) for i in range(leaves.size())]
+        cached = {leaf.cacheBuilder().cachedPlan().toString() for leaf in leaves}
+        plan = plan_of(alerts)
+    finally:
+        release_tracked()
+    # every reader of the fact data (the /32 filter, the cur and prev
+    # /24 rollups) reads the one persisted fused frame, which holds
+    # the single fact scan
+    assert {leaf.nodeName() for leaf in leaves} == {"InMemoryRelation"}
+    assert len(cached) == 1
+    assert next(iter(cached)).count("FileScan parquet") == 1
+    assert "SortMergeJoin" not in plan

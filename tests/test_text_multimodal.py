@@ -4,15 +4,11 @@ from __future__ import annotations
 
 import hashlib
 
-import pytest
-
 from hha_spark.operators.multimodal import (
     blob_stats,
-    decode_image_stub,
     fake_decode_meta,
     fake_frame_sample,
     fake_resize,
-    resize_stub,
     with_blob,
 )
 from hha_spark.operators.text import (
@@ -85,8 +81,6 @@ def test_fake_resize_contract(spark):
     for r in out:
         assert r.width <= 128 and r.height <= 128
         assert isinstance(r.thumb, (bytes, bytearray)) and len(r.thumb) <= 32
-    with pytest.raises(NotImplementedError):
-        resize_stub(df)
 
 
 def test_fake_frame_sample_fanout(spark):
@@ -99,15 +93,13 @@ def test_fake_frame_sample_fanout(spark):
     assert all(len(r.frame_md5) == 32 for r in out)
 
 
-def test_fake_decode_deterministic_and_stub_raises(spark):
+def test_fake_decode_deterministic(spark):
     df = with_blob(docs_df(spark))
     a = sorted(map(tuple, fake_decode_meta(df).collect()))
     b = sorted(map(tuple, fake_decode_meta(df).collect()))
     assert a == b                               # deterministic fake
     for row in a:
         assert 64 <= row[1] <= 255 and row[4] in ("png", "jpeg", "webp")
-    with pytest.raises(NotImplementedError):
-        decode_image_stub(df)
 
 
 def test_gopher_rules_hand_computed(spark):
