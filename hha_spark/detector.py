@@ -86,8 +86,9 @@ def detect_and_append(
 ) -> list[dict]:
     """The cycle body after the read, shared by `run_cycle` and the
     streaming micro-batch processor (streaming/spike_stream.py):
-    TTL-suppressed S1-S8 over `hist`, rules collected, alerts appended
-    at `now`, the cycle's persists released. Returns the rules."""
+    TTL-suppressed S1-S8 over `hist` run by ONE action (the rules
+    collect), the rules appended at `now` from the driver, tracked
+    persists released. Returns the rules."""
     if metrics_out is not None:
         obs_in = Observation("cycle_input")
         hist = hist.observe(
@@ -109,22 +110,18 @@ def detect_and_append(
             F.sum((F.col("scope") == "ip").cast("long")).alias("n_ip_alerts"),
             F.sum((F.col("scope") == "net").cast("long")).alias("n_net_alerts"),
         )
-    alerts = alerts.persist()
     try:
-        # materialize BEFORE appending: the TTL anti-join reads the
-        # same table the append writes, and Spark's refreshByPath
-        # invalidates the cached plan on write — collecting after the
-        # append would re-evaluate against the post-append table and
-        # suppress every alert just raised
+        # the cycle's one action; the append writes the collected
+        # rules, so nothing re-reads the table the TTL anti-join read
         rules = collect_rules(alerts)
-        append_alerts(alerts, alerts_path, detected_at=now)
+        append_alerts(spark, rules, alerts_path, detected_at=now)
         if metrics_out is not None:
             metrics_out.update(obs_in.get)
             metrics_out.update(obs_alerts.get)
         return rules
     finally:
-        alerts.unpersist()
-        # detect_spikes registers its fused-frame persist with the
-        # session cache registry; a long-lived detector must release
-        # it every cycle or the cache grows without bound
+        # cycle boundary of the session cache contract (caching.py):
+        # the detection plan persists nothing, but a long-lived
+        # detector still releases whatever was registered since the
+        # last cycle, or the cache grows without bound
         release_tracked()

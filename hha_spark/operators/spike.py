@@ -10,11 +10,14 @@ Spark-first design decisions (vs the reference):
     not a Python UDF (hha.py:20) — keeps whole-stage codegen intact.
   * both windows come from ONE conditional aggregation
     (`fused_window_compare`: one scan, one shuffle, no /32 join), and
-    that one fused frame is persist()ed, replacing the RDD round-trip
-    materialization hack (`recreateDF`, hha.py:119-128); it is
-    consumed three times (the /32 filter and the cur and prev /24
-    rollups), so one shuffle's output is reused instead of recomputed.
-  * joins use a column-name list (no alias dance, hha.py:150,165-176).
+    the /32 filter and the /24 branch read that fused frame through
+    ONE grouped aggregate (`alerts_from_fused`), so the whole cycle is
+    one linear plan with one reader per frame. Nothing needs the
+    reference's RDD round-trip materialization hack (`recreateDF`,
+    hha.py:119-128), and nothing is persisted.
+  * no joins between windows or levels: keys missing from a window
+    surface as NULL averages and take the new-key default
+    (hha.py:179,194) by projection, not by a left-join miss.
   * watchlist gating is a broadcast left-semi join BEFORE any collect,
     replacing the driver-side `in zones` loop (hha.py:233-242).
   * TTL alert dedup is a left-anti join against a persisted alerts
@@ -24,12 +27,11 @@ Spark-first design decisions (vs the reference):
     reference relied on legacy int/0 -> NULL row-drop, SURVEY.md S6).
 
 Scale notes (100 TB design): the fused aggregation is
-partial-aggregated map-side by Catalyst before its shuffle; the /24
-join is post-aggregate (cardinality = distinct networks, not raw rows)
-and AQE picks broadcast when the previous-window side is small. The
-/24 rollups consume the already-aggregated /32 frame (avg-of-avg,
-hha.py:160-168 semantics), so raw data is scanned once and shuffled
-once for both windows.
+partial-aggregated map-side by Catalyst before its shuffle. The /24
+aggregate consumes the already-aggregated /32 frame (avg-of-avg,
+hha.py:160-168 semantics; cardinality = distinct keys, not raw rows)
+in a second, partial-aggregated shuffle, so raw data is scanned once
+and shuffled once for both windows.
 """
 
 from __future__ import annotations
@@ -38,11 +40,10 @@ from collections.abc import Sequence
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
+from pyspark.sql.types import IntegralType
 
 from hha_spark.config import DetectorParams
 from hha_spark.functions.ip import ip_to_net24
-
-from hha_spark.caching import tracked_persist
 
 
 def _safe_ratio(num: Column, den: Column) -> Column:
@@ -112,11 +113,16 @@ def rollup_averages(
     return (
         df.withColumn(bucket_name, bucket_expr)
         .groupBy(*[c for c in group_cols], bucket_name)
-        # floor(avg(int)) == integer floor division for the
-        # non-negative counters handled here; DIV is exact at any
-        # scale (no double rounding past 2^53)
-        .agg(F.expr(f"CAST(SUM({value_col}) DIV COUNT(*) AS BIGINT)").alias(value_col))
+        .agg(_avg_of_avg(value_col).alias(value_col))
     )
+
+
+def _avg_of_avg(col: str) -> Column:
+    """S2's bucket value: the average of the non-NULL per-key averages
+    in `col`, NULL when there are none. floor(avg(int)) == integer
+    floor division for the non-negative counters handled here; DIV is
+    exact at any scale (no double rounding past 2^53)."""
+    return F.expr(f"CAST(SUM({col}) DIV NULLIF(COUNT({col}), 0) AS BIGINT)")
 
 
 def fused_window_compare(
@@ -145,8 +151,12 @@ def fused_window_compare(
     miss).
 
     Bounds may be Columns (e.g. data-derived `now` broadcast via a
-    1-row cross join) or int literals. Averages use the exact decimal
-    path (functions/exact.py semantics). Output: all keys seen in
+    1-row cross join) or int literals. The averages are exact floors.
+    An integral `value_col` is summed as BIGINT and floored as
+    `(s - pmod(s, n)) DIV n`: exact while a key's window sum fits a
+    BIGINT, where a DECIMAL(18,6) cast turns any sample of 10^12 or
+    more into NULL. A fractional one keeps the exact decimal path
+    (functions/exact.py semantics). Output: all keys seen in
     EITHER window, with
         sum_val       cur avg (NULL when the key has no current rows)
         prev_sum_val  raw prev avg (NULL when absent)
@@ -158,21 +168,27 @@ def fused_window_compare(
     hi = prev_upper if isinstance(prev_upper, Column) else F.lit(prev_upper)
     in_cur = F.col(time_col) > lo
     in_prev = F.col(time_col) < hi
-    dec = F.col(value_col).cast("decimal(18,6)")
+    if isinstance(df.schema[value_col].dataType, IntegralType):
+        val = F.col(value_col).cast("long")
+
+        def floor_avg(s: str, n: str) -> Column:
+            # DIV truncates toward zero; subtracting the non-negative
+            # remainder first makes it a floor for negative sums too
+            return F.expr(f"({s} - pmod({s}, {n})) DIV {n}")
+    else:
+        val = F.col(value_col).cast("decimal(18,6)")
+
+        def floor_avg(s: str, n: str) -> Column:
+            return F.floor(F.col(s) / F.col(n)).cast("long")
+
     agg = df.groupBy(*key_cols).agg(
-        F.sum(F.when(in_cur, dec)).alias("_cur_sum"),
+        F.sum(F.when(in_cur, val)).alias("_cur_sum"),
         F.sum(F.when(in_cur, 1).otherwise(0)).alias("_cur_n"),
-        F.sum(F.when(in_prev, dec)).alias("_prev_sum"),
+        F.sum(F.when(in_prev, val)).alias("_prev_sum"),
         F.sum(F.when(in_prev, 1).otherwise(0)).alias("_prev_n"),
     )
-    cur_avg = F.when(
-        F.col("_cur_n") > 0,
-        F.floor(F.col("_cur_sum") / F.col("_cur_n")).cast("long"),
-    )
-    prev_avg = F.when(
-        F.col("_prev_n") > 0,
-        F.floor(F.col("_prev_sum") / F.col("_prev_n")).cast("long"),
-    )
+    cur_avg = F.when(F.col("_cur_n") > 0, floor_avg("_cur_sum", "_cur_n"))
+    prev_avg = F.when(F.col("_prev_n") > 0, floor_avg("_prev_sum", "_prev_n"))
     with_avgs = agg.select(*key_cols, cur_avg.alias("sum_val"), prev_avg.alias("prev_sum_val"))
     clamp_cond = _safe_ratio(F.col("prev_sum_val"), F.col("sum_val")) > F.lit(q)
     if clamp_guard:
@@ -191,62 +207,6 @@ def fused_window_compare(
     ).where((F.col("sum_val").isNotNull()) | (F.col("prev_sum_val").isNotNull()))
 
 
-def compare_windows(
-    cur: DataFrame,
-    prev: DataFrame,
-    *,
-    key_cols: Sequence[str],
-    q: float,
-    limit_new: int,
-    clamp_guard: bool,
-    value_col: str = "sum_val",
-) -> DataFrame:
-    """S3/S4/S5 — left-join current against previous, clamp drops,
-    default new keys.
-
-    Output columns: key_cols + [value_col, prev_sum_val, prev_sum_val2].
-
-    * left join on the full key (hha.py:170,184).
-    * drop-clamp: if prev/cur > q the baseline is clamped down to
-      `limit_new` so recovery-to-normal still triggers. The /32 branch
-      additionally requires prev > limit_new (hha.py:191-192); the /24
-      branch does NOT (hha.py:177-178) — `clamp_guard` selects which.
-    * new keys (join miss) get prev = prev2 = limit_new
-      (na.fill, hha.py:179,194).
-    """
-    prev_renamed = prev.withColumnRenamed(value_col, "prev_sum_val")
-    joined = cur.join(prev_renamed, on=list(key_cols), how="left")
-    clamp_cond = _safe_ratio(F.col("prev_sum_val"), F.col(value_col)) > F.lit(q)
-    if clamp_guard:
-        clamp_cond = clamp_cond & (F.col("prev_sum_val") > F.lit(limit_new))
-    return joined.select(
-        *key_cols,
-        F.col(value_col),
-        F.coalesce(F.col("prev_sum_val"), F.lit(limit_new)).alias("prev_sum_val"),
-        F.coalesce(
-            F.when(clamp_cond, F.lit(limit_new)).otherwise(F.col("prev_sum_val")),
-            F.lit(limit_new),
-        ).alias("prev_sum_val2"),
-    )
-
-
-def spike_filter(
-    compared: DataFrame,
-    *,
-    q: float,
-    value_col: str = "sum_val",
-) -> DataFrame:
-    """S6 — keep rows whose cur/baseline ratio exceeds q.
-
-    Reference hha.py:198,209. A zero baseline yields a NULL ratio and
-    the row silently drops (legacy division semantics) — reproduced
-    explicitly with nullif so ANSI mode agrees.
-    """
-    return compared.where(
-        _safe_ratio(F.col(value_col), F.col("prev_sum_val2")) > F.lit(q)
-    )
-
-
 def alerts_from_fused(
     fused: DataFrame,
     *,
@@ -259,45 +219,58 @@ def alerts_from_fused(
     scopes: tuple[str, str],
 ) -> DataFrame:
     """S2-S7 over a `fused_window_compare` frame keyed by
-    (*group_cols, entity_col): per-entity and per-bucket alerts, unioned.
+    (*group_cols, entity_col): per-entity and per-bucket alerts as ONE
+    grouped aggregate, so the fused frame has a single reader.
 
-    The entity alerts filter the fused frame's current keys directly
-    (S6). The bucket branch re-averages the cur and prev columns into
-    `bucket_expr` buckets (S2, avg-of-avg), compares them without the
-    clamp guard and with `limit_new_net` as the new-key baseline
-    (S3-S5), then filters (S6). The fused frame is read three times,
-    so callers persist it first.
+    The fused frame is grouped once by (*group_cols, bucket). Per
+    bucket the aggregate yields the avg-of-avg of the current and of
+    the previous window (S2, `_avg_of_avg` as in `rollup_averages`;
+    NULL when the bucket has no such keys) and the
+    list of entity alerts passing S6 against their clamped baseline.
+    The bucket value is then compared without the clamp guard and with
+    `limit_new_net` as the new-bucket baseline (S3-S5), filtered (S6),
+    and emitted with the entity alerts through one explode (S7) — no
+    self-join, no union.
 
     Returns (*group_cols, sum_val, <entity_col>, scope): `sum_val` is
     the BASELINE (hha.py:199,210), bucket rows carry the bucket value
     in `entity_col` (hha.py:213-214), and `scope` is scopes[0] for
     entity rows and scopes[1] for bucket rows (S7).
     """
-    keys = [*group_cols, entity_col]
-    cur_rows = fused.where(F.col("sum_val").isNotNull())
-    cur = cur_rows.select(*keys, "sum_val")
-    prev = fused.where(F.col("prev_sum_val").isNotNull()).select(
-        *keys, F.col("prev_sum_val").alias("sum_val")
+
+    def alert(baseline: Column, entity: Column, scope: str) -> Column:
+        return F.struct(
+            baseline.alias("sum_val"), entity.alias(entity_col),
+            F.lit(scope).alias("scope"),
+        )
+
+    entity_alert = F.when(
+        _safe_ratio(F.col("sum_val"), F.col("prev_sum_val2")) > F.lit(q),
+        alert(F.col("prev_sum_val2"), F.col(entity_col), scopes[0]),
     )
-    cur_net = rollup_averages(
-        cur, group_cols=group_cols, bucket_expr=bucket_expr, bucket_name=bucket_name
+    buckets = fused.groupBy(*group_cols, bucket_expr.alias(bucket_name)).agg(
+        _avg_of_avg("sum_val").alias("_cur"),
+        _avg_of_avg("prev_sum_val").alias("_prev"),
+        # collect_list skips the NULLs of keys that do not alert
+        F.collect_list(entity_alert).alias("_alerts"),
     )
-    prev_net = rollup_averages(
-        prev, group_cols=group_cols, bucket_expr=bucket_expr, bucket_name=bucket_name
+    cur, prev = F.col("_cur"), F.col("_prev")
+    baseline = F.coalesce(
+        F.when(_safe_ratio(prev, cur) > F.lit(q), F.lit(limit_new_net)).otherwise(prev),
+        F.lit(limit_new_net),
     )
-    net_cmp = compare_windows(
-        cur_net, prev_net, key_cols=[*group_cols, bucket_name], q=q,
-        limit_new=limit_new_net, clamp_guard=False,
+    bucket_alert = F.when(
+        _safe_ratio(cur, baseline) > F.lit(q),
+        alert(baseline, F.col(bucket_name), scopes[1]),
     )
-    entity_alerts = spike_filter(cur_rows, q=q).select(
-        *group_cols, F.col("prev_sum_val2").alias("sum_val"),
-        entity_col, F.lit(scopes[0]).alias("scope"),
+    return (
+        buckets.select(
+            *group_cols,
+            F.explode(F.concat("_alerts", F.array(bucket_alert))).alias("_a"),
+        )
+        .where(F.col("_a").isNotNull())
+        .select(*group_cols, "_a.*")
     )
-    net_alerts = spike_filter(net_cmp, q=q).select(
-        *group_cols, F.col("prev_sum_val2").alias("sum_val"),
-        F.col(bucket_name).alias(entity_col), F.lit(scopes[1]).alias("scope"),
-    )
-    return entity_alerts.unionByName(net_alerts)
 
 
 def detect_spikes(
@@ -307,17 +280,15 @@ def detect_spikes(
     now: int,
     zones: DataFrame | None = None,
     prior_alerts: DataFrame | None = None,
-    persist: bool = True,
 ) -> DataFrame:
     """Full S1-S8 detection cycle over the histogram fact table.
 
-    One `fused_window_compare` over `histograms` yields both window
-    averages and the /32 comparison (S1, S3, S4); with `persist` that
-    frame is cached once (and released by `caching.release_tracked`)
-    before `alerts_from_fused` derives the /32 and /24 alerts from it
-    (S2-S7). Gating and TTL dedup (S8) are broadcast joins on the
-    result. `persist=False` leaves the frame uncached, so each of its
-    three readers recomputes it from `histograms`.
+    One linear plan: one `fused_window_compare` over `histograms`
+    yields both window averages and the /32 comparison (S1, S3, S4);
+    its single reader, `alerts_from_fused`, derives the /32 and /24
+    alerts in one grouped aggregate (S2-S7). Gating and TTL dedup (S8)
+    are broadcast joins on the result. Nothing is persisted: the fact
+    data is scanned once per action.
 
     Returns alerts with columns
         (num_protocol, type_proto, sum_val, dst_ip, scope)
@@ -337,9 +308,7 @@ def detect_spikes(
     """
     p = params
     keys = ["num_protocol", "type_proto", "dst_ip"]
-    # floor(avg(int)) via the exact decimal path is identical for
-    # integral counters and immune to double-precision loss on huge
-    # partial sums
+    # CountPkt is integral: exact BIGINT window sums
     base = fused_window_compare(
         histograms, key_cols=keys, value_col="CountPkt",
         time_col="timestamp", cur_lower=now - p.cur_window_sec,
@@ -347,8 +316,6 @@ def detect_spikes(
         q=p.quotient_amplification, limit_new=p.limit_new_data,
         clamp_guard=True,
     )
-    if persist:
-        base = tracked_persist(base)
     alerts = alerts_from_fused(
         base, group_cols=keys[:2], entity_col="dst_ip",
         bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net",

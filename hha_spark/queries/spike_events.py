@@ -93,13 +93,12 @@ def spike_events_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Alert rows carry the BASELINE in sum_val (reference quirk,
     hha.py:199,210) plus a scope marker instead of the reference's
-    mixed-type positional column (hha.py:213-214). The fused frame is
-    persisted once and feeds the /32-analog filter and both bucket
-    rollups.
+    mixed-type positional column (hha.py:213-214). The fused frame's
+    one reader is `alerts_from_fused`'s grouped aggregate, so nothing
+    is persisted.
     """
-    fused = tracked_persist(_fused(spark, sf_dir))
     return alerts_from_fused(
-        fused, group_cols=["event_type"], entity_col="user_id",
+        _fused(spark, sf_dir), group_cols=["event_type"], entity_col="user_id",
         bucket_expr=F.expr(BUCKET), bucket_name="bucket_id",
         q=Q, limit_new_net=LIMIT_NEW_NET, scopes=("user", "bucket"),
     ).select(F.col("user_id").alias("entity_id"), "event_type", "sum_val", "scope")

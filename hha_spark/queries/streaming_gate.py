@@ -40,6 +40,7 @@ from hha_spark.queries.llm_ops import (
     _cast_longs,
     _docs,
 )
+from hha_spark.sources import fs
 from hha_spark.sources.tables import events_ts_us, load_table
 
 _QUERY_SEQ = itertools.count()
@@ -291,10 +292,13 @@ def _spike_gate_body(spark, tmp, hist, now, zones, params):
         available_now=True,
     )
     q.awaitTermination()
+    # a quiet stream writes no alerts file, so the table may not exist
     rows = (
         spark.read.parquet(f"{tmp}/alerts")
         .select("num_protocol", "type_proto", "dst_ip", "sum_val", "scope")
         .collect()
+        if fs.exists(spark, f"{tmp}/alerts")
+        else []
     )
     return arrow_rows_frame(
         spark,

@@ -37,10 +37,10 @@ ALERTS_SCHEMA = T.StructType(
     [
         T.StructField("num_protocol", T.IntegerType(), False),
         T.StructField("type_proto", T.IntegerType(), False),
-        # LongType: detect_spikes derives sum_val via floor().cast("long")
-        # (exact.trunc_avg_exact) and the /32 path coalesces with long
-        # literals, so the pipeline writes INT64 parquet. Declaring int32
-        # here would make any read that materializes sum_val fail with
+        # LongType: detect_spikes derives sum_val as a BIGINT average
+        # and append_alerts writes its rows under this schema, so the
+        # table holds INT64 parquet. Declaring int32 here would make
+        # any read that materializes sum_val fail with
         # PARQUET_COLUMN_DATA_TYPE_MISMATCH under Spark 4.
         T.StructField("sum_val", T.LongType(), True),
         T.StructField("dst_ip", T.LongType(), False),

@@ -5,8 +5,9 @@ each rule and remembers raised alerts in an in-memory dict that dies
 with the process (hha.py:223-249). Writing alerts to a table instead
 (a) survives restarts, (b) turns the TTL dedup into a broadcast
 anti-join against `recent_alerts`, and (c) gives downstream rule
-generators a queryable log. `collect_rules` keeps a driver-side path
-for parity tests and actual rule emission.
+generators a queryable log. `collect_rules` is the cycle's one
+action; `append_alerts` writes the rules it returned, so the append
+never re-executes the detection plan.
 """
 
 from __future__ import annotations
@@ -16,22 +17,32 @@ import ipaddress
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from hha_spark.functions.local import arrow_rows_frame
 from hha_spark.schemas import ALERTS_SCHEMA
 
 
-def append_alerts(alerts: DataFrame, table_path: str, *, detected_at: int) -> None:
-    """Stamp and append a cycle's alerts."""
-    (
-        alerts.withColumn("detected_at", F.lit(detected_at).cast("long"))
-        # Cast every column to its declared type so the parquet footer
-        # always matches ALERTS_SCHEMA regardless of whether the caller
-        # built sum_val as int (tests) or long (detect_spikes).
-        .select(
-            [F.col(f.name).cast(f.dataType) for f in ALERTS_SCHEMA.fields]
+def append_alerts(
+    spark: SparkSession, rules: list[dict], table_path: str, *, detected_at: int
+) -> None:
+    """Stamp and append a cycle's collected rules (`collect_rules`
+    output) as one file. A quiet cycle writes nothing: an empty frame
+    would still leave a schema-only file that every later
+    `recent_alerts` lists."""
+    if not rules:
+        return
+    rows = [
+        (
+            r["num_protocol"], r["type_proto"], r["sum_val"],
+            int(ipaddress.IPv4Address(r["dst_ip"])), r["scope"], detected_at,
         )
-        .write.mode("append")
-        .parquet(table_path)
-    )
+        for r in rules
+    ]
+    # the rows are driver-local and few (one detector cycle's alerts):
+    # an Arrow-backed local frame is a pure-JVM scan; coalesce(1) makes
+    # the append one task and one file
+    arrow_rows_frame(spark, rows, ALERTS_SCHEMA).coalesce(1).write.mode(
+        "append"
+    ).parquet(table_path)
 
 
 def recent_alerts(

@@ -64,8 +64,9 @@ def test_release_is_idempotent(spark):
 @pytest.mark.parametrize(
     "qname",
     [
-        "spike_events_alerts",     # operators/spike.py fused persist
-        "spike_events_gated",      # + alerts persist on top
+        # spike_events_alerts dropped its persist (the fused frame has
+        # one reader) — no longer a persist-using query
+        "spike_events_gated",      # queries/spike_events.py alerts persist
         "dedup_ngram_jaccard",     # dedup.py prefix postings + docs
         "dedup_minhash_recall",    # shared docs frame, two arms
         "corpus_source_overlap",   # operators/corpus.py gram frame

@@ -14,11 +14,9 @@ from hha_spark.config import DetectorParams
 from hha_spark.functions.ip import ip_to_net24
 from hha_spark.operators.dedup import jaccard_pairs, with_token_set
 from hha_spark.operators.spike import (
-    compare_windows,
     detect_spikes,
     fused_window_compare,
     rollup_averages,
-    spike_filter,
     window_averages,
 )
 from hha_spark.operators.temporal import asof_join
@@ -31,6 +29,52 @@ SET = settings(
 )
 
 NOW = 1_000_000
+
+
+# --- the two-frame reference: one frame per window, joined ----------------
+
+
+def _safe_ratio(num, den):
+    return num / F.nullif(den, F.lit(0))
+
+
+def compare_windows(cur, prev, *, key_cols, q, limit_new, clamp_guard,
+                    value_col="sum_val"):
+    """S3/S4/S5 — left-join current against previous, clamp drops,
+    default new keys.
+
+    Output columns: key_cols + [value_col, prev_sum_val, prev_sum_val2].
+
+    * left join on the full key (hha.py:170,184).
+    * drop-clamp: if prev/cur > q the baseline is clamped down to
+      `limit_new` so recovery-to-normal still triggers. The /32 branch
+      additionally requires prev > limit_new (hha.py:191-192); the /24
+      branch does NOT (hha.py:177-178) — `clamp_guard` selects which.
+    * new keys (join miss) get prev = prev2 = limit_new
+      (na.fill, hha.py:179,194).
+    """
+    prev_renamed = prev.withColumnRenamed(value_col, "prev_sum_val")
+    joined = cur.join(prev_renamed, on=list(key_cols), how="left")
+    clamp_cond = _safe_ratio(F.col("prev_sum_val"), F.col(value_col)) > F.lit(q)
+    if clamp_guard:
+        clamp_cond = clamp_cond & (F.col("prev_sum_val") > F.lit(limit_new))
+    return joined.select(
+        *key_cols,
+        F.col(value_col),
+        F.coalesce(F.col("prev_sum_val"), F.lit(limit_new)).alias("prev_sum_val"),
+        F.coalesce(
+            F.when(clamp_cond, F.lit(limit_new)).otherwise(F.col("prev_sum_val")),
+            F.lit(limit_new),
+        ).alias("prev_sum_val2"),
+    )
+
+
+def spike_filter(compared, *, q, value_col="sum_val"):
+    """S6 — keep rows whose cur/baseline ratio exceeds q (hha.py:198,209);
+    a zero baseline yields a NULL ratio and the row drops."""
+    return compared.where(
+        _safe_ratio(F.col(value_col), F.col("prev_sum_val2")) > F.lit(q)
+    )
 
 
 # --- fused single-pass spike compare == two-frame formulation --------------
@@ -143,7 +187,7 @@ def test_detect_spikes_equals_two_frame_reference(spark, rows):
     hist = spark.createDataFrame(data, HISTOGRAM_SCHEMA)
     got = {
         (r.num_protocol, r.type_proto, r.sum_val, r.dst_ip, r.scope)
-        for r in detect_spikes(hist, params=P, now=HIST_NOW, persist=False).collect()
+        for r in detect_spikes(hist, params=P, now=HIST_NOW).collect()
     }
     assert got == two_frame_alerts(hist)
 

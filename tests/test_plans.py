@@ -421,34 +421,67 @@ def test_ccnet_buckets_windows_are_lang_partitioned(spark):
 
 
 def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
-    from hha_spark.caching import release_tracked
+    """The detector cycle is one linear plan: one scan of the fact
+    data, nothing persisted, no union, no sort-merge join, and no join
+    at all besides the two broadcast S8 gates. A run_cycle leaves the
+    block manager's pinned RDDs as it found them."""
+    from hha_spark.caching import pinned_rdd_count, release_tracked
     from hha_spark.config import DetectorParams
+    from hha_spark.detector import run_cycle
     from hha_spark.operators.spike import detect_spikes
     from hha_spark.schemas import HISTOGRAM_SCHEMA
+    from hha_spark.sinks.alerts import append_alerts, recent_alerts
+    from hha_spark.sources.histograms import read_window, write_partitioned
+    from hha_spark.sources.watchlist import zones_from_ints
 
     now = 1_700_000_000
-    path = str(tmp_path / "histograms")
-    spark.createDataFrame(
-        [
-            (now - 10, 1, 1, 11, 9000, 174327308),
-            (now - 400, 1, 1, 11, 100, 174327308),
-            (now - 10, 1, 2, 41, 50, 174327555),
-        ],
-        HISTOGRAM_SCHEMA,
-    ).write.parquet(path)
-    hist = spark.read.schema(HISTOGRAM_SCHEMA).parquet(path)
-    alerts = detect_spikes(hist, params=DetectorParams(), now=now)
-    try:
-        leaves = alerts._jdf.queryExecution().optimizedPlan().collectLeaves()
-        leaves = [leaves.apply(i) for i in range(leaves.size())]
-        cached = {leaf.cacheBuilder().cachedPlan().toString() for leaf in leaves}
-        plan = plan_of(alerts)
-    finally:
-        release_tracked()
-    # every reader of the fact data (the /32 filter, the cur and prev
-    # /24 rollups) reads the one persisted fused frame, which holds
-    # the single fact scan
-    assert {leaf.nodeName() for leaf in leaves} == {"InMemoryRelation"}
-    assert len(cached) == 1
-    assert next(iter(cached)).count("FileScan parquet") == 1
+    ip = 174327308
+    hist_path = str(tmp_path / "histograms")
+    alerts_path = str(tmp_path / "alerts")
+    write_partitioned(
+        spark.createDataFrame(
+            [
+                (now - 10, 1, 1, 11, 9000, ip),
+                (now - 400, 1, 1, 11, 100, ip),
+                (now - 10, 1, 2, 41, 50, 174327555),
+            ],
+            HISTOGRAM_SCHEMA,
+        ),
+        hist_path,
+    )
+    rule = {"num_protocol": 2, "type_proto": 41, "sum_val": 1,
+            "dst_ip": "10.100.7.3", "scope": "ip"}
+    append_alerts(spark, [rule], alerts_path, detected_at=now - 10)
+    alerts = detect_spikes(
+        read_window(spark, hist_path, upper=now + 1),
+        params=DetectorParams(), now=now,
+        zones=zones_from_ints(spark, [ip]),
+        prior_alerts=recent_alerts(spark, alerts_path, now=now, ttl_sec=300),
+    )
+    optimized = alerts._jdf.queryExecution().optimizedPlan().toString()
+    plan = plan_of(alerts)
+
+    # the fact scan (the one reading CountPkt) plus the alerts table
+    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    assert len(scans) == 2
+    assert sum("CountPkt" in ln for ln in scans) == 1
+    assert "InMemoryRelation" not in optimized
+    assert "Union" not in optimized
     assert "SortMergeJoin" not in plan
+    joins = [ln.strip() for ln in optimized.splitlines() if "Join " in ln]
+    assert len(joins) == 2, joins
+    assert sum("LeftSemi" in j for j in joins) == 1
+    assert sum("LeftAnti" in j for j in joins) == 1
+    assert all("broadcast" in j for j in joins)
+    assert plan.count("BroadcastHashJoin") == 2
+
+    # run_cycle releases tracked persists at its end: release the ones
+    # earlier tests left first, so the counts compare this cycle alone
+    release_tracked()
+    pinned = pinned_rdd_count(spark)
+    rules = run_cycle(
+        spark, data_root=hist_path, alerts_path=alerts_path,
+        params=DetectorParams(), zones=zones_from_ints(spark, [ip]), now=now,
+    )
+    assert len(rules) == 1
+    assert pinned_rdd_count(spark) == pinned

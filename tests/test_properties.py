@@ -56,7 +56,7 @@ def run(spark, specs, params=P):
     if not rows:
         return []
     df = spark.createDataFrame(rows, HISTOGRAM_SCHEMA)
-    return detect_spikes(df, params=params, now=NOW, persist=False).collect()
+    return detect_spikes(df, params=params, now=NOW).collect()
 
 
 SET = settings(

@@ -108,14 +108,28 @@ def test_consul_kv_watchlist_reader(spark):
     assert seen_urls == ["http://consul.local:8500/v1/kv/zones?recurse=true"]
 
 
+# one rule as `collect_rules` emits it (dst_ip dotted)
+RULE = {"num_protocol": 65, "type_proto": 11, "sum_val": 100,
+        "dst_ip": "10.100.6.12", "scope": "ip"}
+
+
+def alert_files(path):
+    import os
+
+    if not os.path.isdir(path):
+        return []
+    return sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+
+
 def test_alerts_sink_ttl_window(spark, tmp_path):
     path = str(tmp_path / "alerts")
-    alerts = spark.createDataFrame(
-        [(65, 11, 100, IP, "ip")],
-        "num_protocol int, type_proto int, sum_val int, dst_ip long, scope string",
-    )
-    append_alerts(alerts, path, detected_at=NOW - 100)
-    append_alerts(alerts, path, detected_at=NOW - 999)
+    append_alerts(spark, [RULE], path, detected_at=NOW - 100)
+    append_alerts(spark, [RULE], path, detected_at=NOW - 999)
+    assert len(alert_files(path)) == 2  # one file per append
+    back = spark.read.parquet(path).where(F.col("detected_at") == NOW - 100).collect()
+    assert [(r.num_protocol, r.type_proto, r.sum_val, r.dst_ip, r.scope) for r in back] == [
+        (65, 11, 100, IP, "ip")
+    ]
     recent = recent_alerts(spark, path, now=NOW, ttl_sec=300)
     assert recent.count() == 1
     assert recent_alerts(spark, str(tmp_path / "missing"), now=NOW, ttl_sec=300) is None
@@ -125,12 +139,8 @@ def test_compact_alerts_bounds_table(spark, tmp_path):
     from hha_spark.sinks.alerts import compact_alerts
 
     path = str(tmp_path / "alerts")
-    alerts = spark.createDataFrame(
-        [(65, 11, 100, IP, "ip")],
-        "num_protocol int, type_proto int, sum_val int, dst_ip long, scope string",
-    )
     for age in (10, 100, 5000, 9000):
-        append_alerts(alerts, path, detected_at=NOW - age)
+        append_alerts(spark, [RULE], path, detected_at=NOW - age)
     kept = compact_alerts(spark, path, now=NOW, keep_sec=300)
     assert kept == 2
     assert spark.read.parquet(path).count() == 2
@@ -203,6 +213,49 @@ def test_full_cycle_with_cross_cycle_dedup(spark, tmp_path):
     )
     assert len(rules3) == 1
     assert rules3[0]["sum_val"] == 8000  # baseline in the sum_val slot
+
+
+def test_quiet_cycle_writes_nothing(spark, tmp_path):
+    """A cycle without rules appends no file (no schema-only file for
+    every later recent_alerts to list); an alerting cycle appends
+    exactly one; TTL dedup holds across the quiet cycle."""
+    data_root = str(tmp_path / "hist")
+    alerts_path = str(tmp_path / "alerts")
+    zones = zones_from_ints(spark, [IP])
+    p = DetectorParams()
+    # flat key: no spike at NOW - 3600 (quiet, and the table is missing)
+    write_partitioned(
+        hist_rows(spark, [(NOW - 3610, 65, 11, 100, IP)] * 2), data_root
+    )
+    assert append_alerts(spark, [], alerts_path, detected_at=NOW) is None
+    assert run_cycle(
+        spark, data_root=data_root, alerts_path=alerts_path,
+        params=p, zones=zones, now=NOW - 3600,
+    ) == []
+    assert alert_files(alerts_path) == []
+
+    # a new key spikes: one rule, one file
+    write_partitioned(hist_rows(spark, [(NOW - 10, 65, 11, 8000, IP)] * 2), data_root)
+    rules = run_cycle(
+        spark, data_root=data_root, alerts_path=alerts_path,
+        params=p, zones=zones, now=NOW,
+    )
+    assert len(rules) == 1
+    assert len(alert_files(alerts_path)) == 1
+
+    # 10 s later the spike is still there but TTL-suppressed: a quiet
+    # cycle, and the table keeps its one file
+    assert run_cycle(
+        spark, data_root=data_root, alerts_path=alerts_path,
+        params=p, zones=zones, now=NOW + 10,
+    ) == []
+    assert len(alert_files(alerts_path)) == 1
+    # and still suppressed after the quiet cycle
+    assert run_cycle(
+        spark, data_root=data_root, alerts_path=alerts_path,
+        params=p, zones=zones, now=NOW + 20,
+    ) == []
+    assert len(alert_files(alerts_path)) == 1
 
 
 def test_cycle_observation_metrics(spark, tmp_path):

@@ -58,7 +58,7 @@ def test_no_spike_scenario(spark):
         ((65535, 42, IP_B), 1745, 1737),
     ]:
         rows += key_rows(key, CUR_TS, cur) + key_rows(key, PREV_TS, prev)
-    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW, persist=False)
+    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW)
     assert out.count() == 0
 
 
@@ -72,7 +72,7 @@ def test_new_key_default(spark):
         + key_rows((2888, 32, IP_B), CUR_TS, 176)
         + key_rows((2888, 32, IP_B), PREV_TS, 182)
     )
-    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW, persist=False)
+    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW)
     got = alerts_set(out)
     # /32 alert carries the BASELINE as sum_val (hha.py:210)
     assert (65535, 41, P.limit_new_data, IP_A, "ip") in got
@@ -92,7 +92,7 @@ def test_spike_scenario(spark):
         ((65535, 42, IP_C), 1739, 1755),
     ]:
         rows += key_rows(key, CUR_TS, cur) + key_rows(key, PREV_TS, prev)
-    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW, persist=False)
+    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW)
     ip_alerts = {a for a in alerts_set(out) if a[4] == "ip"}
     assert ip_alerts == {(65, 11, 174, IP_C, "ip"), (68, 11, 174, IP_C, "ip")}
 
@@ -135,14 +135,12 @@ def test_drop_clamp_with_guard_ip(spark):
         key_rows((65, 11, IP_A), CUR_TS, 100) + key_rows((65, 11, IP_A), PREV_TS, 3000)
         + key_rows((68, 11, IP_B), CUR_TS, 100) + key_rows((68, 11, IP_B), PREV_TS, 1000)
     )
-    from hha_spark.operators.spike import compare_windows
+    from hha_spark.operators.spike import fused_window_compare
 
-    keys = ["num_protocol", "type_proto", "dst_ip"]
-    df = hist_df(spark, rows)
-    cur = window_averages(df, key_cols=keys, value_col="CountPkt", lower=NOW - 90)
-    prev = window_averages(df, key_cols=keys, value_col="CountPkt", upper=NOW - 300)
-    cmp_ = compare_windows(
-        cur, prev, key_cols=keys, q=P.quotient_amplification,
+    cmp_ = fused_window_compare(
+        hist_df(spark, rows), key_cols=["num_protocol", "type_proto", "dst_ip"],
+        value_col="CountPkt", time_col="timestamp", cur_lower=NOW - 90,
+        prev_upper=NOW - 300, q=P.quotient_amplification,
         limit_new=P.limit_new_data, clamp_guard=True,
     )
     rows_ = {r.dst_ip: r for r in cmp_.collect()}
@@ -151,26 +149,27 @@ def test_drop_clamp_with_guard_ip(spark):
 
 
 def test_net_clamp_lacks_guard(spark):
-    """S5: the /24 clamp has NO prev>limit guard (hha.py:177 vs 191)."""
-    from hha_spark.operators.spike import compare_windows, rollup_averages
-    from hha_spark.functions.ip import ip_to_net24
+    """S5: the /24 clamp has NO prev>limit guard (hha.py:177 vs 191).
 
-    keys = ["num_protocol", "type_proto", "dst_ip"]
-    rows = key_rows((65, 11, IP_A), CUR_TS, 100) + key_rows(
-        (65, 11, IP_A), PREV_TS, 1000
+    With Q >= 1 the difference never reaches an alert (a clamp needs
+    prev > Q*cur and the clamped alert cur > Q*limit), so Q = 0.5
+    makes it visible in the baseline each alert carries: one key,
+    cur=2000, prev=1500 (below both limits), prev/cur = 0.75 > Q.
+    The /32 guard blocks the clamp (baseline 1500); the /24 clamp
+    fires anyway (baseline LimitNewDataNet)."""
+    from dataclasses import replace
+
+    rows = key_rows((65, 11, IP_A), CUR_TS, 2000) + key_rows(
+        (65, 11, IP_A), PREV_TS, 1500
     )
-    df = hist_df(spark, rows)
-    cur = window_averages(df, key_cols=keys, value_col="CountPkt", lower=NOW - 90)
-    prev = window_averages(df, key_cols=keys, value_col="CountPkt", upper=NOW - 300)
-    cur_n = rollup_averages(cur, group_cols=keys[:2], bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net")
-    prev_n = rollup_averages(prev, group_cols=keys[:2], bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net")
-    cmp_ = compare_windows(
-        cur_n, prev_n, key_cols=["num_protocol", "type_proto", "dst_net"],
-        q=P.quotient_amplification, limit_new=P.limit_new_data_net, clamp_guard=False,
+    out = detect_spikes(
+        hist_df(spark, rows), params=replace(P, quotient_amplification=0.5),
+        now=NOW,
     )
-    r = cmp_.collect()[0]
-    # prev=1000 is far below LimitNewDataNet yet the clamp still fires
-    assert r.prev_sum_val2 == P.limit_new_data_net
+    assert alerts_set(out) == {
+        (65, 11, 1500, IP_A, "ip"),
+        (65, 11, P.limit_new_data_net, NET_A, "net"),
+    }
 
 
 def test_net_only_spike_from_new_host(spark):
@@ -182,7 +181,7 @@ def test_net_only_spike_from_new_host(spark):
         # same /24, new host, below the 7500 /32 new-key bar
         + key_rows((65, 11, IP_A + 1), CUR_TS, 5000)
     )
-    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW, persist=False)
+    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW)
     got = alerts_set(out)
     # net avg cur = (250+5000)/2 = 2625, prev = 100 -> 26x
     assert (65, 11, 100, NET_A, "net") in got
@@ -196,7 +195,7 @@ def test_zero_prev_baseline_drops_row(spark):
         key_rows((65, 11, IP_A), CUR_TS, 900)
         + key_rows((65, 11, IP_A), PREV_TS, 0)
     )
-    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW, persist=False)
+    out = detect_spikes(hist_df(spark, rows), params=P, now=NOW)
     assert not any(a[4] == "ip" for a in alerts_set(out))
 
 
@@ -211,7 +210,7 @@ def test_watchlist_gating_exact_match(spark):
     )
     zones = spark.createDataFrame([(IP_A,), (net24_base(IP_A),)], ZONES_SCHEMA)
     out = detect_spikes(
-        hist_df(spark, rows), params=P, now=NOW, zones=zones, persist=False
+        hist_df(spark, rows), params=P, now=NOW, zones=zones
     )
     got = alerts_set(out)
     assert any(a[3] == IP_A and a[4] == "ip" for a in got)
@@ -234,7 +233,7 @@ def test_ttl_dedup_suppresses_recent(spark):
         "num_protocol int, type_proto int, dst_ip long, detected_at long",
     )
     out = detect_spikes(
-        hist_df(spark, rows), params=P, now=NOW, prior_alerts=prior, persist=False
+        hist_df(spark, rows), params=P, now=NOW, prior_alerts=prior
     )
     got = alerts_set(out)
     assert not any(a[3] == IP_A and a[4] == "ip" for a in got)
@@ -255,3 +254,53 @@ def test_subagent_id_ignored(spark):
     )
     res = out.collect()
     assert len(res) == 1 and res[0].sum_val == 150
+
+
+def test_huge_counters_average_exactly_and_alert(spark):
+    """CountPkt samples of 10^12 and more in both windows: the window
+    averages are exact floors and the key alerts. A DECIMAL(18,6)
+    cast of such a sample is NULL in a non-ANSI session, which used to
+    null the key's sum_val and silently drop its alert."""
+    from hha_spark.operators.spike import fused_window_compare
+
+    big = 10**12
+    cur_vals = [3 * big + 1, 3 * big + 2, 3 * big + 2]
+    prev_vals = [big, big + 1]
+    rows = [(CUR_TS, 65, 11, v, IP_A) for v in cur_vals] + [
+        (PREV_TS, 65, 11, v, IP_A) for v in prev_vals
+    ]
+    df = hist_df(spark, rows)
+    cur_avg = sum(cur_vals) // len(cur_vals)
+    prev_avg = sum(prev_vals) // len(prev_vals)
+
+    (r,) = fused_window_compare(
+        df, key_cols=["dst_ip"], value_col="CountPkt", time_col="timestamp",
+        cur_lower=NOW - P.cur_window_sec, prev_upper=NOW - P.prev_window_sec,
+        q=P.quotient_amplification, limit_new=P.limit_new_data,
+        clamp_guard=True,
+    ).collect()
+    assert (r.sum_val, r.prev_sum_val, r.prev_sum_val2) == (cur_avg, prev_avg, prev_avg)
+
+    # cur/prev = 3.000000000001 > Q: the /32 and its /24 (the only
+    # host) both alert, carrying the exact baseline
+    assert alerts_set(detect_spikes(df, params=P, now=NOW)) == {
+        (65, 11, prev_avg, IP_A, "ip"),
+        (65, 11, prev_avg, NET_A, "net"),
+    }
+
+
+def test_negative_sums_floor_toward_minus_infinity(spark):
+    """The BIGINT floor matches floor(avg) for negative window sums,
+    where plain DIV would truncate toward zero."""
+    from hha_spark.operators.spike import fused_window_compare
+
+    rows = [(CUR_TS, 65, 11, v, IP_A) for v in (-7, 0, 0)] + [
+        (PREV_TS, 65, 11, v, IP_A) for v in (-1, -2)
+    ]
+    (r,) = fused_window_compare(
+        hist_df(spark, rows), key_cols=["dst_ip"], value_col="CountPkt",
+        time_col="timestamp", cur_lower=NOW - 90, prev_upper=NOW - 300,
+        q=P.quotient_amplification, limit_new=P.limit_new_data,
+        clamp_guard=True,
+    ).collect()
+    assert (r.sum_val, r.prev_sum_val) == (-7 // 3, -3 // 2)  # (-3, -2)

@@ -84,7 +84,7 @@ def test_stream_matches_batch(env):
         (r.num_protocol, r.type_proto, str(__import__("ipaddress").IPv4Address(r.dst_ip)),
          r.sum_val, r.scope)
         for r in detect_spikes(
-            hist_df(spark, rows), params=P, now=NOW, persist=False
+            hist_df(spark, rows), params=P, now=NOW
         ).collect()
     }
     assert got == batch_alerts

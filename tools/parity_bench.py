@@ -75,8 +75,8 @@ def main() -> None:
         t_read = time.perf_counter() - t0
 
         t1 = time.perf_counter()
-        alerts = detect_spikes(hist, params=params, now=NOW, persist=True)
-        rows = alerts.count()  # materializes cur/prev persists + comparison
+        alerts = detect_spikes(hist, params=params, now=NOW)
+        rows = alerts.count()  # runs the one-pass S1-S7 plan
         t_total_work = time.perf_counter() - t1
 
         results.append(
