@@ -1,15 +1,14 @@
-"""Multimodal column plumbing: opaque binary payloads + typed metadata.
+"""Multimodal column plumbing: opaque binary payloads through mapInPandas.
 
-Image/audio/video payloads are carried as BinaryType columns with a
-metadata struct; per-batch processing (decode, resize, frame-sample,
-feature-extract) runs through Arrow-batched `mapInPandas`, which is
-the right shape at 100 TB: each task streams pandas batches, no
-row-at-a-time pickling, and the schema contract is explicit.
+Image/audio/video payloads are carried as BinaryType columns; per-batch
+processing runs through Arrow-batched `mapInPandas`, which is the right
+shape at 100 TB: each task streams pandas batches, no row-at-a-time
+pickling, and the output schema is explicit.
 
-The `fake_*` operators are deterministic stand-ins for media
-decoders, so the Spark-side plumbing (schema, batching, partitioning)
-is testable without an imaging library. `blob_stats` is real (byte
-length + md5) and oracle-checked.
+`blob_stats` (byte length + md5, one row per payload) and
+`fake_frame_sample` (a deterministic stand-in for a video frame
+sampler, one row per sampled chunk) back the multimodal_blob_stats and
+multimodal_frame_sample registry queries, both oracle-checked.
 """
 
 from __future__ import annotations
@@ -20,9 +19,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 BLOB_STATS_SCHEMA = "doc_id bigint, n_bytes bigint, blob_md5 string"
-FAKE_META_SCHEMA = (
-    "doc_id bigint, width int, height int, n_frames int, format string"
-)
 
 
 def with_blob(df: DataFrame, text_col: str = "text") -> DataFrame:
@@ -57,39 +53,7 @@ def blob_stats(df_with_blob: DataFrame, id_col: str = "doc_id") -> DataFrame:
     return src.mapInPandas(fn, BLOB_STATS_SCHEMA)
 
 
-RESIZED_SCHEMA = "doc_id bigint, width int, height int, thumb binary"
 FRAMES_SCHEMA = "doc_id bigint, frame_idx int, frame_md5 string"
-
-
-def fake_resize(
-    df_with_blob: DataFrame, *, max_px: int = 256, id_col: str = "doc_id"
-) -> DataFrame:
-    """Deterministic fake 'resize': emits a truncated payload as the
-    thumbnail plus clamped dimensions — the exact schema/batch
-    contract a real resizer would use."""
-    import hashlib
-
-    import pandas as pd
-
-    src = df_with_blob.select(F.col(id_col).alias("doc_id"), "blob")
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            digests = pdf["blob"].map(lambda b: hashlib.md5(bytes(b)).digest())
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": digests.map(
-                        lambda d: min(max_px, 64 + d[0] % 192)
-                    ).astype("int32"),
-                    "height": digests.map(
-                        lambda d: min(max_px, 64 + d[1] % 192)
-                    ).astype("int32"),
-                    "thumb": pdf["blob"].map(lambda b: bytes(b)[:32]),
-                }
-            )
-
-    return src.mapInPandas(fn, RESIZED_SCHEMA)
 
 
 def fake_frame_sample(
@@ -126,34 +90,3 @@ def fake_frame_sample(
 
     return src.mapInPandas(fn, FRAMES_SCHEMA)
 
-
-def fake_decode_meta(df_with_blob: DataFrame, id_col: str = "doc_id") -> DataFrame:
-    """Deterministic fake 'decode': metadata derived from payload bytes.
-
-    Exercises the exact mapInPandas contract a real decoder would use
-    (same schema, same batch shape) with reproducible outputs.
-    """
-    import hashlib
-
-    import pandas as pd
-
-    src = df_with_blob.select(F.col(id_col).alias("doc_id"), "blob")
-
-    def fn(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        for pdf in batches:
-            digests = pdf["blob"].map(
-                lambda b: hashlib.md5(bytes(b)).digest()
-            )
-            yield pd.DataFrame(
-                {
-                    "doc_id": pdf["doc_id"],
-                    "width": digests.map(lambda d: 64 + d[0] % 192).astype("int32"),
-                    "height": digests.map(lambda d: 64 + d[1] % 192).astype("int32"),
-                    "n_frames": digests.map(lambda d: 1 + d[2] % 8).astype("int32"),
-                    "format": digests.map(
-                        lambda d: ["png", "jpeg", "webp"][d[3] % 3]
-                    ),
-                }
-            )
-
-    return src.mapInPandas(fn, FAKE_META_SCHEMA)

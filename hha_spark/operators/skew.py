@@ -1,23 +1,12 @@
-"""Skew-aware aggregation: two-phase salted combine.
+"""Skew-proof equi-join: salt the big side, replicate the small.
 
-DDoS histogram data is inherently skewed — the attacked dst_ip holds
-a large share of all rows (FIXTURES.md §A1 scenario 7), so a naive
-groupBy sends that key's entire volume to one reduce task. AQE's
-skew-join splitting (enabled in session.py) covers joins; for
-aggregations the classic fix is salting:
-
-    phase 1: group by (key, salt = pmod(hash(...), N)) — the hot
-             key's rows spread over N partial groups, each computing
-             exact decimal partial sums and counts
-    phase 2: group by key — combine N partials (tiny) into the final
-             truncated average
-
-SUM/COUNT are associative, so the result is bit-identical to the
-direct aggregation (same exact-decimal arithmetic as
-functions/exact.py) — verified by test_skew.py. Catalyst already does
-map-side partial aggregation within a task; salting additionally
-bounds the per-REDUCER load, which matters when one key exceeds a
-single executor's share.
+DDoS histogram data is inherently skewed: the attacked dst_ip holds a
+large share of all rows (FIXTURES.md §A1 scenario 7), so a plain
+shuffled join sends that key's entire volume to one task. AQE's
+skew-join splitting (enabled in session.py) covers joins when it can
+observe the skew; `salted_join` is the explicit form, backing the
+events_salted_join registry query and pinned row-identical to the
+plain join by test_skew.py.
 """
 
 from __future__ import annotations
@@ -26,32 +15,6 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-
-def salted_trunc_avg(
-    df: DataFrame,
-    *,
-    key_cols: Sequence[str],
-    value_col: str,
-    salt_buckets: int = 16,
-    out_col: str = "sum_val",
-) -> DataFrame:
-    """floor(avg(value)) per key via salted two-phase combine.
-
-    Identical results to `trunc_avg_exact` grouped directly (exact
-    decimal partials are associative); use when a small set of hot
-    keys would overload single reducers.
-    """
-    salted = df.withColumn(
-        "_salt", F.pmod(F.hash(F.monotonically_increasing_id()), salt_buckets)
-    )
-    partial = salted.groupBy(*key_cols, "_salt").agg(
-        F.expr(f"SUM(CAST({value_col} AS DECIMAL(18,6)))").alias("_psum"),
-        F.count(F.lit(1)).alias("_pn"),
-    )
-    return partial.groupBy(*key_cols).agg(
-        F.expr("CAST(FLOOR(SUM(_psum) / SUM(_pn)) AS BIGINT)").alias(out_col)
-    )
 
 
 def salted_join(

@@ -25,8 +25,8 @@ Plan shapes preserved from the real TPC-H:
 
 The derived-partsupp aggregation shuffles lineitem once per query on
 (partkey, suppkey); at 100 TB a real deployment would materialize it
-bucketed (sources/bucketed.py) and every query below would read it
-shuffle-free.
+as a bucketed table (`bucketBy` + `saveAsTable`) and every query below
+would read it shuffle-free.
 """
 
 from __future__ import annotations

@@ -1,33 +1,25 @@
-"""Multi-dimensional file clustering (z-order) for data skipping.
+"""Z-order (Morton) clustering key for multi-column data skipping.
 
-At 100 TB the fastest scan is the one that never happens: parquet
-readers skip whole files/row groups whose footer min-max range
-excludes the predicate. A single-column sort gives perfect skipping
-on that column and none on any other; interleaving the bits of two
-(or more) normalized keys — a Z-order / Morton curve — gives useful
-min-max locality on EVERY interleaved column at once, which is why
-lakehouse engines expose `OPTIMIZE ... ZORDER BY`. Spark has no
-built-in; this module implements it as pure JVM bit arithmetic
-(shift/mask spreading, no UDFs) plus the standard
-repartitionByRange + sortWithinPartitions write shape, so the
-cluster-by is one range shuffle regardless of data size.
-
-tests/test_layout.py proves the skipping arithmetic from the real
-parquet footers: against a time-range predicate, the z-ordered
-layout prunes most files while the user-sorted layout must read all
-of them.
+Parquet readers skip whole files/row groups whose footer min-max range
+excludes the predicate. A single-column sort gives perfect skipping on
+that column and none on any other; interleaving the bits of two
+normalized keys (a Z-order / Morton curve) gives useful min-max
+locality on both columns at once, which is why lakehouse engines
+expose `OPTIMIZE ... ZORDER BY`. Spark has no built-in; this module
+builds the key as pure JVM bit arithmetic (shift/mask spreading, no
+UDFs), to cluster a write with repartitionByRange +
+sortWithinPartitions on it. The events_zorder_keys registry query
+checks the key against a DuckDB twin.
 
 Reference parity: the reference scans whole hour-files per cycle
-(hha.py:241-265, HadoopFileWorker) — file layout IS its pruning
-story (one file per hour). Z-ordering generalizes that to multiple
-predicate dimensions for the 100 TB lake the hour-files grow into.
+(hha.py:241-265, HadoopFileWorker), so file layout is its pruning
+story (one file per hour). Z-ordering generalizes that to more than
+one predicate dimension.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
-
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column
 from pyspark.sql import functions as F
 
 ZBITS = 16  # per-dimension resolution: 2^16 cells per axis
@@ -62,97 +54,3 @@ def zorder_key(a: Column, b: Column) -> Column:
     32-bit Morton key (a gets the even bits, b the odd)."""
     return _spread_bits(a).bitwiseOR(F.shiftleft(_spread_bits(b), 1))
 
-
-def write_zordered(
-    df: DataFrame,
-    path: str,
-    *,
-    zcols: Sequence[str],
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Write df as parquet clustered on the z-order of two columns.
-
-    Shape: one 4-row bounds aggregate (broadcast into the key
-    expression via a literal-free crossJoin of a 1-row frame), then
-    repartitionByRange(n_files, zkey) + sortWithinPartitions(zkey) —
-    a single range shuffle; each output file covers a tight Morton
-    range, so its footer min-max is tight on BOTH zcols.
-    """
-    if len(zcols) != 2:
-        raise ValueError("zorder supports exactly two cluster columns")
-    ca, cb = zcols
-    bounds = df.agg(
-        F.min(ca).alias("__alo"),
-        F.max(ca).alias("__ahi"),
-        F.min(cb).alias("__blo"),
-        F.max(cb).alias("__bhi"),
-    )
-    keyed = df.crossJoin(F.broadcast(bounds)).withColumn(
-        "__zkey",
-        zorder_key(
-            _normalize(F.col(ca), F.col("__alo"), F.col("__ahi")),
-            _normalize(F.col(cb), F.col("__blo"), F.col("__bhi")),
-        ),
-    ).drop("__alo", "__ahi", "__blo", "__bhi")
-    (
-        keyed.repartitionByRange(n_files, "__zkey")
-        .sortWithinPartitions("__zkey")
-        .drop("__zkey")
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def write_sorted(
-    df: DataFrame,
-    path: str,
-    *,
-    sort_col: str,
-    n_files: int = 16,
-    mode: str = "overwrite",
-) -> None:
-    """Single-column linear clustering — the baseline layout the
-    z-order test compares against (perfect skipping on sort_col,
-    none on anything else)."""
-    (
-        df.repartitionByRange(n_files, sort_col)
-        .sortWithinPartitions(sort_col)
-        .write.mode(mode)
-        .parquet(path)
-    )
-
-
-def candidate_files(
-    path: str, col: str, lo, hi
-) -> tuple[int, int]:
-    """Skipping arithmetic from the real parquet footers: how many of
-    the layout's files could contain rows with col in [lo, hi]?
-    Returns (n_candidate, n_total). This is exactly the min-max test
-    a reader's row-group pruning performs."""
-    import glob
-    import os
-
-    import pyarrow.parquet as pq
-
-    total = 0
-    cand = 0
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        md = pq.ParquetFile(f).metadata
-        fmin = None
-        fmax = None
-        for rg in range(md.num_row_groups):
-            for ci in range(md.num_columns):
-                c = md.row_group(rg).column(ci)
-                if c.path_in_schema == col and c.statistics is not None:
-                    s = c.statistics
-                    fmin = s.min if fmin is None else min(fmin, s.min)
-                    fmax = s.max if fmax is None else max(fmax, s.max)
-        if fmin is None:
-            cand += 1  # no stats -> reader must scan it
-            total += 1
-            continue
-        total += 1
-        if not (fmax < lo or fmin > hi):
-            cand += 1
-    return cand, total

@@ -76,53 +76,3 @@ def write_table(
         writer = writer.partitionBy(*partition_by)
     writer.save(path)
 
-
-def upsert_parquet(
-    spark: SparkSession,
-    updates: DataFrame,
-    path: str,
-    *,
-    key_cols: list[str],
-    schema: T.StructType,
-) -> int:
-    """MERGE-style keyed upsert onto a plain parquet table.
-
-    Without a lakehouse format there is no row-level MERGE, so the
-    portable pattern is: existing rows whose key collides with an
-    update are dropped (broadcast anti-join — updates are assumed
-    batch-sized), the union is written to a sibling tmp dir, and the
-    table is swapped via Hadoop-FS renames (same serial-compaction
-    contract as sinks.alerts.compact_alerts). Returns the resulting
-    row count.
-
-    At 100 TB this full-table rewrite is the wrong tool — that is
-    exactly what Delta/Iceberg row-level MERGE exists for; this covers
-    the gap for plain-parquet deployments where updates are rare and
-    batch-shaped, and for partition-scoped rewrites.
-    """
-    from hha_spark.sources import fs
-
-    cols = [f.name for f in schema.fields]
-    updates = updates.select(
-        [F.col(c).cast(schema[c].dataType) for c in cols]
-    )
-    if fs.exists(spark, path):
-        existing = spark.read.schema(schema).parquet(path)
-        keep = existing.join(
-            F.broadcast(updates.select(*key_cols).distinct()),
-            on=key_cols,
-            how="left_anti",
-        )
-        merged = keep.unionByName(updates)
-    else:
-        merged = updates
-    tmp = f"{path}__upsert_tmp"
-    merged.write.mode("overwrite").parquet(tmp)
-    n = spark.read.schema(schema).parquet(tmp).count()
-    old = f"{path}__old"
-    fs.delete(spark, old)
-    if fs.exists(spark, path):
-        fs.rename(spark, path, old)
-    fs.rename(spark, tmp, path)
-    fs.delete(spark, old)
-    return n

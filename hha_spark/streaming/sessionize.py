@@ -117,14 +117,12 @@ def merge_adjacent_sessions(sessions: DataFrame, *, gap_us: int) -> DataFrame:
     gap_us — the general-case interval merge. Input/output shape =
     SESSION_COLS.
 
-    Since the round-8 store rewrite this is the REFERENCE
-    implementation: the production processors and flushes all use
-    _merge_intervals_nonested (one window pass, valid only under the
-    no-nesting precondition their contracts guarantee), and this
+    This is the REFERENCE implementation: the production processors
+    and flushes all run _MERGE_CTES (one window pass, valid only under
+    the no-nesting precondition their contracts guarantee), and this
     groupBy-based general form — correct for ANY interval set,
-    nesting included — is what the specialized variant is
-    differentially tested against
-    (tests/test_sessionize_stream.py::
+    nesting included — is what the SQL merge is differentially tested
+    against (tests/test_sessionize_stream.py::
     test_nonested_merge_matches_general_merge).
     """
     w = Window.partitionBy("user_id").orderBy("start_us", "end_us")
@@ -151,79 +149,30 @@ def merge_adjacent_sessions(sessions: DataFrame, *, gap_us: int) -> DataFrame:
     )
 
 
-def _merge_intervals_nonested(
-    intervals: DataFrame, *, gap_us: int
-) -> DataFrame:
-    """merge_adjacent_sessions specialized to inputs with NO NESTED
-    intervals (sorted by start within a user, ends monotone — the
-    disorder processor's regime: every admissible new event's ts >=
-    the previous watermark >= every open session's end, see
-    _as_intervals).
+# --- fused per-epoch SQL ---------------------------------------------
+# Each foreachBatch body builds its epoch plan as ONE spark.sql
+# statement: every DataFrame construction is one py4j round-trip plus
+# one eager JVM analysis pass over a growing tree, which for a ~15-step
+# epoch plan costs ~0.3-0.5 s per epoch of driver-side latency.
 
-    Same gap-chain grouping, but instead of a groupBy(user, chain)
-    aggregation — whose (user_id, _gid) grouping key Spark cannot
-    prove co-located with the window's hash(user_id) partitioning, so
-    it pays a second exchange — this emits the CLOSING row of each
-    chain directly from the window pass, carrying the chain's start
-    and event count as running-window expressions. One exchange per
-    merge instead of two; all window specs share one partitioning and
-    sort. Monotonicity arguments: starts are the sort key; _rs is a
-    running sum, so both max(when(_new=1, ...)) carries pick the
-    CURRENT chain's opening row; the closing row's end_us is the
-    chain max because ends are monotone (no nesting).
-    """
-    w = Window.partitionBy("user_id").orderBy("start_us", "end_us")
-    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    x = (
-        intervals.withColumn(
-            "_new",
-            F.when(
-                F.lag("end_us").over(w).isNull()
-                | (F.col("start_us") - F.lag("end_us").over(w) > gap_us),
-                1,
-            ).otherwise(0),
-        )
-        .withColumn("_rs", F.sum("n_events").over(run))
-        .withColumn(
-            "_gstart",
-            F.max(F.when(F.col("_new") == 1, F.col("start_us"))).over(run),
-        )
-        .withColumn(
-            "_gbase",
-            F.max(
-                F.when(F.col("_new") == 1, F.col("_rs") - F.col("n_events"))
-            ).over(run),
-        )
-        .withColumn("_next_new", F.lead("_new").over(w))
-    )
-    return x.where(
-        F.col("_next_new").isNull() | (F.col("_next_new") == 1)
-    ).select(
-        "user_id",
-        F.col("_gstart").alias("start_us"),
-        "end_us",
-        (F.col("_rs") - F.col("_gbase")).alias("n_events"),
-    )
-
-
-# --- fused per-epoch SQL (round 12) ---------------------------------
-# Each foreachBatch body used to build its epoch plan as ~15 chained
-# DataFrame constructions; every construction is one py4j round-trip
-# plus one eager JVM analysis pass over a growing tree, measured
-# ~0.3-0.5 s per epoch of pure driver-side latency (the r11 census:
-# gate wall ~3.9 s with only ~1.6 s inside Spark jobs). The chains
-# below are now ONE spark.sql statement per epoch (guide §4.1 —
-# control what crosses the Python/JVM boundary; here the PLAN was
-# crossing it piecewise). The SQL is the literal transcription of the
-# former Column chain: same expressions, same column order, same
-# frame types — _merge_intervals_nonested stays as the kernel the
-# statements embed (and tests differential-check against
-# merge_adjacent_sessions).
-
-# the _merge_intervals_nonested window chain as CTE layers over _iv
-# (running-frame ROWS bounds are explicit: the ORDER BY carries ties
-# — degenerate same-ts intervals — and SQL's default RANGE frame
-# would group them)
+# The interval merge shared by every statement: merge_adjacent_sessions
+# specialized to inputs with NO NESTED intervals (sorted by start
+# within a user, ends monotone — the processors' regime: every
+# admissible new event's ts >= every open session's end, see
+# _as_intervals), as CTE layers over _iv. Same gap-chain grouping,
+# but instead of a groupBy(user, chain) aggregation — whose
+# (user_id, _gid) key Spark cannot prove co-located with the window's
+# hash(user_id) partitioning, so it pays a second exchange — it emits
+# the CLOSING row of each chain straight from the window pass, with
+# the chain's start and event count as running-window expressions.
+# All window specs share one partitioning and sort. Monotonicity:
+# starts are the sort key; _rs is a running sum, so both
+# max(CASE WHEN _new = 1 ...) carries pick the CURRENT chain's opening
+# row; the closing row's end_us is the chain max because ends are
+# monotone. Running-frame ROWS bounds are explicit: the ORDER BY
+# carries ties (degenerate same-ts intervals) and SQL's default RANGE
+# frame would group them. Pinned against merge_adjacent_sessions by
+# tests/test_sessionize_stream.py::test_nonested_merge_matches_general_merge.
 _MERGE_CTES = """
   _x AS (
     SELECT user_id, start_us, end_us, n_events,
@@ -455,7 +404,7 @@ def make_sessionize_processor(
 ):
     """Per-micro-batch body (ordered contract): gap-merge the batch's
     events — as degenerate intervals — together with ALL open-session
-    state in one _merge_intervals_nonested window pass (per-user
+    state in one _MERGE_CTES window pass (per-user
     ordering guarantees every new event >= its user's open-session
     end, so no nesting); the LAST session per user stays open (later
     batches may extend it), everything earlier closes now.

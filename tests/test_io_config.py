@@ -59,23 +59,3 @@ def test_detector_params_from_ini(tmp_path):
     with pytest.raises(FileNotFoundError):
         DetectorParams.from_ini(str(tmp_path / "missing.conf"))
 
-
-def test_upsert_parquet_merges_by_key(spark, tmp_path):
-    from pyspark.sql import types as T
-
-    from hha_spark.sources.io import upsert_parquet
-
-    schema = T.StructType(
-        [
-            T.StructField("k", T.LongType(), False),
-            T.StructField("v", T.StringType(), True),
-        ]
-    )
-    path = str(tmp_path / "tbl")
-    base = spark.createDataFrame([(1, "a"), (2, "b"), (3, "c")], schema)
-    assert upsert_parquet(spark, base, path, key_cols=["k"], schema=schema) == 3
-    # update one key, insert a new one
-    delta = spark.createDataFrame([(2, "B"), (4, "d")], schema)
-    assert upsert_parquet(spark, delta, path, key_cols=["k"], schema=schema) == 4
-    got = {(r.k, r.v) for r in spark.read.schema(schema).parquet(path).collect()}
-    assert got == {(1, "a"), (2, "B"), (3, "c"), (4, "d")}

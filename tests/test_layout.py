@@ -1,27 +1,15 @@
-"""Z-order clustering (sinks/layout.py): the skipping win must be
-visible in the real parquet footers, not just claimed. We lay the
-events table out two ways — linearly sorted by user_id, and
-z-ordered on (user_id, ts) — then run the min-max file-pruning test
-a reader performs for a time-range predicate: the user-sorted layout
-interleaves all hours into every file (no file prunable), the
-z-ordered layout must prune at least half of them while staying
-prunable on user_id too."""
+"""Layout keys and partition pruning: the Morton key of
+sinks/layout.py interleaves bits exactly, and a day-partitioned fact
+joined to a filtered dim prunes partitions at run time."""
 
 from __future__ import annotations
 
 import pyspark.sql.functions as F
-import pytest
 
-from hha_spark.sinks.layout import (
-    candidate_files,
-    write_sorted,
-    write_zordered,
-    zorder_key,
-)
+from hha_spark.sinks.layout import zorder_key
 from hha_spark.sources.tables import events_ts_us, load_table
 
 SF = "/root/testdata/sf0.01"
-N_FILES = 16
 
 
 def test_zorder_key_interleaves_bits(spark):
@@ -33,50 +21,6 @@ def test_zorder_key_interleaves_bits(spark):
     assert rows.a_only == 0b01010101
     assert rows.b_only == 0b10101010
     assert rows.both == 0xFFFFFFFF
-
-
-@pytest.fixture(scope="module")
-def layouts(spark, tmp_path_factory):
-    base = tmp_path_factory.mktemp("layout")
-    raw = load_table(spark, SF, "events")
-    ev = raw.select(
-        "event_id", "user_id", events_ts_us(raw).alias("ts")
-    )
-    zpath = str(base / "zorder")
-    spath = str(base / "usersort")
-    write_zordered(ev, zpath, zcols=("user_id", "ts"), n_files=N_FILES)
-    write_sorted(ev, spath, sort_col="user_id", n_files=N_FILES)
-    bounds = ev.agg(
-        F.min("ts").alias("tlo"), F.max("ts").alias("thi"),
-        F.min("user_id").alias("ulo"), F.max("user_id").alias("uhi"),
-        F.count(F.lit(1)).alias("n"),
-    ).first()
-    return zpath, spath, bounds
-
-
-def test_layouts_preserve_rows(spark, layouts):
-    zpath, spath, bounds = layouts
-    assert spark.read.parquet(zpath).count() == bounds.n
-    assert spark.read.parquet(spath).count() == bounds.n
-
-
-def test_zorder_prunes_time_ranges_linear_sort_cannot(spark, layouts):
-    zpath, spath, b = layouts
-    span = b.thi - b.tlo
-    lo, hi = b.tlo + span // 8, b.tlo + span // 8 + span // 16
-    z_cand, z_total = candidate_files(zpath, "ts", lo, hi)
-    s_cand, s_total = candidate_files(spath, "ts", lo, hi)
-    assert z_total == s_total == N_FILES
-    assert s_cand == N_FILES  # user-sort: every file spans all time
-    assert z_cand <= N_FILES // 2  # z-order: most files prunable
-
-
-def test_zorder_still_prunes_user_ranges(spark, layouts):
-    zpath, _, b = layouts
-    span = b.uhi - b.ulo
-    lo, hi = b.ulo, b.ulo + span // 16
-    z_cand, z_total = candidate_files(zpath, "user_id", lo, hi)
-    assert z_cand <= z_total // 2
 
 
 def test_dynamic_partition_pruning_reaches_partitioned_fact(

@@ -547,24 +547,13 @@ def test_slice_writers_tolerate_empty_time_bands(spark, tmp_path):
         assert empty.count() == 0
 
 
-# --- property: specialized no-nesting merge == general merge ---------------
+# --- properties: the fused SQL merge == two independent references -------
 
 
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(data=st.data())
-def test_nonested_merge_matches_general_merge(spark, data):
-    """_merge_intervals_nonested (the one-window production merge) is
-    valid only for inputs with no nested intervals; on that domain it
-    must equal merge_adjacent_sessions, the general reference
-    implementation it replaced in the processors. Inputs are built
-    no-nested by construction: per user, intervals sorted by start
-    with ends forced monotone (overlaps, ties, and gaps all occur)."""
-    from hha_spark.streaming.sessionize import _merge_intervals_nonested
-
+def _draw_nonested(spark, data):
+    """Intervals with no nesting by construction: per user, sorted by
+    start with ends forced monotone (overlaps, ties, and gaps all
+    occur). None when the draw is empty."""
     rows = []
     for user in (1, 2):
         n = data.draw(st.integers(min_value=0, max_value=5))
@@ -576,13 +565,85 @@ def test_nonested_merge_matches_general_merge(spark, data):
             rows.append((user, start, end, 1 + delta % 3))
             prev_end = end
     if not rows:
-        return
-    df = spark.createDataFrame(
+        return None
+    return spark.createDataFrame(
         rows, "user_id long, start_us long, end_us long, n_events long"
     )
-    key = lambda r: (r.user_id, r.start_us, r.end_us, r.n_events)  # noqa: E731
-    got = sorted(map(key, _merge_intervals_nonested(df, gap_us=GAP).collect()))
-    ref = sorted(map(key, merge_adjacent_sessions(df, gap_us=GAP).collect()))
+
+
+def _fused_merge_rows(spark, df):
+    from hha_spark.streaming.sessionize import _MERGE_CTES
+
+    stmt = (
+        "WITH _iv AS (SELECT * FROM {iv}),"
+        + _MERGE_CTES
+        + "SELECT user_id, start_us, end_us, n_events FROM _merged"
+    )
+    return spark.sql(stmt, iv=df, gap_us=GAP).collect()
+
+
+def _column_chain_merge(intervals, *, gap_us):
+    """The one-window no-nesting merge written with the DataFrame
+    Column API: flag chain openers by the gap to the previous end,
+    carry the chain's start and event base as running maxima, and
+    keep each chain's closing row. An independent transcription of
+    what _MERGE_CTES computes in SQL."""
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("user_id").orderBy("start_us", "end_us")
+    run = w.rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    x = (
+        intervals.withColumn(
+            "_new",
+            F.when(
+                F.lag("end_us").over(w).isNull()
+                | (F.col("start_us") - F.lag("end_us").over(w) > gap_us),
+                1,
+            ).otherwise(0),
+        )
+        .withColumn("_rs", F.sum("n_events").over(run))
+        .withColumn(
+            "_gstart",
+            F.max(F.when(F.col("_new") == 1, F.col("start_us"))).over(run),
+        )
+        .withColumn(
+            "_gbase",
+            F.max(
+                F.when(F.col("_new") == 1, F.col("_rs") - F.col("n_events"))
+            ).over(run),
+        )
+        .withColumn("_next_new", F.lead("_new").over(w))
+    )
+    return x.where(
+        F.col("_next_new").isNull() | (F.col("_next_new") == 1)
+    ).select(
+        "user_id",
+        F.col("_gstart").alias("start_us"),
+        "end_us",
+        (F.col("_rs") - F.col("_gbase")).alias("n_events"),
+    )
+
+
+def _key(r):
+    return (r.user_id, r.start_us, r.end_us, r.n_events)
+
+
+@settings(
+    max_examples=8,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(data=st.data())
+def test_nonested_merge_matches_general_merge(spark, data):
+    """_MERGE_CTES (the one-window merge every epoch statement embeds)
+    is valid only for inputs with no nested intervals; on that domain
+    it must equal merge_adjacent_sessions, the general reference
+    implementation, row for row."""
+    df = _draw_nonested(spark, data)
+    if df is None:
+        return
+    got = sorted(map(_key, _fused_merge_rows(spark, df)))
+    ref = sorted(map(_key, merge_adjacent_sessions(df, gap_us=GAP).collect()))
     assert got == ref
 
 
@@ -593,38 +654,13 @@ def test_nonested_merge_matches_general_merge(spark, data):
 )
 @given(data=st.data())
 def test_fused_merge_sql_matches_column_chain(spark, data):
-    """The round-12 fused epoch SQL embeds the _merge_intervals_nonested
-    window chain as CTE layers (_MERGE_CTES); on the no-nesting domain
-    the SQL transcription must equal the Column-chain kernel it
-    replaced in the processors, row for row."""
-    from hha_spark.streaming.sessionize import (
-        _MERGE_CTES,
-        _merge_intervals_nonested,
-    )
-
-    rows = []
-    for user in (1, 2):
-        n = data.draw(st.integers(min_value=0, max_value=5))
-        start, prev_end = 0, 0
-        for _ in range(n):
-            start += data.draw(st.integers(min_value=0, max_value=250))
-            delta = data.draw(st.integers(min_value=0, max_value=200))
-            end = max(prev_end, start + delta)  # monotone ends
-            rows.append((user, start, end, 1 + delta % 3))
-            prev_end = end
-    if not rows:
+    """On the no-nesting domain the SQL transcription in _MERGE_CTES
+    must equal the same window chain written with the Column API,
+    row for row — the merge's window logic checked against a second
+    formulation, not only against the groupBy reference."""
+    df = _draw_nonested(spark, data)
+    if df is None:
         return
-    df = spark.createDataFrame(
-        rows, "user_id long, start_us long, end_us long, n_events long"
-    )
-    stmt = (
-        "WITH _iv AS (SELECT * FROM {iv}),"
-        + _MERGE_CTES
-        + "SELECT user_id, start_us, end_us, n_events FROM _merged"
-    )
-    key = lambda r: (r.user_id, r.start_us, r.end_us, r.n_events)  # noqa: E731
-    got = sorted(
-        map(key, spark.sql(stmt, iv=df, gap_us=GAP).collect())
-    )
-    ref = sorted(map(key, _merge_intervals_nonested(df, gap_us=GAP).collect()))
+    got = sorted(map(_key, _fused_merge_rows(spark, df)))
+    ref = sorted(map(_key, _column_chain_merge(df, gap_us=GAP).collect()))
     assert got == ref

@@ -6,9 +6,7 @@ import hashlib
 
 from hha_spark.operators.multimodal import (
     blob_stats,
-    fake_decode_meta,
     fake_frame_sample,
-    fake_resize,
     with_blob,
 )
 from hha_spark.operators.text import (
@@ -74,15 +72,6 @@ def test_blob_stats_matches_hashlib(spark):
         assert r.blob_md5 == hashlib.md5(text.encode()).hexdigest()
 
 
-def test_fake_resize_contract(spark):
-    df = with_blob(docs_df(spark))
-    out = fake_resize(df, max_px=128).collect()
-    assert len(out) == len(DOCS)
-    for r in out:
-        assert r.width <= 128 and r.height <= 128
-        assert isinstance(r.thumb, (bytes, bytearray)) and len(r.thumb) <= 32
-
-
 def test_fake_frame_sample_fanout(spark):
     long_doc = spark.createDataFrame(
         [(1, "x" * 300)], "doc_id long, text string"
@@ -91,15 +80,6 @@ def test_fake_frame_sample_fanout(spark):
     # 300 bytes -> 4 frames -> sampled at stride 2 -> frames 0 and 2
     assert [r.frame_idx for r in sorted(out, key=lambda r: r.frame_idx)] == [0, 2]
     assert all(len(r.frame_md5) == 32 for r in out)
-
-
-def test_fake_decode_deterministic(spark):
-    df = with_blob(docs_df(spark))
-    a = sorted(map(tuple, fake_decode_meta(df).collect()))
-    b = sorted(map(tuple, fake_decode_meta(df).collect()))
-    assert a == b                               # deterministic fake
-    for row in a:
-        assert 64 <= row[1] <= 255 and row[4] in ("png", "jpeg", "webp")
 
 
 def test_gopher_rules_hand_computed(spark):

@@ -5,8 +5,9 @@ Batch mode runs one detection cycle per `--interval` seconds (the
 reference's sleep loop, hha.py:315-327) against the partitioned
 histogram root; streaming mode hands scheduling to Structured
 Streaming. Thresholds come from an hha.conf-style INI (--conf) or
-defaults; the watchlist is re-read from --zones-file each cycle
-(comment lines and malformed IPs tolerated, like the Consul parser).
+defaults; batch mode re-reads the watchlist from --zones-file each
+cycle (comment lines and malformed IPs tolerated, like the Consul
+parser), streaming mode reads it once at start.
 
     python tools/run_detector.py --data-root /data/hist \\
         --alerts /data/alerts --zones-file zones.txt --once
@@ -49,9 +50,11 @@ def main(argv: list[str] | None = None) -> int:
     logging.basicConfig(level=logging.INFO, format="%(asctime)s %(message)s")
     params = DetectorParams.from_ini(args.conf) if args.conf else DetectorParams()
     spark = get_spark("hha_detector")
-    zones = (
-        zones_from_text_file(spark, args.zones_file) if args.zones_file else None
-    )
+
+    def read_zones():
+        if args.zones_file:
+            return zones_from_text_file(spark, args.zones_file)
+        return None
 
     if args.mode == "streaming":
         if not (args.samples and args.checkpoint):
@@ -63,7 +66,7 @@ def main(argv: list[str] | None = None) -> int:
             alerts_path=args.alerts,
             checkpoint=args.checkpoint,
             params=params,
-            zones=zones,
+            zones=read_zones(),
             trigger_sec=args.interval or params.sleep_interval,
             on_rules=lambda rules: [
                 logging.info("Generate Rule -> %s", r) for r in rules
@@ -80,7 +83,7 @@ def main(argv: list[str] | None = None) -> int:
             data_root=args.data_root,
             alerts_path=args.alerts,
             params=params,
-            zones=zones,
+            zones=read_zones(),
             now=args.now,
         )
         for r in rules:
