@@ -7,23 +7,28 @@ all three are one group even when A and C never collide. This
 operator closes the pair relation into components and labels every
 member with the component's minimum id — the canonical survivor key.
 
-Algorithm: iterated min-label propagation with path compression
-(pointer jumping), the textbook distributed-CC shape (Kiveris et al.,
-"Connected Components in MapReduce and Beyond", SoCC'14 — the
-large-star/small-star family; this is its simple two-step variant):
+One kernel, `connected_components`, with two physical strategies
+picked by the observed edge count (one limit-probe collect):
 
-  label(v) := v
-  repeat:
-    label(v) := min(label(v), min over neighbors u of label(u))
-    label(v) := label(label(v))          # path compression
-  until no label changed
+* small graph (at most SMALL_GRAPH_EDGES edges, the common near-dup
+  case): the probe already holds every edge, and a driver-side
+  union-find by min root closes it with no further Spark job;
+* large graph: iterated min-label propagation with path compression
+  (pointer jumping), the textbook distributed-CC shape (Kiveris et
+  al., "Connected Components in MapReduce and Beyond", SoCC'14):
 
-Each round is two shuffles keyed on node ids: one neighbor-min
-aggregation over the (static) symmetric edge frame and one
-label-to-label join; path compression makes convergence logarithmic
-in component diameter rather than linear. The fixpoint check is a
-driver-side scalar (count of changed labels) — one tiny action per
-round, never a collect of data rows.
+    label(v) := v
+    repeat:
+      label(v) := min(label(v), min over neighbors u of label(u))
+      label(v) := label(label(v))          # path compression
+    until no label changed
+
+Each distributed round is two shuffles keyed on node ids: one
+neighbor-min aggregation over the (static) symmetric edge frame and
+one label-to-label join; path compression makes convergence
+logarithmic in component diameter rather than linear. The fixpoint
+check is a driver-side scalar (count of changed labels) — one tiny
+action per round, never a collect of data rows.
 
 Lineage MUST be truncated every round: each round's plan references
 the previous labels frame three times, so without truncation the
@@ -42,8 +47,9 @@ small clusters (d tiny), so 3-5 rounds in practice. Peak state is the
 symmetric edge frame plus two label snapshots.
 
 Determinism: min() over ids — no randomness, no tie-break ambiguity;
-the result is the unique min-reachable-id labelling, which is what
-the DuckDB recursive-CTE oracle computes independently.
+both strategies return the unique min-reachable-id labelling (a node
+whose only edge is a self-loop labels itself), which is what the
+DuckDB recursive-CTE oracle computes independently.
 """
 
 from __future__ import annotations
@@ -74,7 +80,7 @@ def _min_label_table(tbl):
 
     Union-by-min-root + path compression: the root of every set is
     the minimum id seen in it, so labels equal the distributed
-    algorithms' min-reachable-id labelling exactly. Deterministic —
+    loop's min-reachable-id labelling exactly. Deterministic —
     no iteration order sensitivity (the final find() fully resolves
     every chain). Arrow transfer, not collect(): pyspark Row objects
     cost ~10× the payload in driver memory; Arrow columns + to_pylist
@@ -144,7 +150,6 @@ def connected_components(
     src: str = "doc_id_a",
     dst: str = "doc_id_b",
     max_rounds: int = DEFAULT_MAX_ROUNDS,
-    small_graph_edges: int | None = None,
 ) -> DataFrame:
     """(node, label) for every node incident to an edge; label is the
     minimum node id reachable from the node (its component's id).
@@ -152,26 +157,20 @@ def connected_components(
     ADAPTIVE kernel: one limit-probe collect over the persisted edge
     frame picks the physical strategy AND, in the common small case,
     already holds the rows — a driver union-find when the graph fits
-    the `small_graph_edges` envelope (each distributed round costs
+    the SMALL_GRAPH_EDGES envelope (each distributed round costs
     ~0.5 s of fixed job overhead; a 571-edge graph was paying 7
     rounds of it), the iterated min-label propagation loop otherwise.
     Both produce the identical min-reachable-id labelling
-    (`test_cluster.py` pins small ≡ distributed ≡ star). Above the
-    envelope the probe's collected cap+1 rows are discarded — a
-    bounded cost (the envelope's own sizing) paid once before the
-    distributed loop.
+    (`test_cluster.py` pins small ≡ distributed). Above the envelope
+    the probe's collected cap+1 rows are discarded — a bounded cost
+    (the envelope's own sizing) paid once before the distributed
+    loop. The module constant is read at call time: tests
+    monkeypatch it to force the distributed loop.
 
     Raises RuntimeError if the fixpoint is not reached in
     `max_rounds` — with path compression that means a component of
     diameter ~2^max_rounds, i.e. corrupt input, not real data.
     """
-    # Resolve the envelope at CALL time, not def time: callers (the
-    # streaming funnel's fallback) and tests monkeypatch the module
-    # constant, and a def-time default would silently pin the
-    # original 500k — the forced-fallback tests would exercise the
-    # driver small path while claiming to cover the distributed loop.
-    if small_graph_edges is None:
-        small_graph_edges = SMALL_GRAPH_EDGES
     # probe the RAW edge frame, not a symmetrized expansion: union
     # find is orientation-blind (union(a, b) == union(b, a)), so the
     # small path needs each edge once — half the probe bytes and no
@@ -187,8 +186,8 @@ def connected_components(
     # the driver until the limit is hit, so a graph under the envelope
     # is fully collected by the probe itself (the count-then-collect
     # shape paid a second full job for the same bytes).
-    head = raw.limit(small_graph_edges + 1).toArrow()
-    if head.num_rows <= small_graph_edges:
+    head = raw.limit(SMALL_GRAPH_EDGES + 1).toArrow()
+    if head.num_rows <= SMALL_GRAPH_EDGES:
         node_type = raw.schema.fields[0].dataType
         try:
             return _union_find_arrow(raw.sparkSession, head, node_type)
@@ -278,110 +277,6 @@ def connected_components(
         raw.unpersist()
 
 
-def connected_components_star(
-    edges: DataFrame,
-    *,
-    src: str = "doc_id_a",
-    dst: str = "doc_id_b",
-    max_rounds: int = DEFAULT_MAX_ROUNDS,
-) -> DataFrame:
-    """(node, label) via alternating large-star / small-star rounds —
-    the full Kiveris et al. SoCC'14 algorithm (the module's default
-    `connected_components` is its simpler label-propagation cousin).
-
-    Why a second implementation: min-label propagation moves LABELS
-    over a static edge set, so its per-round cost is |E| forever and
-    its round count is O(log d) only thanks to single-hop path
-    compression. Large-star/small-star rewrites the EDGE SET itself
-    toward disjoint stars, provably converging in O(log n) rounds with
-    geometrically shrinking intermediate state — the safer choice when
-    a component spans a large fraction of the graph (a pathological
-    boilerplate-duplication cluster at 100 TB), because every round
-    strictly flattens the structure it will shuffle next round.
-
-      large-star(u): connect every neighbor v > u to m = min(N(u) ∪ {u})
-      small-star(u): connect every neighbor v < u (and u) to that m
-
-    Both steps are one groupBy(min) plus one join on the grouping key
-    — the same co-partitioned shuffle, which AQE chains without an
-    extra exchange. Edges stay canonical (small, large) pairs and are
-    de-duplicated every round, so state never exceeds the current edge
-    set. Fixpoint = the canonical edge set stops changing (count
-    equality + one limit(1) subtract probe — two tiny actions, no
-    collect). Lineage is localCheckpoint-truncated per round exactly
-    like `connected_components` (see module docstring).
-
-    Determinism: min() over ids only; at fixpoint the graph is a
-    disjoint union of stars centered at each component's minimum id,
-    so the labelling is the same unique min-reachable-id map the
-    recursive-CTE oracle computes.
-    """
-    canon = (
-        edges.select(
-            F.least(F.col(src), F.col(dst)).alias("a"),
-            F.greatest(F.col(src), F.col(dst)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    nodes = (
-        canon.select(F.col("a").alias("node"))
-        .union(canon.select(F.col("b").alias("node")))
-        .distinct()
-        .localCheckpoint(eager=True)
-    )
-    n_edges = canon.count()
-    for _ in range(max_rounds):
-        # large-star: group the symmetric adjacency by u; every
-        # strictly-larger neighbor re-attaches to the local minimum
-        sym = canon.select(
-            F.col("a").alias("u"), F.col("b").alias("v")
-        ).union(canon.select(F.col("b").alias("u"), F.col("a").alias("v")))
-        mins = (
-            sym.groupBy("u")
-            .agg(F.min("v").alias("nm"))
-            .select("u", F.least(F.col("nm"), F.col("u")).alias("m"))
-        )
-        large = (
-            sym.join(mins, on="u")
-            .where(F.col("v") > F.col("u"))
-            .select(F.col("m").alias("a"), F.col("v").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        # small-star: per node, its smaller neighbors (column a of the
-        # canonical frame) all re-attach to their minimum, and the
-        # node itself attaches to that minimum too
-        smins = large.groupBy("b").agg(F.min("a").alias("m"))
-        small = (
-            large.join(smins, on="b")
-            .select(F.col("m").alias("a"), F.col("a").alias("b"))  # (v, m) for v in S(u)
-            .union(smins.select(F.col("m").alias("a"), F.col("b")))  # (u, m)
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        new_count = small.count()
-        if new_count == n_edges and small.subtract(canon).limit(1).count() == 0:
-            canon = small
-            break
-        canon, n_edges = small, new_count
-    else:
-        raise RuntimeError(
-            f"connected_components_star did not converge in {max_rounds} rounds"
-        )
-    # at the star fixpoint every non-center node's only smaller
-    # neighbor is its component's center; centers label themselves
-    parents = canon.groupBy("b").agg(F.min("a").alias("label")).select(
-        F.col("b").alias("node"), "label"
-    )
-    return nodes.join(parents, on="node", how="left").select(
-        "node", F.coalesce(F.col("label"), F.col("node")).alias("label")
-    )
-
-
 def cluster_members(
     edges: DataFrame,
     *,
@@ -390,24 +285,15 @@ def cluster_members(
     id_out: str = "doc_id",
     cluster_out: str = "cluster_id",
     size_out: str = "cluster_size",
-    algorithm: str = "propagate",
 ) -> DataFrame:
     """(doc_id, cluster_id, cluster_size) for every clustered doc.
-
-    algorithm: "propagate" (min-label propagation — cheapest when
-    clusters are small and dense, the common near-dup shape) or
-    "star" (large-star/small-star — edge-rewriting, the safe choice
-    for giant components; see connected_components_star).
 
     cluster_size rides a second aggregation + broadcastable join on
     the label (cluster count ≪ node count), not a window — a window
     over cluster_id would re-sort the node frame for a value the
     aggregate already knows.
     """
-    cc = {"propagate": connected_components, "star": connected_components_star}[
-        algorithm
-    ]
-    labels = cc(edges, src=src, dst=dst)
+    labels = connected_components(edges, src=src, dst=dst)
     sizes = labels.groupBy("label").agg(F.count(F.lit(1)).alias(size_out))
     return labels.join(F.broadcast(sizes), on="label").select(
         F.col("node").alias(id_out),

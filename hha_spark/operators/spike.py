@@ -135,7 +135,6 @@ def fused_window_compare(
     prev_upper: Column | int,
     q: float,
     limit_new: int,
-    clamp_guard: bool,
 ) -> DataFrame:
     """Single-pass S1+S3+S4: both window averages from ONE conditional
     aggregation, compare on the same row.
@@ -160,7 +159,10 @@ def fused_window_compare(
     EITHER window, with
         sum_val       cur avg (NULL when the key has no current rows)
         prev_sum_val  raw prev avg (NULL when absent)
-        prev_sum_val2 clamped/defaulted baseline (S3/S4)
+        prev_sum_val2 clamped/defaulted baseline (S3/S4): a drop past
+                      Q clamps to `limit_new` only when prev exceeds
+                      `limit_new` (the /32 guard); the unguarded /24
+                      clamp lives in `alerts_from_fused`
     Callers filter `sum_val IS NOT NULL` for the alert path and reuse
     prev columns for rollups.
     """
@@ -190,9 +192,9 @@ def fused_window_compare(
     cur_avg = F.when(F.col("_cur_n") > 0, floor_avg("_cur_sum", "_cur_n"))
     prev_avg = F.when(F.col("_prev_n") > 0, floor_avg("_prev_sum", "_prev_n"))
     with_avgs = agg.select(*key_cols, cur_avg.alias("sum_val"), prev_avg.alias("prev_sum_val"))
-    clamp_cond = _safe_ratio(F.col("prev_sum_val"), F.col("sum_val")) > F.lit(q)
-    if clamp_guard:
-        clamp_cond = clamp_cond & (F.col("prev_sum_val") > F.lit(limit_new))
+    clamp_cond = (
+        _safe_ratio(F.col("prev_sum_val"), F.col("sum_val")) > F.lit(q)
+    ) & (F.col("prev_sum_val") > F.lit(limit_new))
     return with_avgs.select(
         *key_cols,
         "sum_val",
@@ -314,7 +316,6 @@ def detect_spikes(
         time_col="timestamp", cur_lower=now - p.cur_window_sec,
         prev_upper=now - p.prev_window_sec,
         q=p.quotient_amplification, limit_new=p.limit_new_data,
-        clamp_guard=True,
     )
     alerts = alerts_from_fused(
         base, group_cols=keys[:2], entity_col="dst_ip",

@@ -60,34 +60,34 @@ _MODULES = (
 # 50 names yielded. Round-11 rotation (the r10 verdict's "Next round"
 # #1, plus this round's code-touched surface): position 1 is the
 # round-11 NEW gate `stream_curation_spilled` (the label-spill scale
-# fix under the batch oracle). Positions 2-16 are the
+# fix under the batch oracle). Positions 2-15 are the
 # gates whose RESULT VALUES changed this round — the MinHash kernel
 # now derives its 8 hash families as 8-hex-char slices of 2 salted
 # md5 digests (operators/dedup.py::minhash_signatures, 4x fewer md5
 # invocations; the oracle's _SIG_COLS mirrors the identical
 # expression), so every oracle-gated MinHash consumer needs a fresh
-# driver row. Positions 17-18: the two remaining consumers of the
+# driver row. Positions 16-17: the two remaining consumers of the
 # gopher selectExpr rewrite (values identical, plan-construction
-# only; the funnel gates already sit in the front). Positions 19-27:
+# only; the funnel gates already sit in the front). Positions 18-26:
 # the nine r6-vintage rows the r10 verdict ordered first (4 rounds
-# stale, text.py touched again this round). Positions 28-32: the
+# stale, text.py touched again this round). Positions 27-31: the
 # five PQ-LUT/IVF-consumer ann gates whose operators/pq.py / ivf.py
-# changed after their r9 rows froze. Positions 33-36: the four
+# changed after their r9 rows froze. Positions 32-35: the four
 # spike_events_* parity rows (r9-vintage; also re-adjudicates the
 # r10 control sweep's 1.4x blip — verdict finding #3). Positions
-# 37-50: the r7-vintage tail in name order (first 14 of 48; the
-# rest rotate in r12).
+# 36-49: the r7-vintage tail in name order (first 14 of 48; the
+# rest rotate in r12); position 50 is the first name in module order.
 # Names here that fall out of the registry are ignored defensively;
 # queries not listed follow in module order.
 _NEVER_CHECKED_FIRST = (
     # -- the round-11 NEW gate (label-spill path under the oracle) --
     "stream_curation_spilled",
-    # -- 15 minhash-result-changed gates (sliced-digest kernel) --
+    # -- 14 minhash-result-changed gates (sliced-digest kernel) --
     "stream_curation_compacted", "stream_curation_funnel",
     "corpus_curation_pipeline", "dedup_minhash_lsh",
     "dedup_minhash_recall", "dedup_incremental",
     "dedup_quality_survivors", "dedup_canonical_pick",
-    "dedup_clusters", "dedup_clusters_star", "dedup_graph_pagerank",
+    "dedup_clusters", "dedup_graph_pagerank",
     "dedup_graph_triangles", "dedup_text_embedding_drift",
     "pretraining_corpus_selection", "stream_dedup_incremental",
     # -- 2 gopher plan-rewrite consumers (values unchanged) --

@@ -553,24 +553,6 @@ ORACLE_CLUSTERS = f"""
 """
 
 
-def dedup_clusters_star(spark, sf_dir):
-    """Same transitive-closure labelling as dedup_clusters, computed
-    by the alternating large-star/small-star algorithm (Kiveris et
-    al., SoCC'14) instead of min-label propagation — the edge-
-    rewriting variant that converges in O(log n) rounds even when one
-    component spans most of the graph (pathological boilerplate
-    duplication at corpus scale). Both implementations must produce
-    the identical min-reachable-id labelling, so this entry shares
-    dedup_clusters' recursive-CTE oracle: the driver gate is then
-    also a cross-implementation equivalence proof."""
-    from hha_spark.operators.cluster import cluster_members
-
-    pairs = _minhash_lsh_from(with_token_set(_docs(spark, sf_dir))).select(
-        "doc_id_a", "doc_id_b"
-    )
-    return cluster_members(pairs, algorithm="star")
-
-
 def dedup_simhash(spark, sf_dir):
     docs = with_token_set(_docs(spark, sf_dir))
     hashes = simhash16(docs)
@@ -1982,7 +1964,6 @@ QUERIES = {
     "dedup_quality_survivors": dedup_quality_survivors,
     "dedup_minhash_recall": dedup_minhash_recall,
     "dedup_clusters": dedup_clusters,
-    "dedup_clusters_star": dedup_clusters_star,
     "dedup_graph_triangles": dedup_graph_triangles,
     "doc_token_count_map": doc_token_count_map,
     "text_normalize": text_normalize,
@@ -2025,7 +2006,6 @@ ORACLES = {
     "dedup_quality_survivors": ORACLE_QUALITY_SURVIVORS,
     "dedup_minhash_recall": ORACLE_RECALL,
     "dedup_clusters": ORACLE_CLUSTERS,
-    "dedup_clusters_star": ORACLE_CLUSTERS,
     "dedup_graph_triangles": ORACLE_TRIANGLES,
     "doc_token_count_map": ORACLE_TOKEN_MAP,
     "text_normalize": ORACLE_NORMALIZE,

@@ -73,7 +73,6 @@ def _fused(spark: SparkSession, sf_dir: str) -> DataFrame:
         prev_upper=F.col("now_us") - F.lit(PREV_DAYS * US_PER_DAY),
         q=Q,
         limit_new=LIMIT_NEW,
-        clamp_guard=True,
     )
 
 

@@ -283,7 +283,7 @@ def _spike_gate_body(spark, tmp, hist, now, zones, params):
         alerts_path=f"{tmp}/alerts",
         checkpoint=f"{tmp}/ckpt",
         params=params,
-        zones=zones,
+        read_zones=lambda: zones,
         now_fn=lambda: now,
         # retention must cover the whole fixture span: the gate
         # replays history in one shot, so nothing may be evicted

@@ -106,13 +106,17 @@ def make_batch_processor(
     samples_root: str,
     alerts_path: str,
     params: DetectorParams,
-    zones: DataFrame | None = None,
+    read_zones: Callable[[], DataFrame | None] | None = None,
     now_fn: Callable[[], float] = time.time,
     retention_sec: int = RETENTION_SEC,
     on_rules: Callable[[list[dict]], None] | None = None,
 ):
     """Per-micro-batch body: merge new samples into the state table,
-    run the full batch detector over the retention window, sink."""
+    run the full batch detector over the retention window, sink.
+
+    `read_zones` is called once per micro-batch, so an edited
+    watchlist gates the next batch (the batch loop re-reads it per
+    cycle the same way)."""
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         now = int(now_fn())
@@ -130,7 +134,7 @@ def make_batch_processor(
         hist = read_window(spark, samples_root, lower=now - retention_sec)
         rules = detect_and_append(
             spark, hist, alerts_path=alerts_path, params=params, now=now,
-            zones=zones,
+            zones=read_zones() if read_zones is not None else None,
         )
         if on_rules is not None:
             on_rules(rules)
@@ -146,7 +150,7 @@ def run_streaming_detector(
     alerts_path: str,
     checkpoint: str,
     params: DetectorParams | None = None,
-    zones: DataFrame | None = None,
+    read_zones: Callable[[], DataFrame | None] | None = None,
     trigger_sec: int | None = None,
     now_fn: Callable[[], float] = time.time,
     retention_sec: int = RETENTION_SEC,
@@ -174,7 +178,7 @@ def run_streaming_detector(
             samples_root=samples_root,
             alerts_path=alerts_path,
             params=p,
-            zones=zones,
+            read_zones=read_zones,
             now_fn=now_fn,
             retention_sec=retention_sec,
             on_rules=on_rules,

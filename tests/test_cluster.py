@@ -4,11 +4,8 @@ from __future__ import annotations
 
 import pytest
 
-from hha_spark.operators.cluster import (
-    cluster_members,
-    connected_components,
-    connected_components_star,
-)
+from hha_spark.operators import cluster
+from hha_spark.operators.cluster import cluster_members, connected_components
 
 
 def _labels(df) -> dict[int, int]:
@@ -35,49 +32,31 @@ def test_cycle_and_reversed_edges(spark):
     }
 
 
-def test_long_chain_converges_logarithmically(spark):
+@pytest.fixture()
+def distributed(monkeypatch):
+    """Force the distributed min-label loop: no graph fits the
+    driver union-find envelope."""
+    monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", 0)
+
+
+def test_long_chain_converges_logarithmically(spark, distributed):
     """Path compression: a 64-node chain must close in far fewer than
     64 rounds (~log2 diameter + slack), not diameter rounds."""
     n = 64
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(n)], "doc_id_a long, doc_id_b long"
     )
-    out = _labels(
-        connected_components(edges, max_rounds=14, small_graph_edges=0)
-    )
+    out = _labels(connected_components(edges, max_rounds=14))
     assert set(out.values()) == {0}
     assert len(out) == n + 1
 
 
-def test_non_convergence_raises(spark):
+def test_non_convergence_raises(spark, distributed):
     edges = spark.createDataFrame(
         [(i, i + 1) for i in range(32)], "doc_id_a long, doc_id_b long"
     )
     with pytest.raises(RuntimeError, match="did not converge"):
-        connected_components(edges, max_rounds=1, small_graph_edges=0)
-
-
-def test_star_chain_cycle_and_pair(spark):
-    """Large-star/small-star produces the same min-id labelling on
-    chains, cycles, reversed edges, and disjoint pairs."""
-    edges = spark.createDataFrame(
-        [(1, 2), (2, 3), (3, 4), (7, 5), (5, 6), (6, 7), (10, 11)],
-        "doc_id_a long, doc_id_b long",
-    )
-    assert _labels(connected_components_star(edges)) == {
-        1: 1, 2: 1, 3: 1, 4: 1, 5: 5, 6: 5, 7: 5, 10: 10, 11: 10,
-    }
-
-
-def test_star_long_chain_converges(spark):
-    """Edge rewriting flattens a 64-node chain in O(log n) rounds."""
-    n = 64
-    edges = spark.createDataFrame(
-        [(i, i + 1) for i in range(n)], "doc_id_a long, doc_id_b long"
-    )
-    out = _labels(connected_components_star(edges, max_rounds=14))
-    assert set(out.values()) == {0}
-    assert len(out) == n + 1
+        connected_components(edges, max_rounds=1)
 
 
 def test_cluster_members_sizes(spark):
@@ -145,25 +124,11 @@ def test_cc_matches_union_find(spark, edges):
     suppress_health_check=[HealthCheck.function_scoped_fixture],
 )
 @given(edges=edges_strategy)
-def test_cc_distributed_matches_union_find(spark, edges):
-    # small_graph_edges=0 forces the distributed min-label loop, so
-    # the adaptive kernel's two physical strategies are both pinned
-    # to the same labelling
+def test_cc_distributed_matches_union_find(spark, distributed, edges):
+    # the forced distributed min-label loop, so the adaptive kernel's
+    # two physical strategies are both pinned to the same labelling
     df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
-    assert _labels(
-        connected_components(df, small_graph_edges=0)
-    ) == _union_find_labels(edges)
-
-
-@settings(
-    max_examples=8,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-@given(edges=edges_strategy)
-def test_star_matches_union_find(spark, edges):
-    df = spark.createDataFrame(edges, "doc_id_a long, doc_id_b long")
-    assert _labels(connected_components_star(df)) == _union_find_labels(edges)
+    assert _labels(connected_components(df)) == _union_find_labels(edges)
 
 
 def test_canonical_pick_one_per_cluster(spark):

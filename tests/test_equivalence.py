@@ -115,7 +115,7 @@ def test_fused_equals_two_frame_compare(spark, rows):
         for r in fused_window_compare(
             df, key_cols=["k"], value_col="v", time_col="ts",
             cur_lower=NOW - 90, prev_upper=NOW - 300, q=q,
-            limit_new=limit, clamp_guard=True,
+            limit_new=limit,
         ).collect()
         if r.sum_val is not None  # two-frame output = cur keys only
     }

@@ -529,20 +529,9 @@ edge_lists = st.lists(
 )
 
 
-@given(edges=edge_lists)
-@settings(
-    max_examples=10,
-    deadline=None,
-    suppress_health_check=[HealthCheck.function_scoped_fixture],
-)
-def test_connected_components_matches_bfs_closure(spark, edges):
-    """connected_components == a direct Python BFS closure on random
-    multigraphs with self-loops and duplicate edges: every node
-    incident to an edge labels to the minimum id reachable from it.
-    Exercises the driver union-find path (the adaptive kernel's
-    common case, and the one whose probe shape changed in round 9);
-    driver == distributed == star equality on the same labelling is
-    pinned by test_cluster.py on fixed graphs."""
+def _check_cc_against_bfs(spark, edges):
+    """connected_components == a direct Python BFS closure: every node
+    incident to an edge labels to the minimum id reachable from it."""
     from hha_spark.operators.cluster import connected_components
 
     df = spark.createDataFrame(
@@ -576,6 +565,35 @@ def test_connected_components_matches_bfs_closure(spark, edges):
         lo = min(comp)
         expect |= {(n, lo) for n in comp}
     assert got == expect
+
+
+CC_SET = settings(
+    max_examples=10,
+    deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+
+
+@given(edges=edge_lists)
+@CC_SET
+def test_connected_components_matches_bfs_closure(spark, edges):
+    """Driver union-find path (the adaptive kernel's common case) on
+    random multigraphs with self-loops and duplicate edges."""
+    _check_cc_against_bfs(spark, edges)
+
+
+@given(edges=edge_lists)
+@CC_SET
+def test_connected_components_distributed_matches_bfs_closure(
+    spark, monkeypatch, edges
+):
+    """The same multigraphs through the distributed min-label loop,
+    forced by an empty driver envelope: self-loops and duplicate
+    edges reach the distributed path too."""
+    from hha_spark.operators import cluster
+
+    monkeypatch.setattr(cluster, "SMALL_GRAPH_EDGES", 0)
+    _check_cc_against_bfs(spark, edges)
 
 
 @settings(

@@ -141,7 +141,7 @@ def test_drop_clamp_with_guard_ip(spark):
         hist_df(spark, rows), key_cols=["num_protocol", "type_proto", "dst_ip"],
         value_col="CountPkt", time_col="timestamp", cur_lower=NOW - 90,
         prev_upper=NOW - 300, q=P.quotient_amplification,
-        limit_new=P.limit_new_data, clamp_guard=True,
+        limit_new=P.limit_new_data,
     )
     rows_ = {r.dst_ip: r for r in cmp_.collect()}
     assert rows_[IP_A].prev_sum_val2 == 2500   # clamped
@@ -277,7 +277,6 @@ def test_huge_counters_average_exactly_and_alert(spark):
         df, key_cols=["dst_ip"], value_col="CountPkt", time_col="timestamp",
         cur_lower=NOW - P.cur_window_sec, prev_upper=NOW - P.prev_window_sec,
         q=P.quotient_amplification, limit_new=P.limit_new_data,
-        clamp_guard=True,
     ).collect()
     assert (r.sum_val, r.prev_sum_val, r.prev_sum_val2) == (cur_avg, prev_avg, prev_avg)
 
@@ -301,6 +300,5 @@ def test_negative_sums_floor_toward_minus_infinity(spark):
         hist_df(spark, rows), key_cols=["dst_ip"], value_col="CountPkt",
         time_col="timestamp", cur_lower=NOW - 90, prev_upper=NOW - 300,
         q=P.quotient_amplification, limit_new=P.limit_new_data,
-        clamp_guard=True,
     ).collect()
     assert (r.sum_val, r.prev_sum_val) == (-7 // 3, -3 // 2)  # (-3, -2)

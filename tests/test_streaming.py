@@ -57,7 +57,7 @@ def start(spark, paths, emitted, *, zones=None, now_fn):
         alerts_path=paths["alerts"],
         checkpoint=paths["ckpt"],
         params=P,
-        zones=zones,
+        read_zones=lambda: zones,
         now_fn=now_fn,
         on_rules=emitted.append,
     )

@@ -25,7 +25,7 @@ import os
 import re
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hha_spark.caching import release_tracked  # noqa: E402
 from hha_spark.queries import all_queries  # noqa: E402

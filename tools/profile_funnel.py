@@ -20,10 +20,11 @@ spilled (2 epochs, forced label spill).
 
 from __future__ import annotations
 
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F  # noqa: E402
 

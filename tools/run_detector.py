@@ -5,9 +5,9 @@ Batch mode runs one detection cycle per `--interval` seconds (the
 reference's sleep loop, hha.py:315-327) against the partitioned
 histogram root; streaming mode hands scheduling to Structured
 Streaming. Thresholds come from an hha.conf-style INI (--conf) or
-defaults; batch mode re-reads the watchlist from --zones-file each
-cycle (comment lines and malformed IPs tolerated, like the Consul
-parser), streaming mode reads it once at start.
+defaults; both modes re-read the watchlist from --zones-file, batch
+mode each cycle and streaming mode each micro-batch (comment lines and
+malformed IPs tolerated, like the Consul parser).
 
     python tools/run_detector.py --data-root /data/hist \\
         --alerts /data/alerts --zones-file zones.txt --once
@@ -19,10 +19,11 @@ from __future__ import annotations
 
 import argparse
 import logging
+import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hha_spark.config import DetectorParams  # noqa: E402
 from hha_spark.detector import run_cycle  # noqa: E402
@@ -66,7 +67,7 @@ def main(argv: list[str] | None = None) -> int:
             alerts_path=args.alerts,
             checkpoint=args.checkpoint,
             params=params,
-            zones=read_zones(),
+            read_zones=read_zones,
             trigger_sec=args.interval or params.sleep_interval,
             on_rules=lambda rules: [
                 logging.info("Generate Rule -> %s", r) for r in rules

@@ -33,7 +33,7 @@ import os
 import sys
 import time
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
@@ -534,7 +534,7 @@ def probes(spark, k: int):
             time_col="ts_us",
             cur_lower=F.col("now_us") - F.lit(2 * US_PER_DAY),
             prev_upper=F.col("now_us") - F.lit(7 * US_PER_DAY),
-            q=1.5, limit_new=40, clamp_guard=True,
+            q=1.5, limit_new=40,
         )
 
     return {

@@ -17,7 +17,7 @@ import sys
 import duckdb
 import pandas as pd
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from hha_spark.session import get_spark  # noqa: E402
 from hha_spark.sources.tables import TABLE_NAMES  # noqa: E402
