@@ -52,6 +52,8 @@ def sql_over_views(
     session: SparkSession,
     template: str,
     frames: dict[str, DataFrame] | None = None,
+    *,
+    args: dict[str, object] | None = None,
     **literals,
 ) -> DataFrame:
     """Run a fused SQL statement with every referenced frame
@@ -71,6 +73,9 @@ def sql_over_views(
     per-batch clone, so nothing leaks to the main session). Every
     frame must already live on `session`.
 
+    `args` pass through to ``session.sql`` and bind the statement's
+    named parameter markers (``:name``): values that change per call
+    belong there, so the statement text stays the same string.
     `literals` are formatted into the SQL text, so only int and float
     (never bool) are accepted; anything else raises TypeError here
     rather than as a parse error far away. Reusing one view name per
@@ -90,32 +95,38 @@ def sql_over_views(
         name = f"_hha_fused_{key}"
         df.createOrReplaceTempView(name)
         names[key] = name
-    return session.sql(template.format(**names, **literals))
+    return session.sql(template.format(**names, **literals), args=args)
+
+
+def _struct(schema: str | StructType) -> StructType:
+    if isinstance(schema, StructType):
+        return schema
+    st = _PARSED.get(schema)
+    if st is None:
+        st = StructType.fromDDL(schema)
+        _PARSED[schema] = st
+    return st
+
+
+def arrow_rows_table(rows, schema: str | StructType):
+    """Bounded driver-local rows (tuples or pyspark Rows, positional)
+    as a pyarrow Table with the given DDL or StructType `schema`. A
+    null in a NOT NULL field raises ValueError: neither pyarrow (16.1,
+    not even ``validate(full=True)``) nor the Arrow
+    ``createDataFrame`` path checks it."""
+    import pyarrow as pa
+
+    cols = {}
+    for i, f in enumerate(_struct(schema).fields):
+        arr = pa.array([r[i] for r in rows], _pa_type(f.dataType))
+        if not f.nullable and arr.null_count:
+            raise ValueError(f"null in NOT NULL column {f.name!r}")
+        cols[f.name] = arr
+    return pa.table(cols)
 
 
 def arrow_rows_frame(
     spark: SparkSession, rows, schema: str | StructType
 ) -> DataFrame:
-    """Bounded driver-local rows (tuples or pyspark Rows, positional)
-    as an Arrow-backed DataFrame with the given DDL or StructType
-    `schema`. A null in a NOT NULL field raises ValueError: neither
-    pyarrow (16.1, not even ``validate(full=True)``) nor the Arrow
-    ``createDataFrame`` path checks it."""
-    import pyarrow as pa
-
-    if isinstance(schema, StructType):
-        st = schema
-    else:
-        st = _PARSED.get(schema)
-        if st is None:
-            st = StructType.fromDDL(schema)
-            _PARSED[schema] = st
-    cols = {}
-    for i, f in enumerate(st.fields):
-        arr = pa.array([r[i] for r in rows], _pa_type(f.dataType))
-        if not f.nullable and arr.null_count:
-            raise ValueError(
-                f"arrow_rows_frame: null in NOT NULL column {f.name!r}"
-            )
-        cols[f.name] = arr
-    return spark.createDataFrame(pa.table(cols), schema)
+    """`arrow_rows_table(rows, schema)` as an Arrow-backed DataFrame."""
+    return spark.createDataFrame(arrow_rows_table(rows, schema), _struct(schema))

@@ -1,58 +1,69 @@
 """Two-window amplification-spike detection (the reference's core query).
 
 Re-expresses reference hha.py:132-219 (`FiltrDataByInterval`) +
-hha.py:223-244 (`attackAction`) as composable, key-generic DataFrame
-transformations. Normative semantics S1-S8 are documented in
-SURVEY.md §2.1; every quirk preserved here is cited.
+hha.py:223-244 (`attackAction`) as ONE parameterized SQL statement.
+Normative semantics S1-S8 are documented in SURVEY.md §2.1; every
+quirk preserved here is cited.
 
 Spark-first design decisions (vs the reference):
+  * the whole cycle, S1-S8, is one `spark.sql` statement
+    (`spike_statement`): CTE `fused` holds both windows from ONE
+    conditional aggregation (one scan, one shuffle, no /32 join),
+    `buckets` the /32 alerts and the /24 avg-of-avg in ONE grouped
+    aggregate over it, `alerts` one explode of both scopes. Every
+    value (the `now`-derived bounds, Q, the new-key limits, the TTL
+    cut, the scope labels) is a named parameter marker and every
+    identifier comes from a fixed `SpikeShape`, so the text never
+    changes between cycles and building it is one parse and one
+    analysis, where the Column chain it replaced was a dozen eagerly
+    analysed DataFrame steps.
   * /24 derivation is a native bitmask expression (functions/ip.py),
     not a Python UDF (hha.py:20) — keeps whole-stage codegen intact.
-  * both windows come from ONE conditional aggregation
-    (`fused_window_compare`: one scan, one shuffle, no /32 join), and
-    the /32 filter and the /24 branch read that fused frame through
-    ONE grouped aggregate (`alerts_from_fused`), so the whole cycle is
-    one linear plan with one reader per frame. Nothing needs the
-    reference's RDD round-trip materialization hack (`recreateDF`,
-    hha.py:119-128), and nothing is persisted.
+  * nothing needs the reference's RDD round-trip materialization hack
+    (`recreateDF`, hha.py:119-128): every CTE has one reader, and
+    nothing is persisted.
   * no joins between windows or levels: keys missing from a window
     surface as NULL averages and take the new-key default
     (hha.py:179,194) by projection, not by a left-join miss.
   * watchlist gating is a broadcast left-semi join BEFORE any collect,
     replacing the driver-side `in zones` loop (hha.py:233-242).
-  * TTL alert dedup is a left-anti join against a persisted alerts
-    table, replacing the in-memory GlobalRowList dict (hha.py:234-244).
-  * division guards: ratio denominators are wrapped in nullif(x, 0) so
+  * TTL alert dedup is a broadcast left-anti join against the
+    persisted alerts table, replacing the in-memory GlobalRowList
+    dict (hha.py:234-244).
+  * division guards: ratio denominators are wrapped in NULLIF(x, 0) so
     the query behaves identically under ANSI and legacy modes (the
     reference relied on legacy int/0 -> NULL row-drop, SURVEY.md S6).
 
 Scale notes (100 TB design): the fused aggregation is
 partial-aggregated map-side by Catalyst before its shuffle. The /24
-aggregate consumes the already-aggregated /32 frame (avg-of-avg,
+aggregate consumes the already-aggregated /32 rows (avg-of-avg,
 hha.py:160-168 semantics; cardinality = distinct keys, not raw rows)
 in a second, partial-aggregated shuffle, so raw data is scanned once
 and shuffled once for both windows.
+
+`window_averages` and `rollup_averages` are the two-frame building
+blocks (one frame per window) that the equivalence tests hold the
+statement to.
 """
 
 from __future__ import annotations
 
-from collections.abc import Sequence
+from collections.abc import Mapping, Sequence
+from dataclasses import dataclass
 
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import IntegralType
 
 from hha_spark.config import DetectorParams
-from hha_spark.functions.ip import ip_to_net24
+from hha_spark.functions.ip import _NET24_MASK
+from hha_spark.functions.local import sql_over_views
 
-
-def _safe_ratio(num: Column, den: Column) -> Column:
-    """num/den with NULL (not error, not inf) on den == 0.
-
-    Matches the reference's legacy-mode division semantics
-    (SURVEY.md S6) while staying correct under ANSI mode.
-    """
-    return num / F.nullif(den, F.lit(0))
+# S2's bucket value: the average of the non-NULL per-key averages in
+# `c`, NULL when there are none. floor(avg(int)) == integer floor
+# division for the non-negative counters handled here; DIV is exact at
+# any scale (no double rounding past 2^53).
+_AVG_OF_AVG = "CAST(SUM({c}) DIV NULLIF(COUNT({c}), 0) AS BIGINT)"
 
 
 def window_averages(
@@ -118,11 +129,170 @@ def rollup_averages(
 
 
 def _avg_of_avg(col: str) -> Column:
-    """S2's bucket value: the average of the non-NULL per-key averages
-    in `col`, NULL when there are none. floor(avg(int)) == integer
-    floor division for the non-negative counters handled here; DIV is
-    exact at any scale (no double rounding past 2^53)."""
-    return F.expr(f"CAST(SUM({col}) DIV NULLIF(COUNT({col}), 0) AS BIGINT)")
+    """`_AVG_OF_AVG` over `col` as a Column."""
+    return F.expr(_AVG_OF_AVG.format(c=col))
+
+
+@dataclass(frozen=True)
+class SpikeShape:
+    """The identifiers of one spike-detection domain — the only
+    non-marker text a spike statement contains, fixed in code.
+
+    keys    the fused grouping key, in output order
+    entity  the key rolled up into buckets (the /32 address)
+    bucket  SQL expression over `entity`: the bucket's base value
+    value   the counter averaged per window
+    time    the timestamp the window bounds apply to
+    now     a column of the input holding a data-derived `now`; the
+            windows are then `now - :cur_span` / `now - :prev_span`.
+            None: the bounds are the markers `:cur_lower` /
+            `:prev_upper`.
+    """
+
+    keys: tuple[str, ...]
+    entity: str
+    bucket: str
+    value: str
+    time: str
+    now: str | None = None
+
+
+def _integral(df: DataFrame, col: str) -> bool:
+    return isinstance(df.schema[col].dataType, IntegralType)
+
+
+def _id(name: str) -> str:
+    return "`" + name.replace("`", "``") + "`"
+
+
+def _fused_cte(shape: SpikeShape, integral: bool) -> str:
+    """S1+S3+S4: `fused` holds, per key seen in EITHER window,
+        sum_val       cur avg (NULL when the key has no current rows)
+        prev_sum_val  raw prev avg (NULL when absent)
+        prev_sum_val2 clamped/defaulted baseline (S3/S4): a drop past
+                      Q clamps to `:limit_new` only when prev exceeds
+                      `:limit_new` (the /32 guard); the unguarded /24
+                      clamp lives in `_alert_ctes`
+    — both windows from ONE conditional aggregation: one scan, one
+    shuffle, no join (keys missing from the previous window surface as
+    prev_n = 0 -> the S4 default, exactly like a left-join miss).
+
+    The averages are exact floors. An integral `value` is summed as
+    BIGINT and floored as `(s - pmod(s, n)) DIV n` (DIV truncates
+    toward zero; subtracting the non-negative remainder first makes it
+    a floor for negative sums too): exact while a key's window sum fits
+    a BIGINT, where a DECIMAL(18,6) cast turns any sample of 10^12 or
+    more into NULL. A fractional one keeps the exact decimal path
+    (functions/exact.py semantics). The value's type picks the
+    fragment; both are fixed text.
+    """
+    keys = ", ".join(map(_id, shape.keys))
+    t = _id(shape.time)
+    if integral:
+        v = f"CAST({_id(shape.value)} AS BIGINT)"
+        floor = "({s} - pmod({s}, {n})) DIV {n}"
+    else:
+        v = f"CAST({_id(shape.value)} AS DECIMAL(18,6))"
+        floor = "CAST(FLOOR({s} / {n}) AS BIGINT)"
+    if shape.now is None:
+        lo, hi = ":cur_lower", ":prev_upper"
+    else:
+        lo, hi = f"{_id(shape.now)} - :cur_span", f"{_id(shape.now)} - :prev_span"
+    cur = floor.format(s="_cur_sum", n="_cur_n")
+    prev = floor.format(s="_prev_sum", n="_prev_n")
+    return f"""_sums AS (
+  SELECT {keys},
+         SUM(CASE WHEN {t} > {lo} THEN {v} END) AS _cur_sum,
+         SUM(CASE WHEN {t} > {lo} THEN 1 ELSE 0 END) AS _cur_n,
+         SUM(CASE WHEN {t} < {hi} THEN {v} END) AS _prev_sum,
+         SUM(CASE WHEN {t} < {hi} THEN 1 ELSE 0 END) AS _prev_n
+  FROM {{src}} GROUP BY {keys}),
+_avgs AS (
+  SELECT {keys},
+         CASE WHEN _cur_n > 0 THEN {cur} END AS sum_val,
+         CASE WHEN _prev_n > 0 THEN {prev} END AS prev_sum_val
+  FROM _sums),
+fused AS (
+  SELECT {keys}, sum_val, prev_sum_val,
+         CASE WHEN sum_val IS NOT NULL THEN COALESCE(
+           CASE WHEN prev_sum_val / NULLIF(sum_val, 0) > :q
+                 AND prev_sum_val > :limit_new
+                THEN :limit_new ELSE prev_sum_val END,
+           :limit_new) END AS prev_sum_val2
+  FROM _avgs WHERE sum_val IS NOT NULL OR prev_sum_val IS NOT NULL)"""
+
+
+def _alert_ctes(shape: SpikeShape) -> str:
+    """S2-S7 over `fused`: per-entity and per-bucket alerts as ONE
+    grouped aggregate, so `fused` has a single reader.
+
+    `buckets` groups `fused` once by (*group, bucket). Per bucket it
+    yields the avg-of-avg of the current (`_cur`) and of the previous
+    (`_prev`) window (S2; NULL when the bucket has no such keys) and
+    the list of entity alerts passing S6 against their clamped
+    baseline. The bucket value is then compared without the clamp
+    guard and with `:limit_new_net` as the new-bucket baseline (S3-S5),
+    filtered (S6), and emitted with the entity alerts through one
+    explode (S7) — no self-join, no union.
+
+    `alerts` is (*group, sum_val, <entity>, scope): `sum_val` is the
+    BASELINE (hha.py:199,210), bucket rows carry the bucket value in
+    the entity column (hha.py:213-214), and `scope` is
+    `:scope_entity` for entity rows and `:scope_bucket` for bucket
+    rows (S7).
+    """
+    group = [_id(k) for k in shape.keys if k != shape.entity]
+    g = "".join(f"{c}, " for c in group)
+    e = _id(shape.entity)
+
+    def alert(baseline: str, entity: str, scope: str) -> str:
+        return f"named_struct('sum_val', {baseline}, '{shape.entity}', {entity}, 'scope', {scope})"
+
+    return f"""buckets AS (
+  SELECT {g}{shape.bucket} AS _bucket,
+         {_AVG_OF_AVG.format(c="sum_val")} AS _cur,
+         {_AVG_OF_AVG.format(c="prev_sum_val")} AS _prev,
+         -- collect_list skips the NULLs of keys that do not alert
+         collect_list(CASE WHEN sum_val / NULLIF(prev_sum_val2, 0) > :q
+                           THEN {alert("prev_sum_val2", e, ":scope_entity")} END) AS _alerts
+  FROM fused GROUP BY {g}{shape.bucket}),
+_baselines AS (
+  SELECT *, COALESCE(CASE WHEN _prev / NULLIF(_cur, 0) > :q
+                          THEN :limit_new_net ELSE _prev END,
+                     :limit_new_net) AS _base
+  FROM buckets),
+alerts AS (
+  SELECT {g}_a.sum_val, _a.{e}, _a.scope FROM (
+    SELECT {g}explode(concat(_alerts, array(
+             CASE WHEN _cur / NULLIF(_base, 0) > :q
+                  THEN {alert("_base", "_bucket", ":scope_bucket")} END))) AS _a
+    FROM _baselines)
+  WHERE _a IS NOT NULL)"""
+
+
+def spike_statement(shape: SpikeShape, *, integral: bool, tail: str) -> str:
+    """The S1-S7 CTE chain (`fused`, `buckets`, `alerts`) over the view
+    `{src}`, finished by `tail` — a fixed SELECT over those CTEs. The
+    text holds identifiers from `shape` and named parameter markers
+    only, so it is the same string for every `now` and every
+    threshold."""
+    return f"WITH {_fused_cte(shape, integral)},\n{_alert_ctes(shape)}\n{tail}"
+
+
+def run_spike_statement(
+    df: DataFrame,
+    shape: SpikeShape,
+    tail: str,
+    args: Mapping[str, object],
+    frames: Mapping[str, DataFrame] | None = None,
+) -> DataFrame:
+    """`spike_statement` over `df` (the `{src}` view) and `frames`, with
+    `args` bound to its parameter markers."""
+    return sql_over_views(
+        df.sparkSession,
+        spike_statement(shape, integral=_integral(df, shape.value), tail=tail),
+        {"src": df, **(frames or {})}, args=dict(args),
+    )
 
 
 def fused_window_compare(
@@ -131,147 +301,50 @@ def fused_window_compare(
     key_cols: Sequence[str],
     value_col: str,
     time_col: str,
-    cur_lower: Column | int,
-    prev_upper: Column | int,
+    cur_lower: int,
+    prev_upper: int,
     q: float,
     limit_new: int,
 ) -> DataFrame:
-    """Single-pass S1+S3+S4: both window averages from ONE conditional
-    aggregation, compare on the same row.
-
-    The two-frame formulation (window_averages ×2 + left join) mirrors
-    the reference's two-file reads, but when both windows come from
-    the same source the whole comparison collapses: per key, aggregate
-    CASE-filtered sums/counts for each window in one shuffle, then
-    derive cur/prev/clamp by projection. At scale this replaces
-    2 scans + 2 shuffles + 1 join with 1 scan + 1 shuffle + 0 joins,
-    with identical results (keys missing from the previous window
-    surface as prev_n = 0 -> the S4 default, exactly like a left-join
-    miss).
-
-    Bounds may be Columns (e.g. data-derived `now` broadcast via a
-    1-row cross join) or int literals. The averages are exact floors.
-    An integral `value_col` is summed as BIGINT and floored as
-    `(s - pmod(s, n)) DIV n`: exact while a key's window sum fits a
-    BIGINT, where a DECIMAL(18,6) cast turns any sample of 10^12 or
-    more into NULL. A fractional one keeps the exact decimal path
-    (functions/exact.py semantics). Output: all keys seen in
-    EITHER window, with
-        sum_val       cur avg (NULL when the key has no current rows)
-        prev_sum_val  raw prev avg (NULL when absent)
-        prev_sum_val2 clamped/defaulted baseline (S3/S4): a drop past
-                      Q clamps to `limit_new` only when prev exceeds
-                      `limit_new` (the /32 guard); the unguarded /24
-                      clamp lives in `alerts_from_fused`
-    Callers filter `sum_val IS NOT NULL` for the alert path and reuse
-    prev columns for rollups.
-    """
-    lo = cur_lower if isinstance(cur_lower, Column) else F.lit(cur_lower)
-    hi = prev_upper if isinstance(prev_upper, Column) else F.lit(prev_upper)
-    in_cur = F.col(time_col) > lo
-    in_prev = F.col(time_col) < hi
-    if isinstance(df.schema[value_col].dataType, IntegralType):
-        val = F.col(value_col).cast("long")
-
-        def floor_avg(s: str, n: str) -> Column:
-            # DIV truncates toward zero; subtracting the non-negative
-            # remainder first makes it a floor for negative sums too
-            return F.expr(f"({s} - pmod({s}, {n})) DIV {n}")
-    else:
-        val = F.col(value_col).cast("decimal(18,6)")
-
-        def floor_avg(s: str, n: str) -> Column:
-            return F.floor(F.col(s) / F.col(n)).cast("long")
-
-    agg = df.groupBy(*key_cols).agg(
-        F.sum(F.when(in_cur, val)).alias("_cur_sum"),
-        F.sum(F.when(in_cur, 1).otherwise(0)).alias("_cur_n"),
-        F.sum(F.when(in_prev, val)).alias("_prev_sum"),
-        F.sum(F.when(in_prev, 1).otherwise(0)).alias("_prev_n"),
+    """The statement's `fused` CTE alone (S1+S3+S4, see `_fused_cte`)
+    over `df` with integer window bounds: per key seen in either
+    window, (*key_cols, sum_val, prev_sum_val, prev_sum_val2)."""
+    shape = SpikeShape(tuple(key_cols), key_cols[-1], "", value_col, time_col)
+    return sql_over_views(
+        df.sparkSession,
+        f"WITH {_fused_cte(shape, _integral(df, value_col))}\nSELECT * FROM fused",
+        {"src": df},
+        args={"cur_lower": cur_lower, "prev_upper": prev_upper, "q": q,
+              "limit_new": limit_new},
     )
-    cur_avg = F.when(F.col("_cur_n") > 0, floor_avg("_cur_sum", "_cur_n"))
-    prev_avg = F.when(F.col("_prev_n") > 0, floor_avg("_prev_sum", "_prev_n"))
-    with_avgs = agg.select(*key_cols, cur_avg.alias("sum_val"), prev_avg.alias("prev_sum_val"))
-    clamp_cond = (
-        _safe_ratio(F.col("prev_sum_val"), F.col("sum_val")) > F.lit(q)
-    ) & (F.col("prev_sum_val") > F.lit(limit_new))
-    return with_avgs.select(
-        *key_cols,
-        "sum_val",
-        "prev_sum_val",
-        F.when(
-            F.col("sum_val").isNotNull(),
-            F.coalesce(
-                F.when(clamp_cond, F.lit(limit_new)).otherwise(F.col("prev_sum_val")),
-                F.lit(limit_new),
-            ),
-        ).alias("prev_sum_val2"),
-    ).where((F.col("sum_val").isNotNull()) | (F.col("prev_sum_val").isNotNull()))
 
 
-def alerts_from_fused(
-    fused: DataFrame,
-    *,
-    group_cols: Sequence[str],
-    entity_col: str,
-    bucket_expr: Column,
-    bucket_name: str,
-    q: float,
-    limit_new_net: int,
-    scopes: tuple[str, str],
-) -> DataFrame:
-    """S2-S7 over a `fused_window_compare` frame keyed by
-    (*group_cols, entity_col): per-entity and per-bucket alerts as ONE
-    grouped aggregate, so the fused frame has a single reader.
+# the histogram fact table's identifiers
+HISTOGRAM_SHAPE = SpikeShape(
+    keys=("num_protocol", "type_proto", "dst_ip"),
+    entity="dst_ip",
+    bucket=f"`dst_ip` & {_NET24_MASK}",
+    value="CountPkt",
+    time="timestamp",
+)
+_GATE = " LEFT SEMI JOIN {zones} z ON a.dst_ip = z.ip"
+_DEDUP = (
+    " LEFT ANTI JOIN (SELECT num_protocol, type_proto, dst_ip FROM {prior}"
+    " WHERE detected_at > :ttl_cut) r"
+    " ON a.num_protocol = r.num_protocol AND a.type_proto = r.type_proto"
+    " AND a.dst_ip = r.dst_ip"
+)
 
-    The fused frame is grouped once by (*group_cols, bucket). Per
-    bucket the aggregate yields the avg-of-avg of the current and of
-    the previous window (S2, `_avg_of_avg` as in `rollup_averages`;
-    NULL when the bucket has no such keys) and the
-    list of entity alerts passing S6 against their clamped baseline.
-    The bucket value is then compared without the clamp guard and with
-    `limit_new_net` as the new-bucket baseline (S3-S5), filtered (S6),
-    and emitted with the entity alerts through one explode (S7) — no
-    self-join, no union.
 
-    Returns (*group_cols, sum_val, <entity_col>, scope): `sum_val` is
-    the BASELINE (hha.py:199,210), bucket rows carry the bucket value
-    in `entity_col` (hha.py:213-214), and `scope` is scopes[0] for
-    entity rows and scopes[1] for bucket rows (S7).
-    """
-
-    def alert(baseline: Column, entity: Column, scope: str) -> Column:
-        return F.struct(
-            baseline.alias("sum_val"), entity.alias(entity_col),
-            F.lit(scope).alias("scope"),
-        )
-
-    entity_alert = F.when(
-        _safe_ratio(F.col("sum_val"), F.col("prev_sum_val2")) > F.lit(q),
-        alert(F.col("prev_sum_val2"), F.col(entity_col), scopes[0]),
-    )
-    buckets = fused.groupBy(*group_cols, bucket_expr.alias(bucket_name)).agg(
-        _avg_of_avg("sum_val").alias("_cur"),
-        _avg_of_avg("prev_sum_val").alias("_prev"),
-        # collect_list skips the NULLs of keys that do not alert
-        F.collect_list(entity_alert).alias("_alerts"),
-    )
-    cur, prev = F.col("_cur"), F.col("_prev")
-    baseline = F.coalesce(
-        F.when(_safe_ratio(prev, cur) > F.lit(q), F.lit(limit_new_net)).otherwise(prev),
-        F.lit(limit_new_net),
-    )
-    bucket_alert = F.when(
-        _safe_ratio(cur, baseline) > F.lit(q),
-        alert(baseline, F.col(bucket_name), scopes[1]),
-    )
+def _detect_tail(gated: bool, deduped: bool) -> str:
+    """S8 as fixed text: each present gate is a broadcast join."""
+    hinted = [a for a, on in (("z", gated), ("r", deduped)) if on]
+    hint = f"/*+ BROADCAST({', '.join(hinted)}) */ " if hinted else ""
     return (
-        buckets.select(
-            *group_cols,
-            F.explode(F.concat("_alerts", F.array(bucket_alert))).alias("_a"),
-        )
-        .where(F.col("_a").isNotNull())
-        .select(*group_cols, "_a.*")
+        f"SELECT {hint}a.num_protocol, a.type_proto, a.sum_val, a.dst_ip,"
+        " a.scope FROM alerts a"
+        + (_GATE if gated else "")
+        + (_DEDUP if deduped else "")
     )
 
 
@@ -283,14 +356,10 @@ def detect_spikes(
     zones: DataFrame | None = None,
     prior_alerts: DataFrame | None = None,
 ) -> DataFrame:
-    """Full S1-S8 detection cycle over the histogram fact table.
-
-    One linear plan: one `fused_window_compare` over `histograms`
-    yields both window averages and the /32 comparison (S1, S3, S4);
-    its single reader, `alerts_from_fused`, derives the /32 and /24
-    alerts in one grouped aggregate (S2-S7). Gating and TTL dedup (S8)
-    are broadcast joins on the result. Nothing is persisted: the fact
-    data is scanned once per action.
+    """Full S1-S8 detection cycle over the histogram fact table, as
+    ONE parameterized SQL statement (`spike_statement` over
+    `HISTOGRAM_SHAPE` plus the S8 tail). Nothing is persisted: the
+    fact data is scanned once per action.
 
     Returns alerts with columns
         (num_protocol, type_proto, sum_val, dst_ip, scope)
@@ -303,39 +372,30 @@ def detect_spikes(
 
     zones: optional watchlist DataFrame(ip: long) — exact-match
     broadcast semi-join gating (hha.py:237: a /24 alert passes only if
-    the network *base address* itself is watchlisted).
+    the network *base address* itself is watchlisted). None: no
+    gating.
     prior_alerts: optional DataFrame with (num_protocol, type_proto,
     dst_ip, detected_at) — alerts already raised within
-    `limit_detect_time_sec` are suppressed (hha.py:234-244).
+    `limit_detect_time_sec` are suppressed by a broadcast anti-join
+    (hha.py:234-244). None: no dedup.
     """
     p = params
-    keys = ["num_protocol", "type_proto", "dst_ip"]
-    # CountPkt is integral: exact BIGINT window sums
-    base = fused_window_compare(
-        histograms, key_cols=keys, value_col="CountPkt",
-        time_col="timestamp", cur_lower=now - p.cur_window_sec,
-        prev_upper=now - p.prev_window_sec,
-        q=p.quotient_amplification, limit_new=p.limit_new_data,
-    )
-    alerts = alerts_from_fused(
-        base, group_cols=keys[:2], entity_col="dst_ip",
-        bucket_expr=ip_to_net24("dst_ip"), bucket_name="dst_net",
-        q=p.quotient_amplification, limit_new_net=p.limit_new_data_net,
-        scopes=("ip", "net"),
-    )
-
+    frames = {}
+    args = {
+        "cur_lower": now - p.cur_window_sec,
+        "prev_upper": now - p.prev_window_sec,
+        "q": p.quotient_amplification,
+        "limit_new": p.limit_new_data,
+        "limit_new_net": p.limit_new_data_net,
+        "scope_entity": "ip",
+        "scope_bucket": "net",
+    }
     if zones is not None:
-        # S8 gating — exact membership, pushed below any collect
-        alerts = alerts.join(
-            F.broadcast(zones.select(F.col("ip").alias("dst_ip"))),
-            on="dst_ip", how="left_semi",
-        )
+        frames["zones"] = zones
     if prior_alerts is not None:
-        recent = prior_alerts.where(
-            F.col("detected_at") > F.lit(now - p.limit_detect_time_sec)
-        ).select("num_protocol", "type_proto", "dst_ip")
-        alerts = alerts.join(
-            F.broadcast(recent),
-            on=["num_protocol", "type_proto", "dst_ip"], how="left_anti",
-        )
-    return alerts
+        frames["prior"] = prior_alerts
+        args["ttl_cut"] = now - p.limit_detect_time_sec
+    return run_spike_statement(
+        histograms, HISTOGRAM_SHAPE,
+        _detect_tail(zones is not None, prior_alerts is not None), args, frames,
+    )

@@ -14,10 +14,10 @@ Windows: current = last 2 days, previous = everything older than
 7 days before `now` — both one-sided like the reference's
 (hha.py:141,148; endTime computed but unused, hha.py:321-323).
 
-The queries compose the same operators as the histogram-domain
-`detect_spikes` (operators/spike.py); `spike_events_alerts` runs the
-same S2-S7 body, `alerts_from_fused`. So the oracle checks pin the
-operator semantics themselves.
+The S1-S7 queries run the histogram-domain detector's own statement
+(`operators/spike.py::spike_statement`) over `EVENTS_SHAPE`, with a
+fixed tail per query; only the domain's identifiers and marker values
+differ. So the oracle checks pin the detector's semantics themselves.
 """
 
 from __future__ import annotations
@@ -25,22 +25,37 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hha_spark.operators.spike import (
-    alerts_from_fused,
-    fused_window_compare,
-    rollup_averages,
-)
+from hha_spark.operators.spike import SpikeShape, run_spike_statement
 from hha_spark.sources.tables import US_PER_DAY, events_ts_us, load_table
 
 from hha_spark.caching import tracked_persist
 
-KEYS = ["user_id", "event_type"]
 Q = 1.5                 # quotientAmplification analogue
 LIMIT_NEW = 40          # LimitNewData analogue (≈ median sum_val)
 LIMIT_NEW_NET = 40      # LimitNewDataNet analogue
 CUR_DAYS = 2
 PREV_DAYS = 7
-BUCKET = "user_id - user_id % 10"
+
+# the detector's statement over events: the data-derived `now` is the
+# input's `now_us` column, so the windows are `now_us - :cur_span`
+# and `now_us - :prev_span`
+EVENTS_SHAPE = SpikeShape(
+    keys=("user_id", "event_type"),
+    entity="user_id",
+    bucket="`user_id` - `user_id` % 10",
+    value="value",
+    time="ts_us",
+    now="now_us",
+)
+EVENTS_ARGS = {
+    "cur_span": CUR_DAYS * US_PER_DAY,
+    "prev_span": PREV_DAYS * US_PER_DAY,
+    "q": Q,
+    "limit_new": LIMIT_NEW,
+    "limit_new_net": LIMIT_NEW_NET,
+    "scope_entity": "user",
+    "scope_bucket": "bucket",
+}
 
 
 def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -50,57 +65,42 @@ def _events_us(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _fused(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Single-pass S1+S3+S4 frame over events.
+def with_now(ev: DataFrame) -> DataFrame:
+    """`ev` with its max(ts_us) as the `now_us` column.
 
     The data-derived `now` rides a broadcast 1-row cross join instead
-    of a driver collect. The plan still has TWO FileScans — the fact
-    scan plus a second, column-pruned scan computing max(ts_us) for
-    the bounds frame (asserted in tests/test_plans.py) — but the
-    bounds scan reads one column and is satisfied largely from parquet
-    footer statistics, so the heavy work is one scan + one shuffle
-    (fused_window_compare).
-    """
-    ev = _events_us(spark, sf_dir)
-    bounds = ev.agg(F.max("ts_us").alias("now_us"))
-    with_now = ev.join(F.broadcast(bounds))
-    return fused_window_compare(
-        with_now,
-        key_cols=KEYS,
-        value_col="value",
-        time_col="ts_us",
-        cur_lower=F.col("now_us") - F.lit(CUR_DAYS * US_PER_DAY),
-        prev_upper=F.col("now_us") - F.lit(PREV_DAYS * US_PER_DAY),
-        q=Q,
-        limit_new=LIMIT_NEW,
+    of a driver collect. The plan has TWO FileScans — the fact scan
+    plus a second, column-pruned scan computing max(ts_us) (asserted
+    in tests/test_plans.py) — but that scan reads one column and is
+    satisfied largely from parquet footer statistics, so the heavy
+    work is one scan + one shuffle (the statement's `fused` CTE)."""
+    return ev.join(F.broadcast(ev.agg(F.max("ts_us").alias("now_us"))))
+
+
+def _spike(spark: SparkSession, sf_dir: str, tail: str) -> DataFrame:
+    return run_spike_statement(
+        with_now(_events_us(spark, sf_dir)), EVENTS_SHAPE, tail, EVENTS_ARGS
     )
 
 
 def spike_events_compare(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S1+S3+S4 exposed: per-key cur/prev/clamped-baseline frame."""
-    fused = _fused(spark, sf_dir)
-    return fused.where(F.col("sum_val").isNotNull()).select(
-        *KEYS,
-        "sum_val",
-        F.coalesce(F.col("prev_sum_val"), F.lit(LIMIT_NEW)).alias("prev_sum_val"),
-        "prev_sum_val2",
-    )
+    return _spike(spark, sf_dir, """
+        SELECT user_id, event_type, sum_val,
+               COALESCE(prev_sum_val, :limit_new) AS prev_sum_val, prev_sum_val2
+        FROM fused WHERE sum_val IS NOT NULL""")
 
 
 def spike_events_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Full S1-S7: per-key and per-bucket spike alerts, unioned.
+    """Full S1-S7: per-key and per-bucket spike alerts.
 
     Alert rows carry the BASELINE in sum_val (reference quirk,
     hha.py:199,210) plus a scope marker instead of the reference's
-    mixed-type positional column (hha.py:213-214). The fused frame's
-    one reader is `alerts_from_fused`'s grouped aggregate, so nothing
-    is persisted.
+    mixed-type positional column (hha.py:213-214). Every CTE has one
+    reader, so nothing is persisted.
     """
-    return alerts_from_fused(
-        _fused(spark, sf_dir), group_cols=["event_type"], entity_col="user_id",
-        bucket_expr=F.expr(BUCKET), bucket_name="bucket_id",
-        q=Q, limit_new_net=LIMIT_NEW_NET, scopes=("user", "bucket"),
-    ).select(F.col("user_id").alias("entity_id"), "event_type", "sum_val", "scope")
+    return _spike(spark, sf_dir, """
+        SELECT user_id AS entity_id, event_type, sum_val, scope FROM alerts""")
 
 
 TTL_US = 1 * US_PER_DAY          # LimitDetectTimeSec analogue
@@ -161,13 +161,9 @@ def spike_events_gated(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def spike_events_net_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """S2 isolated: avg-of-avg bucket rollup of the current window."""
-    fused = _fused(spark, sf_dir)
-    return rollup_averages(
-        fused.where(F.col("sum_val").isNotNull()).select(*KEYS, "sum_val"),
-        group_cols=["event_type"],
-        bucket_expr=F.expr(BUCKET),
-        bucket_name="bucket_id",
-    )
+    return _spike(spark, sf_dir, """
+        SELECT event_type, _bucket AS bucket_id, _cur AS sum_val
+        FROM buckets WHERE _cur IS NOT NULL""")
 
 
 QUERIES = {

@@ -6,30 +6,43 @@ with the process (hha.py:223-249). Writing alerts to a table instead
 (a) survives restarts, (b) turns the TTL dedup into a broadcast
 anti-join against `recent_alerts`, and (c) gives downstream rule
 generators a queryable log. `collect_rules` is the cycle's one
-action; `append_alerts` writes the rules it returned, so the append
-never re-executes the detection plan.
+action; `append_alerts` writes the rules it returned as one parquet
+file serialized on the driver and placed through the Hadoop
+FileSystem, so the append runs no Spark job at all: no re-execution
+of the detection plan, no tasks, no commit protocol.
 """
 
 from __future__ import annotations
 
 import ipaddress
+import uuid
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from hha_spark.functions.local import arrow_rows_frame
+from hha_spark.functions.local import arrow_rows_table
 from hha_spark.schemas import ALERTS_SCHEMA
+from hha_spark.sources import fs
 
 
 def append_alerts(
     spark: SparkSession, rules: list[dict], table_path: str, *, detected_at: int
 ) -> None:
     """Stamp and append a cycle's collected rules (`collect_rules`
-    output) as one file. A quiet cycle writes nothing: an empty frame
-    would still leave a schema-only file that every later
-    `recent_alerts` lists."""
+    output) as one `part-<uuid>.parquet` file under `table_path`.
+
+    The rows are driver-local and few (one cycle's alerts), so pyarrow
+    serializes them on the driver under ALERTS_SCHEMA (INT32, INT32,
+    INT64, INT64, string, INT64; a null in a NOT NULL field raises
+    before anything is written). The bytes go to a hidden `_tmp-<uuid>`
+    name, which Spark's readers skip, and a Hadoop-FS rename publishes
+    the file whole. A quiet cycle writes nothing: an empty file would
+    still be listed by every later `recent_alerts`."""
     if not rules:
         return
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
     rows = [
         (
             r["num_protocol"], r["type_proto"], r["sum_val"],
@@ -37,12 +50,13 @@ def append_alerts(
         )
         for r in rules
     ]
-    # the rows are driver-local and few (one detector cycle's alerts):
-    # an Arrow-backed local frame is a pure-JVM scan; coalesce(1) makes
-    # the append one task and one file
-    arrow_rows_frame(spark, rows, ALERTS_SCHEMA).coalesce(1).write.mode(
-        "append"
-    ).parquet(table_path)
+    buf = pa.BufferOutputStream()
+    pq.write_table(arrow_rows_table(rows, ALERTS_SCHEMA), buf)
+    name = uuid.uuid4().hex
+    tmp = f"{table_path}/_tmp-{name}"
+    fs.write_bytes(spark, tmp, buf.getvalue().to_pybytes())
+    if not fs.rename(spark, tmp, f"{table_path}/part-{name}.parquet"):
+        raise OSError(f"append_alerts: could not publish {tmp}")
 
 
 def recent_alerts(
@@ -78,8 +92,6 @@ def compact_alerts(
     leaves the data intact at `<table>__old`; the next compaction (or
     a manual rename) recovers it. Returns the retained row count.
     """
-    from hha_spark.sources import fs
-
     try:
         df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
     except Exception:  # noqa: BLE001 — nothing to compact yet

@@ -76,35 +76,34 @@ def read_window(
 ) -> DataFrame:
     """Read the partitioned layout, pruned to the window's hours.
 
-    The partition predicate is derived from the same bounds as the
-    row filter, rounded outward to hour boundaries, so pruning can
-    never drop a row the window needs.
+    The partition predicate keeps exactly the hours that hold some
+    integer timestamp of the open window (lower, upper): the hours of
+    `lower + 1` through `upper - 1`. So pruning never drops a row the
+    row filter keeps, and never lists an hour whose rows it would all
+    skip.
     """
-    df = spark.read.schema(_PARTITIONED_SCHEMA).parquet(root)
-    cond = F.lit(True)
+    conds = []
     if lower is not None:
-        hour_floor = (lower // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
-        ts = F.timestamp_seconds(F.lit(hour_floor))
-        cond = cond & (
-            (F.col("date") > F.date_format(ts, "yyyy-MM-dd"))
-            | (
-                (F.col("date") == F.date_format(ts, "yyyy-MM-dd"))
-                & (F.col("hour") >= F.hour(ts))
-            )
-        )
-        cond = cond & (F.col("timestamp") > F.lit(lower))
+        hour_floor = ((lower + 1) // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
+        conds += [_hour_bound(">", hour_floor), f"timestamp > {int(lower)}"]
     if upper is not None:
-        hour_ceil = (upper // SECONDS_PER_HOUR + 1) * SECONDS_PER_HOUR
-        ts = F.timestamp_seconds(F.lit(hour_ceil))
-        cond = cond & (
-            (F.col("date") < F.date_format(ts, "yyyy-MM-dd"))
-            | (
-                (F.col("date") == F.date_format(ts, "yyyy-MM-dd"))
-                & (F.col("hour") <= F.hour(ts))
-            )
-        )
-        cond = cond & (F.col("timestamp") < F.lit(upper))
-    return df.where(cond).drop("date", "hour")
+        hour_ceil = ((upper - 1) // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
+        conds += [_hour_bound("<", hour_ceil), f"timestamp < {int(upper)}"]
+    df = spark.read.schema(_PARTITIONED_SCHEMA).parquet(root)
+    if conds:
+        # one SQL predicate is one py4j call, where the equivalent
+        # Column tree costs ~30 (0.06 s of a detector cycle)
+        df = df.where(" AND ".join(conds))
+    return df.drop("date", "hour")
+
+
+def _hour_bound(op: str, hour_ts: int) -> str:
+    """Partitions on the `op` side of, or in, the hour starting at
+    unix second `hour_ts` — named in the session time zone, as
+    `with_partition_cols` names them."""
+    t = f"timestamp_seconds({int(hour_ts)})"
+    d = f"date_format({t}, 'yyyy-MM-dd')"
+    return f"(date {op} {d} OR (date = {d} AND hour {op}= hour({t})))"
 
 
 def write_hourly(df: DataFrame, root: str, prefix: str = "level_") -> None:

@@ -3,6 +3,8 @@ sink round-trip, and the full batch cycle with cross-cycle TTL dedup."""
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hha_spark.config import DetectorParams
@@ -53,6 +55,51 @@ def test_partitioned_roundtrip_and_pruning(spark, tmp_path):
     # the pruned scan must not read every hour directory
     prev = read_window(spark, root, upper=NOW - 3600 - 10)
     assert prev.count() == 1
+
+
+MIDNIGHT = 1_700_006_400  # a UTC midnight: the hour grid crosses a date
+
+
+def _hour_per_partition(root, hours, ts):
+    """One row per `date=/hour=` partition of `hours`, every row at
+    `ts` (inside the window under test), tagged with its partition's
+    hour in CountPkt — so the rows read back name the kept
+    partitions, whatever the row filter does."""
+    import datetime as dt
+    import os
+
+    import pyarrow.parquet as pq
+
+    from hha_spark.functions.local import arrow_rows_table
+
+    for h in hours:
+        t = dt.datetime.fromtimestamp(h * 3600, dt.timezone.utc)
+        d = os.path.join(root, f"date={t:%Y-%m-%d}", f"hour={t.hour}")
+        os.makedirs(d)
+        table = arrow_rows_table([(ts, 1, 65, 11, h, IP)], HISTOGRAM_SCHEMA)
+        pq.write_table(table, os.path.join(d, "part-0.parquet"))
+
+
+@given(
+    lower=st.integers(MIDNIGHT - 7201, MIDNIGHT + 7200),
+    width=st.integers(2, 7201),
+)
+@settings(max_examples=15, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_read_window_keeps_exactly_the_window_hours(spark, tmp_path, lower, width):
+    """The kept partitions are exactly the hours holding some integer
+    ts in the open window (lower, upper): no hour is dropped that the
+    row filter would keep, none is listed whose rows it would all
+    skip."""
+    import uuid
+
+    upper = lower + width
+    grid = range(MIDNIGHT // 3600 - 3, MIDNIGHT // 3600 + 5)
+    root = str(tmp_path / uuid.uuid4().hex)
+    _hour_per_partition(root, grid, lower + 1)
+    kept = {r.CountPkt for r in read_window(
+        spark, root, lower=lower, upper=upper).collect()}
+    assert kept == set(range((lower + 1) // 3600, (upper - 1) // 3600 + 1))
 
 
 def test_hourly_reference_naming_roundtrip(spark, tmp_path):
@@ -133,6 +180,44 @@ def test_alerts_sink_ttl_window(spark, tmp_path):
     recent = recent_alerts(spark, path, now=NOW, ttl_sec=300)
     assert recent.count() == 1
     assert recent_alerts(spark, str(tmp_path / "missing"), now=NOW, ttl_sec=300) is None
+
+
+def test_append_is_one_driver_written_file_per_call(spark, tmp_path):
+    """Two appends at the same detected_at publish two part files and
+    leave no temporary file; the files carry ALERTS_SCHEMA's physical
+    types and recent_alerts reads both rows."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    path = str(tmp_path / "alerts")
+    other = dict(RULE, dst_ip="10.100.7.3", sum_val=7)
+    append_alerts(spark, [RULE], path, detected_at=NOW - 10)
+    append_alerts(spark, [other], path, detected_at=NOW - 10)
+    files = alert_files(path)
+    assert len(files) == 2 and all(f.startswith("part-") for f in files)
+    assert not [f for f in os.listdir(path) if "_tmp-" in f]
+    for f in files:
+        schema = pq.ParquetFile(os.path.join(path, f)).schema
+        assert [schema.column(i).physical_type for i in range(6)] == [
+            "INT32", "INT32", "INT64", "INT64", "BYTE_ARRAY", "INT64"
+        ]
+        assert str(schema.column(4).logical_type) == "String"
+    recent = recent_alerts(spark, path, now=NOW, ttl_sec=300)
+    assert sorted((r.dst_ip, r.sum_val) for r in recent.collect()) == [
+        (IP, 100), (174327555, 7)
+    ]
+
+
+def test_append_rejects_null_in_not_null_field(spark, tmp_path):
+    """ALERTS_SCHEMA declares num_protocol NOT NULL: a rule without one
+    raises before anything is written."""
+    import pytest
+
+    path = str(tmp_path / "alerts")
+    with pytest.raises(ValueError, match="'num_protocol'"):
+        append_alerts(spark, [dict(RULE, num_protocol=None)], path, detected_at=NOW)
+    assert not (tmp_path / "alerts").exists()
 
 
 def test_compact_alerts_bounds_table(spark, tmp_path):

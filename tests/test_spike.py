@@ -302,3 +302,42 @@ def test_negative_sums_floor_toward_minus_infinity(spark):
         q=P.quotient_amplification, limit_new=P.limit_new_data,
     ).collect()
     assert (r.sum_val, r.prev_sum_val) == (-7 // 3, -3 // 2)  # (-3, -2)
+
+
+def test_statement_text_holds_no_values(spark, monkeypatch):
+    """The detector's statement is one fixed string: every `now`
+    derived bound and every threshold binds a parameter marker, so the
+    text is byte-identical across cycles and DetectorParams."""
+    from dataclasses import replace
+
+    from pyspark.sql import SparkSession
+
+    sent = []
+    real_sql = SparkSession.sql
+
+    def recording_sql(self, sqlQuery, args=None, **kwargs):
+        sent.append((sqlQuery, args))
+        return real_sql(self, sqlQuery, args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", recording_sql)
+    hist = hist_df(spark, key_rows((65, 11, IP_A), CUR_TS, 9000))
+    zones = spark.createDataFrame([(IP_A,)], ZONES_SCHEMA)
+    prior = spark.createDataFrame(
+        [(68, 11, IP_C, NOW - 100)],
+        "num_protocol int, type_proto int, dst_ip long, detected_at long",
+    )
+    other = replace(P, quotient_amplification=5, limit_new_data=1234,
+                    limit_new_data_net=4321, limit_detect_time_sec=77)
+    for params in (P, other):
+        for now in (NOW, NOW + 3601):
+            detect_spikes(hist, params=params, now=now, zones=zones,
+                          prior_alerts=prior)
+    texts = {text for text, _ in sent}
+    assert len(sent) == 4 and len(texts) == 1
+    (text,) = texts
+    for _, args in sent:
+        for key, value in args.items():
+            assert f":{key}" in text
+            if isinstance(value, int) and value >= 77:
+                assert str(value) not in text
+    assert len({tuple(sorted(a.items())) for _, a in sent}) == 4

@@ -38,7 +38,7 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 from pyspark.sql import DataFrame, functions as F  # noqa: E402
 
 from hha_spark.session import get_spark  # noqa: E402
-from hha_spark.sources.tables import US_PER_DAY, events_ts_us, load_table  # noqa: E402
+from hha_spark.sources.tables import events_ts_us, load_table  # noqa: E402
 
 SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -511,7 +511,12 @@ def probes(spark, k: int):
         robust_outlier_report,
     )
     from hha_spark.operators.similarity import cosine_pairs_arrow
-    from hha_spark.operators.spike import fused_window_compare
+    from hha_spark.operators.spike import run_spike_statement
+    from hha_spark.queries.spike_events import (
+        EVENTS_ARGS,
+        EVENTS_SHAPE,
+        with_now,
+    )
     from hha_spark.operators.text import (
         perplexity_buckets,
         quality_score,
@@ -525,16 +530,9 @@ def probes(spark, k: int):
     emb = scaled_embeddings(spark, k).persist()
     ev.count(), docs.count(), emb.count()
 
-    bounds = ev.agg(F.max("ts_us").alias("now_us"))
-
     def spike():
-        return fused_window_compare(
-            ev.join(F.broadcast(bounds)),
-            key_cols=["user_id", "event_type"], value_col="value",
-            time_col="ts_us",
-            cur_lower=F.col("now_us") - F.lit(2 * US_PER_DAY),
-            prev_upper=F.col("now_us") - F.lit(7 * US_PER_DAY),
-            q=1.5, limit_new=40,
+        return run_spike_statement(
+            with_now(ev), EVENTS_SHAPE, "SELECT * FROM fused", EVENTS_ARGS
         )
 
     return {
