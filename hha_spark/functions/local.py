@@ -54,7 +54,6 @@ def sql_over_views(
     frames: dict[str, DataFrame] | None = None,
     *,
     args: dict[str, object] | None = None,
-    **literals,
 ) -> DataFrame:
     """Run a fused SQL statement with every referenced frame
     registered as an EXPLICIT temp view — never via ``spark.sql``'s
@@ -73,29 +72,23 @@ def sql_over_views(
     per-batch clone, so nothing leaks to the main session). Every
     frame must already live on `session`.
 
-    `args` pass through to ``session.sql`` and bind the statement's
-    named parameter markers (``:name``): values that change per call
-    belong there, so the statement text stays the same string.
-    `literals` are formatted into the SQL text, so only int and float
-    (never bool) are accepted; anything else raises TypeError here
-    rather than as a parse error far away. Reusing one view name per
+    `template` is formatted with the view names only. Every value
+    enters through `args`, which pass through to ``session.sql`` and
+    bind the statement's named parameter markers (``:name``), so the
+    statement text stays the same string from call to call and no
+    value is ever spliced into SQL text. Reusing one view name per
     key is safe only because classic PySpark analyzes ``session.sql``
     eagerly: the returned frame is bound to the plan the view names
     NOW, so a later call re-pointing the view cannot retarget it.
     Spark Connect analyzes lazily — audit this helper before any move
     to Connect.
     """
-    for key, val in literals.items():
-        if isinstance(val, bool) or not isinstance(val, (int, float)):
-            raise TypeError(
-                f"sql_over_views literal {key}={val!r}: only int or float"
-            )
     names = {}
     for key, df in (frames or {}).items():
         name = f"_hha_fused_{key}"
         df.createOrReplaceTempView(name)
         names[key] = name
-    return session.sql(template.format(**names, **literals), args=args)
+    return session.sql(template.format(**names), args=args)
 
 
 def _struct(schema: str | StructType) -> StructType:

@@ -229,52 +229,6 @@ def _lloyd(
     return cur, cents
 
 
-def train_ivf(
-    emb: DataFrame,
-    *,
-    iters: int = 2,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    train_key: str | None = None,
-) -> tuple[DataFrame, DataFrame]:
-    """Lloyd-iterate from the sign-bit seed; returns (assignment,
-    centroids) where assignment is argmin w.r.t. the returned
-    centroids (the invariant a probe-list query needs).
-
-    assignment: (vec_id, cell) — a narrow map over emb.
-    centroids: (cell, idx, c) — the collected final codebook.
-    """
-    assigned, cents = _lloyd(
-        emb, iters=iters, id_col=id_col, vec_col=vec_col, train_key=train_key
-    )
-    cells = assigned.select(
-        "vec_id", F.element_at("cells", 1).alias("cell")
-    )
-    # Arrow table, not a Python list: the centroid frame is a
-    # broadcast side re-evaluated per consumer join, and
-    # createDataFrame(list) re-runs per-row verification in every
-    # such job (measured 3-10x the Arrow path; see operators/pq.py
-    # _lut_frame and operators/cluster.py for the same pathology)
-    import pyarrow as pa
-
-    flat = [
-        (cell, idx, c)
-        for cell, cvec in sorted(cents.items())
-        for idx, c in enumerate(cvec)
-    ]
-    cent_df = emb.sparkSession.createDataFrame(
-        pa.table(
-            {
-                "cell": pa.array([r[0] for r in flat], pa.int32()),
-                "idx": pa.array([r[1] for r in flat], pa.int32()),
-                "c": pa.array([r[2] for r in flat], pa.float64()),
-            }
-        ),
-        schema="cell int, idx int, c double",
-    )
-    return cells, cent_df
-
-
 def ivf_topk(
     emb: DataFrame,
     *,

@@ -70,25 +70,6 @@ def norm_sq_scaled(v):
     return dot_scaled(v, v)
 
 
-def _norms_scaled(
-    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(id, norm_sq) in picounits — the internal kernel currency."""
-    return df.select(
-        F.col(id_col), norm_sq_scaled(F.col(vec_col)).alias("norm_sq")
-    )
-
-
-def vector_norms(
-    df: DataFrame, *, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """(id, norm_sq DOUBLE) — exact quantized sum of squares, in
-    natural units."""
-    return _norms_scaled(df, id_col=id_col, vec_col=vec_col).withColumn(
-        "norm_sq", F.col("norm_sq") / F.lit(float(_Q))
-    )
-
-
 def cosine_pairs(
     queries: DataFrame,
     candidates: DataFrame,

@@ -43,7 +43,9 @@ and shuffled once for both windows.
 
 `window_averages` and `rollup_averages` are the two-frame building
 blocks (one frame per window) that the equivalence tests hold the
-statement to.
+statement to. The tests read one CTE alone by running the statement
+with a `SELECT * FROM fused` tail (`run_spike_statement`), so they
+check the statement the detector runs, not a copy of it.
 """
 
 from __future__ import annotations
@@ -292,30 +294,6 @@ def run_spike_statement(
         df.sparkSession,
         spike_statement(shape, integral=_integral(df, shape.value), tail=tail),
         {"src": df, **(frames or {})}, args=dict(args),
-    )
-
-
-def fused_window_compare(
-    df: DataFrame,
-    *,
-    key_cols: Sequence[str],
-    value_col: str,
-    time_col: str,
-    cur_lower: int,
-    prev_upper: int,
-    q: float,
-    limit_new: int,
-) -> DataFrame:
-    """The statement's `fused` CTE alone (S1+S3+S4, see `_fused_cte`)
-    over `df` with integer window bounds: per key seen in either
-    window, (*key_cols, sum_val, prev_sum_val, prev_sum_val2)."""
-    shape = SpikeShape(tuple(key_cols), key_cols[-1], "", value_col, time_col)
-    return sql_over_views(
-        df.sparkSession,
-        f"WITH {_fused_cte(shape, _integral(df, value_col))}\nSELECT * FROM fused",
-        {"src": df},
-        args={"cur_lower": cur_lower, "prev_upper": prev_upper, "q": q,
-              "limit_new": limit_new},
     )
 
 

@@ -80,8 +80,7 @@ the write to the read side (measured on the epoch axis by
 tools/scale_probe.py::_funnel_epoch_axis_probe — per-epoch write
 wall grows linearly with state, matching the fold, never faster).
 State is the curated corpus itself — exactly what a curation
-pipeline must store anyway; `kind_partitions` spreads the rewrite
-at volumes where one task per kind is not enough.
+pipeline must store anyway.
 
 Flush: survivors = quality docs not dropped by their cluster label;
 temperature mixture + token-budget fill run once over the stored
@@ -170,7 +169,7 @@ GROUP BY band, key
 # candidate generation (new-new / new-hist pair split, no distinct)
 # + Jaccard verification — the former bn_ok/cand/toks_all/edges chain
 _EDGES_SQL = """
-WITH under AS (SELECT band, key FROM {bcnt} WHERE n <= {cap}),
+WITH under AS (SELECT band, key FROM {bcnt} WHERE n <= :cap),
   bn_ok AS (
     SELECT b.doc_id, b.band, b.key FROM {bands_new} b
     LEFT SEMI JOIN under u ON b.band = u.band AND b.key = u.key),
@@ -207,52 +206,52 @@ FROM {batch} GROUP BY source
 UNION ALL
 SELECT 'crossed', CAST(NULL AS BIGINT), CAST(NULL AS BIGINT),
        CAST(NULL AS STRING), CAST(count(1) AS BIGINT)
-FROM {bcnt} WHERE n_prev >= 2 AND n_prev <= {cap} AND n > {cap}
+FROM {bcnt} WHERE n_prev >= 2 AND n_prev <= :cap AND n > :cap
 UNION ALL
 SELECT 'en', doc_id, doc_id_b, CAST(NULL AS STRING),
        CAST(NULL AS BIGINT)
-FROM (SELECT doc_id, doc_id_b FROM {edges} LIMIT {lim})
+FROM (SELECT doc_id, doc_id_b FROM {edges} LIMIT :lim)
 UNION ALL
 SELECT 'pl', doc_id, label, CAST(NULL AS STRING), CAST(NULL AS BIGINT)
-FROM (SELECT doc_id, label FROM {labels} LIMIT {lim})
+FROM (SELECT doc_id, label FROM {labels} LIMIT :lim)
 """
 
 # the unified kind-partitioned write frame: six typed-null-padded
 # branches, each coalesced BEFORE the union so the write stays
-# exchange-free and partitions stay pure-kind (per-branch COALESCE
-# hints == the former per-branch .coalesce(kp); plan-asserted in
-# tests/test_curation_stream.py) — the former six-_wide chain
+# exchange-free and partitions stay pure-kind, one task per kind
+# (plan-asserted in tests/test_curation_stream.py) — the former
+# six-_wide chain
 _UNIFIED_SQL = """
-SELECT /*+ COALESCE({kp}) */ doc_id, CAST(NULL AS BIGINT) AS doc_id_b,
+SELECT /*+ COALESCE(1) */ doc_id, CAST(NULL AS BIGINT) AS doc_id_b,
        source, n_tokens, tokens, CAST(NULL AS INT) AS band,
        CAST(NULL AS STRING) AS key, CAST(NULL AS BIGINT) AS n,
        CAST(NULL AS BIGINT) AS label, 'doc' AS kind
 FROM {qdocs}
 UNION ALL
-SELECT /*+ COALESCE({kp}) */ doc_id, CAST(NULL AS BIGINT),
+SELECT /*+ COALESCE(1) */ doc_id, CAST(NULL AS BIGINT),
        CAST(NULL AS STRING), CAST(NULL AS BIGINT),
        CAST(NULL AS ARRAY<STRING>), band, key, CAST(NULL AS BIGINT),
        CAST(NULL AS BIGINT), 'band'
 FROM {bands_new}
 UNION ALL
-SELECT /*+ COALESCE({kp}) */ doc_id, doc_id_b, CAST(NULL AS STRING),
+SELECT /*+ COALESCE(1) */ doc_id, doc_id_b, CAST(NULL AS STRING),
        CAST(NULL AS BIGINT), CAST(NULL AS ARRAY<STRING>), band, key,
        CAST(NULL AS BIGINT), CAST(NULL AS BIGINT), 'edge'
 FROM {edges}
 UNION ALL
-SELECT /*+ COALESCE({kp}) */ CAST(NULL AS BIGINT),
+SELECT /*+ COALESCE(1) */ CAST(NULL AS BIGINT),
        CAST(NULL AS BIGINT), CAST(NULL AS STRING),
        CAST(NULL AS BIGINT), CAST(NULL AS ARRAY<STRING>), band, key,
        n, CAST(NULL AS BIGINT), 'bcnt'
 FROM {bcnt}
 UNION ALL
-SELECT /*+ COALESCE({kp}) */ node AS doc_id, CAST(NULL AS BIGINT),
+SELECT /*+ COALESCE(1) */ node AS doc_id, CAST(NULL AS BIGINT),
        CAST(NULL AS STRING), CAST(NULL AS BIGINT),
        CAST(NULL AS ARRAY<STRING>), CAST(NULL AS INT),
        CAST(NULL AS STRING), CAST(NULL AS BIGINT), label, 'label'
 FROM {labels}
 UNION ALL
-SELECT /*+ COALESCE({kp}) */ CAST(NULL AS BIGINT),
+SELECT /*+ COALESCE(1) */ CAST(NULL AS BIGINT),
        CAST(NULL AS BIGINT), source, CAST(NULL AS BIGINT),
        CAST(NULL AS ARRAY<STRING>), CAST(NULL AS INT),
        CAST(NULL AS STRING), n, CAST(NULL AS BIGINT), 'raw'
@@ -353,7 +352,6 @@ def make_curation_funnel_processor(
     max_bucket: int | None = None,
     stats: dict | None = None,
     compact_every: int | None = None,
-    kind_partitions: int = 1,
     label_spill_rows: int | None = None,
 ):
     """Per-micro-batch body (see module docstring for the design and
@@ -499,11 +497,11 @@ def make_curation_funnel_processor(
                 "docs_hist": docs_hist,
                 "qdocs": qdocs,
             },
-            cap=cap,
+            args={"cap": cap},
         ).persist()
         # the under-cap bucket set, needed again only on the rare
         # cap-crossing recompute paths below
-        under = bcnt.where(f"n <= {cap}").select("band", "key")
+        under = bcnt.where(F.col("n") <= cap).select("band", "key")
         try:
             # ONE tagged-union Arrow probe per epoch answers FIVE
             # questions: is the batch empty, the raw per-source
@@ -546,8 +544,7 @@ def make_curation_funnel_processor(
                     "edges": edges_new,
                     "labels": prev_labels,
                 },
-                cap=cap,
-                lim=probe_cap + 1,
+                args={"cap": cap, "lim": probe_cap + 1},
             )
             # split the probe timer at the action boundary: t_build is
             # the driver-side cost (py4j plan construction of the
@@ -680,12 +677,7 @@ def make_curation_funnel_processor(
             # (labels), and the union's partitions stay pure-kind, so
             # partitionBy("kind") emits one file per kind with no
             # repartition shuffle (the previous shape; its exchange
-            # was ~25% of the write job at gate scale). One task per
-            # kind is right at batch scale; at 100 TB volumes raise
-            # `kind_partitions` so each kind spreads over that many
-            # tasks — the write stays exchange-free because coalesce
-            # only merges cached partitions.
-            kp = kind_partitions
+            # was ~25% of the write job at gate scale).
             unified = sql_over_views(
                 session,
                 _UNIFIED_SQL,
@@ -697,7 +689,6 @@ def make_curation_funnel_processor(
                     "labels": labels,
                     "raw": raw_rows,
                 },
-                kp=kp,
             )
             # non-empty by construction: kind=raw has >= 1 row for any
             # non-empty batch. static overwrite pinned for retry

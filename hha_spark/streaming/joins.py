@@ -126,7 +126,7 @@ _K_ATTR = "attr"
 # and the unified kind-partitioned write frame.
 _ATTR_EPOCH_SQL = """
 WITH _m AS (
-    SELECT user_id, ts_s, etype FROM {ev} WHERE ts_s < {wm}),
+    SELECT user_id, ts_s, etype FROM {ev} WHERE ts_s < :wm),
   _clicks AS (
     SELECT user_id, ts_s FROM {store} WHERE kind = 'click'
     UNION ALL
@@ -136,18 +136,18 @@ WITH _m AS (
     FROM (SELECT user_id, ts_s FROM _m WHERE etype = 'purchase') p
     JOIN _clicks c
       ON p.user_id = c.user_id
-     AND p.ts_s >= c.ts_s AND p.ts_s <= c.ts_s + {max_delay})
+     AND p.ts_s >= c.ts_s AND p.ts_s <= c.ts_s + :max_delay)
 SELECT user_id, ts_s, ts2_s, CAST(NULL AS STRING) AS etype,
        'attr' AS kind
 FROM _pairs
 UNION ALL
 SELECT user_id, ts_s, CAST(NULL AS BIGINT) AS ts2_s,
        CAST(NULL AS STRING) AS etype, 'click' AS kind
-FROM _clicks WHERE ts_s + {max_delay} >= {wm}
+FROM _clicks WHERE ts_s + :max_delay >= :wm
 UNION ALL
 SELECT user_id, ts_s, CAST(NULL AS BIGINT) AS ts2_s, etype,
        'buf' AS kind
-FROM {ev} WHERE ts_s >= {wm}
+FROM {ev} WHERE ts_s >= :wm
 """
 
 # Fused end-of-stream flush tail: buffered purchases join the click
@@ -163,7 +163,7 @@ FROM (SELECT user_id, ts_s FROM {store}
       WHERE kind = 'buf' AND etype = 'purchase') p
 JOIN _clicks c
   ON p.user_id = c.user_id
- AND p.ts_s >= c.ts_s AND p.ts_s <= c.ts_s + {max_delay}
+ AND p.ts_s >= c.ts_s AND p.ts_s <= c.ts_s + :max_delay
 """
 
 
@@ -213,8 +213,7 @@ def make_disorder_attribution_processor(
                 session,
                 _ATTR_EPOCH_SQL,
                 frames={"ev": all_ev, "store": store},
-                wm=wm,
-                max_delay=max_delay_sec,
+                args={"wm": wm, "max_delay": max_delay_sec},
             )
             # non-empty by construction: the max event satisfies
             # ts = max >= max - disorder_sec = wm, so it is always
@@ -298,7 +297,7 @@ def final_attributions(
         frames={
             "store": _read_versioned(spark, store_root, _ATTR_STORE_SCHEMA)
         },
-        max_delay=max_delay_sec,
+        args={"max_delay": max_delay_sec},
     )
     emitted = read_kind_history(
         spark,

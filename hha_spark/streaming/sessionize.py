@@ -182,7 +182,7 @@ _MERGE_CTES = """
                  OR start_us - lag(end_us) OVER (PARTITION BY user_id
                                                  ORDER BY start_us,
                                                           end_us)
-                    > {gap_us}
+                    > :gap_us
                 THEN 1 ELSE 0 END AS _new
     FROM _iv),
   _y AS (
@@ -243,18 +243,18 @@ WITH _iv AS (
     UNION ALL
     SELECT user_id, ts_us AS start_us, ts_us AS end_us,
            CAST(1 AS BIGINT) AS n_events
-    FROM {ev} WHERE ts_us <= {wm}),
+    FROM {ev} WHERE ts_us <= :wm),
 """
     + _MERGE_CTES
     + """
 SELECT user_id, start_us, end_us, n_events,
-       CASE WHEN end_us < {wm} - {gap_us}
+       CASE WHEN end_us < :wm - :gap_us
             THEN 'closed' ELSE 'open' END AS kind
 FROM _merged
 UNION ALL
 SELECT user_id, ts_us AS start_us, ts_us AS end_us,
        CAST(1 AS BIGINT) AS n_events, 'buf' AS kind
-FROM {ev} WHERE ts_us > {wm}
+FROM {ev} WHERE ts_us > :wm
 """
 )
 
@@ -443,7 +443,7 @@ def make_sessionize_processor(
                 "state": state,
                 "batch": batch_df.select("user_id", "ts_us"),
             },
-            gap_us=gap_us,
+            args={"gap_us": gap_us},
         )
         # non-empty by construction: a non-empty batch leaves every
         # active user exactly one kind=open row.
@@ -689,7 +689,7 @@ def make_disorder_sessionize_processor(
         try:
             # one driver-side action doubles as the empty-epoch probe
             # AND materializes the persist the write job reuses; wm
-            # then enters the write plan as a literal
+            # then binds the statement's :wm marker
             (mx,) = all_ev.agg(F.max("ts_us")).first()
             if mx is None:  # empty batch AND empty buffer: no-op epoch
                 return
@@ -701,8 +701,7 @@ def make_disorder_sessionize_processor(
                 session,
                 _DISORDER_EPOCH_SQL,
                 frames={"store": store, "ev": all_ev},
-                wm=wm,
-                gap_us=gap_us,
+                args={"wm": wm, "gap_us": gap_us},
             )
             # non-empty by construction: the max event is always
             # immature (disorder_us > 0), so kind=buf always exists.
@@ -771,6 +770,6 @@ def final_sessions_disorder(
         spark,
         _DISORDER_FLUSH_SQL,
         frames={"store": _read_versioned(spark, store_root, _STORE_SCHEMA)},
-        gap_us=gap_us,
+        args={"gap_us": gap_us},
     )
     return read_closed_sessions(spark, store_root).unionByName(tail)

@@ -524,9 +524,9 @@ def test_over_envelope_fallback_on_crossing_epoch(spark, tmp_path, monkeypatch):
 
 def test_fused_unified_write_frame_is_exchange_free(spark):
     """The fused _UNIFIED_SQL must keep the round-10 exchange-free
-    write shape: each kind branch coalesced BEFORE the union (per-
-    branch COALESCE hints == the former per-branch .coalesce(kp)), so
-    partitionBy("kind") never repartitions."""
+    write shape: each kind branch coalesced to one partition BEFORE
+    the union (per-branch COALESCE(1) hints), so partitionBy("kind")
+    never repartitions."""
     from hha_spark.functions.local import sql_over_views
     from hha_spark.streaming.curation_stream import _UNIFIED_SQL
 
@@ -554,7 +554,6 @@ def test_fused_unified_write_frame_is_exchange_free(spark):
         spark, _UNIFIED_SQL,
         frames={"qdocs": qdocs, "bands_new": bands, "edges": edges,
                 "bcnt": bcnt, "labels": labels, "raw": raw},
-        kp=1,
     )
     plan = unified._jdf.queryExecution().executedPlan().toString()
     # the only exchanges allowed are the fixture repartitions above

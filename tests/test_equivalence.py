@@ -14,9 +14,10 @@ from hha_spark.config import DetectorParams
 from hha_spark.functions.ip import ip_to_net24
 from hha_spark.operators.dedup import jaccard_pairs, with_token_set
 from hha_spark.operators.spike import (
+    SpikeShape,
     detect_spikes,
-    fused_window_compare,
     rollup_averages,
+    run_spike_statement,
     window_averages,
 )
 from hha_spark.operators.temporal import asof_join
@@ -112,10 +113,12 @@ def test_fused_equals_two_frame_compare(spark, rows):
     fused = {
         r.k: (r.sum_val, r.prev_sum_val if r.prev_sum_val is not None else limit,
               r.prev_sum_val2)
-        for r in fused_window_compare(
-            df, key_cols=["k"], value_col="v", time_col="ts",
-            cur_lower=NOW - 90, prev_upper=NOW - 300, q=q,
-            limit_new=limit,
+        # every marker is bound, the unread alert CTEs' too
+        for r in run_spike_statement(
+            df, SpikeShape(("k",), "k", "k", "v", "ts"), "SELECT * FROM fused",
+            {"cur_lower": NOW - 90, "prev_upper": NOW - 300, "q": q,
+             "limit_new": limit, "limit_new_net": limit,
+             "scope_entity": "ip", "scope_bucket": "net"},
         ).collect()
         if r.sum_val is not None  # two-frame output = cur keys only
     }

@@ -8,10 +8,16 @@ with ~17 s of executor wait and ~0.3 s of CPU per probe)."""
 
 from __future__ import annotations
 
+from functools import partial
+
+import pytest
+
 from hha_spark.functions.local import arrow_rows_frame, sql_over_views
+from hha_spark.streaming.joins import make_disorder_attribution_processor
 from hha_spark.streaming.sessionize import (
     _empty_frame,
     _read_versioned,
+    make_disorder_sessionize_processor,
     read_kind_history,
 )
 
@@ -103,8 +109,6 @@ def test_arrow_rows_frame_rejects_null_in_not_null_field(spark):
     """pyarrow 16.1 accepts a null under a non-nullable field (even
     with validate(full=True)), so the helper itself must reject it:
     ZONES_SCHEMA declares ip NOT NULL."""
-    import pytest
-
     from hha_spark.schemas import ZONES_SCHEMA
 
     assert arrow_rows_frame(spark, [(1,), (2,)], ZONES_SCHEMA).count() == 2
@@ -112,15 +116,58 @@ def test_arrow_rows_frame_rejects_null_in_not_null_field(spark):
         arrow_rows_frame(spark, [(1,), (None,)], ZONES_SCHEMA)
 
 
-def test_sql_over_views_rejects_non_numeric_literals(spark):
-    """Literals are formatted into the SQL text: only int and float
-    pass, so a string (or a bool, an int subclass) fails at the
-    helper instead of as a parse error or an injected clause."""
-    import pytest
+# two epochs per disorder processor, each raising the watermark
+_EPOCHS = {
+    "sessionize": (
+        partial(make_disorder_sessionize_processor, gap_us=100, disorder_us=50),
+        "user_id long, ts_us long",
+        [[(1, 0), (1, 500)], [(1, 1000)]],
+    ),
+    "attribution": (
+        partial(
+            make_disorder_attribution_processor,
+            max_delay_sec=100,
+            disorder_sec=200,
+        ),
+        "user_id long, ts_s long, etype string",
+        [
+            [(1, 0, "click"), (1, 80, "purchase"), (1, 500, "click")],
+            [(1, 1000, "purchase")],
+        ],
+    ),
+}
 
-    sql = "SELECT {v} AS v"
-    assert sql_over_views(spark, sql, v=3).collect()[0]["v"] == 3
-    assert sql_over_views(spark, sql, v=0.5).collect()[0]["v"] == 0.5
-    for bad in ("1 AS v, 2", True, None):
-        with pytest.raises(TypeError, match="only int or float"):
-            sql_over_views(spark, sql, v=bad)
+
+@pytest.mark.parametrize("processor", sorted(_EPOCHS))
+def test_disorder_epoch_statement_text_holds_no_values(
+    spark, tmp_path, monkeypatch, processor
+):
+    """The disorder processors' per-epoch statement is one fixed
+    string: the epoch's watermark and the gap/delay bounds bind
+    parameter markers, so two epochs with different watermarks send
+    byte-identical SQL text."""
+    from pyspark.sql import SparkSession
+
+    make, schema, batches = _EPOCHS[processor]
+    proc = make(spark, store_root=str(tmp_path / "store"))
+
+    sent = []
+    real_sql = SparkSession.sql
+
+    def recording_sql(self, sqlQuery, args=None, **kwargs):
+        sent.append((sqlQuery, args))
+        return real_sql(self, sqlQuery, args, **kwargs)
+
+    monkeypatch.setattr(SparkSession, "sql", recording_sql)
+    per_epoch = []
+    for epoch, rows in enumerate(batches):
+        sent.clear()
+        proc(spark.createDataFrame(rows, schema), epoch)
+        per_epoch.append(list(sent))
+
+    [(fused0, wm0)], [(fused1, wm1)] = (
+        [(t, a["wm"]) for t, a in calls if a and "wm" in a]
+        for calls in per_epoch
+    )
+    assert fused0 == fused1 and wm0 != wm1
+    assert ":wm" in fused0 and str(wm0) not in fused0

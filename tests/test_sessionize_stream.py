@@ -579,7 +579,7 @@ def _fused_merge_rows(spark, df):
         + _MERGE_CTES
         + "SELECT user_id, start_us, end_us, n_events FROM _merged"
     )
-    return spark.sql(stmt, iv=df, gap_us=GAP).collect()
+    return spark.sql(stmt, args={"gap_us": GAP}, iv=df).collect()
 
 
 def _column_chain_merge(intervals, *, gap_us):

@@ -10,7 +10,7 @@ from hha_spark.operators.similarity import (
     cosine_pairs,
     cosine_pairs_for,
     cosine_topk,
-    vector_norms,
+    norm_sq_scaled,
 )
 
 VECS = [
@@ -26,7 +26,13 @@ def vec_df(spark):
 
 
 def test_vector_norms(spark):
-    out = {r.vec_id: r.norm_sq for r in vector_norms(vec_df(spark)).collect()}
+    """Exact quantized sum of squares, in 1e-12 units."""
+    out = {
+        r.vec_id: r.norm_sq / 1e12
+        for r in vec_df(spark).select(
+            "vec_id", norm_sq_scaled(F.col("embedding")).alias("norm_sq")
+        ).collect()
+    }
     assert out[1] == 1.0 and out[4] == 4.0
     assert abs(out[3] - 2.0) < 1e-9
 
@@ -69,19 +75,19 @@ def clustered_df(spark):
 
 
 def test_ivf_training_is_deterministic_and_clusters(spark):
-    from hha_spark.operators.ivf import train_ivf
+    from hha_spark.operators.ivf import _lloyd
 
-    cells1, cent1 = train_ivf(clustered_df(spark), iters=2)
-    cells2, _ = train_ivf(clustered_df(spark), iters=2)
-    a1 = {r.vec_id: r.cell for r in cells1.collect()}
-    a2 = {r.vec_id: r.cell for r in cells2.collect()}
+    cells1, cent1 = _lloyd(clustered_df(spark), iters=2)
+    cells2, _ = _lloyd(clustered_df(spark), iters=2)
+    a1 = {r.vec_id: r.cells[0] for r in cells1.collect()}
+    a2 = {r.vec_id: r.cells[0] for r in cells2.collect()}
     assert a1 == a2                       # same data -> same codebook
     assert a1[1] == a1[2] == a1[3]        # each cluster lands together
     assert a1[4] == a1[5] == a1[6]
     assert a1[1] != a1[4]
-    # centroids exist only for non-empty cells and cover every dim
-    cents = cent1.collect()
-    assert {c.idx for c in cents} == {0, 1}
+    # every assigned cell has a centroid, and centroids cover every dim
+    assert set(a1.values()) <= set(cent1)
+    assert {len(c) for c in cent1.values()} == {2}
 
 
 def test_ivf_full_probe_matches_brute_force(spark):

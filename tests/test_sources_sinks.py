@@ -364,32 +364,6 @@ def test_cycle_observation_metrics(spark, tmp_path):
     assert metrics["n_net_alerts"] == 0
 
 
-def test_binary_file_ingest_feeds_blob_stats(spark, tmp_path):
-    """binaryFile source -> opaque blob column -> Arrow-batched stats:
-    the multimodal ingest front door, end to end."""
-    import hashlib
-
-    from hha_spark.operators.multimodal import blob_stats
-    from hha_spark.sources.io import read_binary_files
-
-    payloads = {7: b"\x89PNG-fake-bytes", 42: b"RIFF-fake-audio-payload"}
-    media = tmp_path / "media"
-    media.mkdir()
-    for doc_id, blob in payloads.items():
-        (media / f"{doc_id}.bin").write_bytes(blob)
-    (media / "ignore.txt").write_bytes(b"not matched by the glob")
-
-    df = read_binary_files(spark, str(media), glob="*.bin")
-    rows = {r.doc_id: r for r in df.collect()}
-    assert set(rows) == set(payloads)
-    assert rows[7].n_bytes == len(payloads[7])
-
-    stats = {r.doc_id: r for r in blob_stats(df).collect()}
-    for doc_id, blob in payloads.items():
-        assert stats[doc_id].n_bytes == len(blob)
-        assert stats[doc_id].blob_md5 == hashlib.md5(blob).hexdigest()
-
-
 def test_events_ts_us_both_encodings(spark):
     """events_ts_us yields the same integer micros whether ts arrives
     as BIGINT nanoseconds (TIMESTAMP(NANOS) fixture read via
@@ -433,49 +407,3 @@ def test_try_load_table_retries_then_none(spark, tmp_path):
     spark.range(3).toDF("x").write.parquet(f"{tmp_path}/good.parquet")
     df = try_load_table(spark, str(tmp_path), "good", retries=0)
     assert df is not None and df.count() == 3
-
-
-def test_training_shard_writer_roundtrip(spark, tmp_path):
-    """Shard writer contract: Hive partition dirs per source, shard
-    files bounded by maxRecordsPerFile, lossless round-trip, and
-    dynamic partition overwrite replacing only the rewritten source."""
-    from hha_spark.sinks.corpus import (
-        read_training_shards,
-        write_training_shards,
-    )
-    from hha_spark.sources.tables import load_table
-
-    docs = load_table(spark, "/root/testdata/sf0.001", "documents")
-    out = str(tmp_path / "shards")
-    write_training_shards(docs, out, max_records_per_file=7)
-
-    import glob as globmod
-
-    part_dirs = sorted(
-        p.split("source=")[1] for p in globmod.glob(f"{out}/source=*")
-    )
-    assert part_dirs == sorted(
-        r.source for r in docs.select("source").distinct().collect()
-    )
-    # no shard exceeds the record cap
-    for f in globmod.glob(f"{out}/source=*/*.parquet"):
-        import pyarrow.parquet as pq
-
-        assert pq.ParquetFile(f).metadata.num_rows <= 7
-
-    back = read_training_shards(spark, out)
-    assert back.count() == docs.count()
-
-    # dynamic overwrite: rewriting ONE source leaves the others intact
-    one = docs.select("source").distinct().limit(1).collect()[0].source
-    write_training_shards(
-        docs.where(F.col("source") == one).limit(3),
-        out,
-        max_records_per_file=7,
-    )
-    back2 = read_training_shards(spark, out)
-    assert back2.where(F.col("source") == one).count() == 3
-    assert (
-        back2.where(F.col("source") != one).count()
-        == docs.where(F.col("source") != one).count()
-    )

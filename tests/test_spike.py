@@ -12,7 +12,12 @@ from pyspark.sql import functions as F
 
 from hha_spark.config import DetectorParams
 from hha_spark.functions.ip import net24_base
-from hha_spark.operators.spike import detect_spikes, window_averages
+from hha_spark.operators.spike import (
+    HISTOGRAM_SHAPE,
+    detect_spikes,
+    run_spike_statement,
+    window_averages,
+)
 from hha_spark.schemas import HISTOGRAM_SCHEMA, ZONES_SCHEMA
 
 P = DetectorParams()  # defaults: Q=3, L32=2500, L24=3500, TTL=300
@@ -26,6 +31,25 @@ def hist_df(spark, rows):
     """rows: (ts, num_protocol, type_proto, count_pkt, dst_ip)"""
     data = [(ts, 1, np_, tp, cnt, ip) for ts, np_, tp, cnt, ip in rows]
     return spark.createDataFrame(data, HISTOGRAM_SCHEMA)
+
+
+def fused_rows(df):
+    """The detector statement's `fused` CTE (S1+S3+S4) at NOW under P:
+    per key, (sum_val, prev_sum_val, prev_sum_val2). Spark rejects an
+    unbound marker even in an unread CTE, so the alert CTEs' markers
+    are bound too."""
+    args = {
+        "cur_lower": NOW - P.cur_window_sec,
+        "prev_upper": NOW - P.prev_window_sec,
+        "q": P.quotient_amplification,
+        "limit_new": P.limit_new_data,
+        "limit_new_net": P.limit_new_data_net,
+        "scope_entity": "ip",
+        "scope_bucket": "net",
+    }
+    return run_spike_statement(
+        df, HISTOGRAM_SHAPE, "SELECT * FROM fused", args
+    ).collect()
 
 
 def key_rows(key, ts, avg_target, n=2):
@@ -135,15 +159,7 @@ def test_drop_clamp_with_guard_ip(spark):
         key_rows((65, 11, IP_A), CUR_TS, 100) + key_rows((65, 11, IP_A), PREV_TS, 3000)
         + key_rows((68, 11, IP_B), CUR_TS, 100) + key_rows((68, 11, IP_B), PREV_TS, 1000)
     )
-    from hha_spark.operators.spike import fused_window_compare
-
-    cmp_ = fused_window_compare(
-        hist_df(spark, rows), key_cols=["num_protocol", "type_proto", "dst_ip"],
-        value_col="CountPkt", time_col="timestamp", cur_lower=NOW - 90,
-        prev_upper=NOW - 300, q=P.quotient_amplification,
-        limit_new=P.limit_new_data,
-    )
-    rows_ = {r.dst_ip: r for r in cmp_.collect()}
+    rows_ = {r.dst_ip: r for r in fused_rows(hist_df(spark, rows))}
     assert rows_[IP_A].prev_sum_val2 == 2500   # clamped
     assert rows_[IP_B].prev_sum_val2 == 1000   # guard blocked the clamp
 
@@ -261,8 +277,6 @@ def test_huge_counters_average_exactly_and_alert(spark):
     averages are exact floors and the key alerts. A DECIMAL(18,6)
     cast of such a sample is NULL in a non-ANSI session, which used to
     null the key's sum_val and silently drop its alert."""
-    from hha_spark.operators.spike import fused_window_compare
-
     big = 10**12
     cur_vals = [3 * big + 1, 3 * big + 2, 3 * big + 2]
     prev_vals = [big, big + 1]
@@ -273,11 +287,7 @@ def test_huge_counters_average_exactly_and_alert(spark):
     cur_avg = sum(cur_vals) // len(cur_vals)
     prev_avg = sum(prev_vals) // len(prev_vals)
 
-    (r,) = fused_window_compare(
-        df, key_cols=["dst_ip"], value_col="CountPkt", time_col="timestamp",
-        cur_lower=NOW - P.cur_window_sec, prev_upper=NOW - P.prev_window_sec,
-        q=P.quotient_amplification, limit_new=P.limit_new_data,
-    ).collect()
+    (r,) = fused_rows(df)
     assert (r.sum_val, r.prev_sum_val, r.prev_sum_val2) == (cur_avg, prev_avg, prev_avg)
 
     # cur/prev = 3.000000000001 > Q: the /32 and its /24 (the only
@@ -291,16 +301,10 @@ def test_huge_counters_average_exactly_and_alert(spark):
 def test_negative_sums_floor_toward_minus_infinity(spark):
     """The BIGINT floor matches floor(avg) for negative window sums,
     where plain DIV would truncate toward zero."""
-    from hha_spark.operators.spike import fused_window_compare
-
     rows = [(CUR_TS, 65, 11, v, IP_A) for v in (-7, 0, 0)] + [
         (PREV_TS, 65, 11, v, IP_A) for v in (-1, -2)
     ]
-    (r,) = fused_window_compare(
-        hist_df(spark, rows), key_cols=["dst_ip"], value_col="CountPkt",
-        time_col="timestamp", cur_lower=NOW - 90, prev_upper=NOW - 300,
-        q=P.quotient_amplification, limit_new=P.limit_new_data,
-    ).collect()
+    (r,) = fused_rows(hist_df(spark, rows))
     assert (r.sum_val, r.prev_sum_val) == (-7 // 3, -3 // 2)  # (-3, -2)
 
 

@@ -81,7 +81,10 @@ def main() -> None:
         else:
             names.append(a)
 
-    spark = get_spark("explain_audit")
+    # every Exchange line embeds the shuffle partition count
+    # (hashpartitioning(..., N)): a fixed count keeps the snapshots
+    # independent of the host's core count
+    spark = get_spark("explain_audit", shuffle_partitions=32)
     out_dir = os.path.join(".benchmarks", "plans")
     os.makedirs(out_dir, exist_ok=True)
     qs = all_queries()
