@@ -6,16 +6,20 @@ watchlist -> suppress recently-alerted keys -> append to the alerts
 table -> emit rules. The reference's hand-rolled pieces map as:
 
     wall-clock window bounds (hha.py:320-323) -> `now` parameter
-    hour-file name math (hha.py:293-301)      -> partition pruning
+    hour-file name math (hha.py:293-301)      -> `cycle_window` +
+                                                 partition pruning
     Consul thread + shared set (hha.py:41-71) -> per-cycle zones read
-    GlobalRowList TTL dict (hha.py:234-244)   -> recent_alerts anti-join
+    GlobalRowList TTL dict (hha.py:234-244)   -> recent_alerts anti-join;
+                                                 append_alerts unlinks
+                                                 files past the TTL
     collect+loop gating (hha.py:233-242)      -> broadcast semi-join
     GenerateRule stub (hha.py:248-249)        -> collect_rules output
 
-`run_cycle` is a pure function of (data, zones, alert log, now) — the
+`run_cycle` is a function of (data, zones, alert log, now) — the
 scheduler around it (cron, Airflow, a while/sleep loop) is deliberately
 out of scope; Structured Streaming covers the continuous deployment
-shape (hha_spark/streaming/).
+shape, and its micro-batch processor runs this same `run_cycle` over
+its samples table (hha_spark/streaming/spike_stream.py).
 """
 
 from __future__ import annotations
@@ -28,9 +32,25 @@ from pyspark.sql import functions as F
 from hha_spark.config import DetectorParams
 from hha_spark.operators.spike import detect_spikes
 from hha_spark.sinks.alerts import append_alerts, collect_rules, recent_alerts
-from hha_spark.sources.histograms import read_window
+from hha_spark.sources.histograms import SECONDS_PER_HOUR, read_window
 
 from hha_spark.caching import release_tracked
+
+
+def cycle_window(now: int, params: DetectorParams) -> tuple[int, int]:
+    """The open `(lower, upper)` timestamp bounds a cycle at `now` reads.
+
+    The LOWER bound matters for semantics, not just pruning: the
+    reference physically restricts the previous window to the current
+    + previous hourly file (hha.py:147,293-297), so with long data
+    retention an unbounded scan would average the baseline over all
+    history. `history_hours=2` reproduces the reference's lower edge
+    exactly; the bound sits one second before the oldest hour, since
+    `read_window`'s row filter is strict (ts > lower) and the hourly
+    file layout keeps a row on that boundary."""
+    hour_start = (now // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
+    lower = hour_start - (params.history_hours - 1) * SECONDS_PER_HOUR - 1
+    return lower, now + 1
 
 
 def run_cycle(
@@ -45,6 +65,12 @@ def run_cycle(
 ) -> list[dict]:
     """Execute one detection cycle; returns the emitted rules.
 
+    One pruned scan of `cycle_window` feeds TTL-suppressed S1-S8, run
+    by ONE action (the rules collect); the rules are appended at `now`
+    from the driver, and tracked persists are released. The streaming
+    micro-batch processor (streaming/spike_stream.py) calls this same
+    function over its samples table.
+
     Pass `metrics_out={}` to collect cycle observability for free:
     `Observation` nodes piggyback on the plan the cycle already
     executes (no extra scan, no extra job — the executor-side
@@ -54,41 +80,8 @@ def run_cycle(
     timers + print statements (hha.py stage timing)."""
     p = params or DetectorParams()
     now = int(time.time()) if now is None else now
-
-    # one pruned scan covering both windows; detect_spikes applies the
-    # row-level window bounds itself. The LOWER bound matters for
-    # semantics, not just pruning: the reference physically restricts
-    # the previous window to the current + previous hourly file
-    # (hha.py:147,293-297), so with long data retention an unbounded
-    # scan would average the baseline over all history. history_hours=2
-    # reproduces the reference's lower edge exactly.
-    hour_start = (now // 3600) * 3600
-    # read_window's row filter is strict (ts > lower); -1 keeps a row
-    # sitting exactly on the oldest hour boundary, as the hourly file
-    # layout would.
-    lower = hour_start - (p.history_hours - 1) * 3600 - 1
-    hist = read_window(spark, data_root, lower=lower, upper=now + 1)
-    return detect_and_append(
-        spark, hist, alerts_path=alerts_path, params=p, now=now,
-        zones=zones, metrics_out=metrics_out,
-    )
-
-
-def detect_and_append(
-    spark: SparkSession,
-    hist: DataFrame,
-    *,
-    alerts_path: str,
-    params: DetectorParams,
-    now: int,
-    zones: DataFrame | None = None,
-    metrics_out: dict | None = None,
-) -> list[dict]:
-    """The cycle body after the read, shared by `run_cycle` and the
-    streaming micro-batch processor (streaming/spike_stream.py):
-    TTL-suppressed S1-S8 over `hist` run by ONE action (the rules
-    collect), the rules appended at `now` from the driver, tracked
-    persists released. Returns the rules."""
+    lower, upper = cycle_window(now, p)
+    hist = read_window(spark, data_root, lower=lower, upper=upper)
     if metrics_out is not None:
         obs_in = Observation("cycle_input")
         hist = hist.observe(
@@ -98,10 +91,8 @@ def detect_and_append(
             F.max("timestamp").alias("max_ts"),
         )
 
-    prior = recent_alerts(spark, alerts_path, now=now, ttl_sec=params.limit_detect_time_sec)
-    alerts = detect_spikes(
-        hist, params=params, now=now, zones=zones, prior_alerts=prior
-    )
+    prior = recent_alerts(spark, alerts_path, now=now, ttl_sec=p.limit_detect_time_sec)
+    alerts = detect_spikes(hist, params=p, now=now, zones=zones, prior_alerts=prior)
     if metrics_out is not None:
         obs_alerts = Observation("cycle_alerts")
         alerts = alerts.observe(
@@ -114,7 +105,9 @@ def detect_and_append(
         # the cycle's one action; the append writes the collected
         # rules, so nothing re-reads the table the TTL anti-join read
         rules = collect_rules(alerts)
-        append_alerts(spark, rules, alerts_path, detected_at=now)
+        append_alerts(
+            spark, rules, alerts_path, detected_at=now, ttl_sec=p.limit_detect_time_sec
+        )
         if metrics_out is not None:
             metrics_out.update(obs_in.get)
             metrics_out.update(obs_alerts.get)

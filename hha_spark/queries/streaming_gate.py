@@ -267,6 +267,9 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         limit_new_data_net=SPIKE_LIMIT_NEW_NET,
         cur_window_sec=SPIKE_CUR_SEC,
         prev_window_sec=SPIKE_PREV_SEC,
+        # the gate replays its whole history in one shot, so the
+        # unbounded-below prev window must see every row
+        history_hours=10 * 365 * 24,
     )
     with _gate_scratch("hha_stream_spike_gate_") as tmp, _gate_shuffle(spark):
         return _spike_gate_body(spark, tmp, hist, now, zones, params)
@@ -285,10 +288,6 @@ def _spike_gate_body(spark, tmp, hist, now, zones, params):
         params=params,
         read_zones=lambda: zones,
         now_fn=lambda: now,
-        # retention must cover the whole fixture span: the gate
-        # replays history in one shot, so nothing may be evicted
-        # and the unbounded-below prev window must see every row
-        retention_sec=10 * 365 * 86_400,
         available_now=True,
     )
     q.awaitTermination()

@@ -1,20 +1,36 @@
-"""Alerts sink: a persisted Parquet table.
+"""Alerts sink: the TTL dedup state, as a Parquet table.
 
-The reference's sink is `collect()` + a driver loop that prints/logs
-each rule and remembers raised alerts in an in-memory dict that dies
-with the process (hha.py:223-249). Writing alerts to a table instead
-(a) survives restarts, (b) turns the TTL dedup into a broadcast
-anti-join against `recent_alerts`, and (c) gives downstream rule
-generators a queryable log. `collect_rules` is the cycle's one
-action; `append_alerts` writes the rules it returned as one parquet
-file serialized on the driver and placed through the Hadoop
-FileSystem, so the append runs no Spark job at all: no re-execution
-of the detection plan, no tasks, no commit protocol.
+The reference remembers raised alerts in an in-memory dict whose
+entries expire after LimitDetectTimeSec and which dies with the
+process (hha.py:223-249). Here that dict is a table: it survives
+restarts, and the TTL dedup becomes a broadcast anti-join against
+`recent_alerts`. It is the dedup state, not a long-term alert log —
+the rules a cycle emits are its output (`collect_rules`), and files
+expire with the TTL like the dict's entries.
+
+`collect_rules` is the cycle's one action; `append_alerts` writes the
+rules it returned as one parquet file serialized on the driver and
+placed through the Hadoop FileSystem, so the append runs no Spark job
+at all: no re-execution of the detection plan, no tasks, no commit
+protocol. Each file is named by its cycle's `now`,
+
+    part-<detected_at>-<uuid hex>.parquet   (published)
+    _tmp-<detected_at>-<uuid hex>           (in flight; hidden from readers)
+
+and after publishing, `append_alerts` unlinks every stamped name with
+`detected_at <= now - ttl_sec`. Such a file can never pass the
+anti-join again PROVIDED `now` never decreases from one cycle to the
+next — the detector's cycles run serially at a non-decreasing clock
+(the reference's loop, hha.py:315-327). So the table holds at most
+TTL/interval + 1 stamped files. Unstamped names (`part-<uuid>.parquet`
+from before stamping, or any other writer's files) are read and
+never deleted, so an upgrade drops no live alert.
 """
 
 from __future__ import annotations
 
 import ipaddress
+import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
@@ -25,19 +41,32 @@ from hha_spark.schemas import ALERTS_SCHEMA
 from hha_spark.sources import fs
 
 
+# published and in-flight names `append_alerts` writes; Spark's own
+# part-00000-<uuid>-c000.snappy.parquet never matches
+_STAMPED = re.compile(r"(?:part|_tmp)-(\d+)-[0-9a-f]{32}(?:\.parquet)?")
+
+
 def append_alerts(
-    spark: SparkSession, rules: list[dict], table_path: str, *, detected_at: int
+    spark: SparkSession,
+    rules: list[dict],
+    table_path: str,
+    *,
+    detected_at: int,
+    ttl_sec: int,
 ) -> None:
     """Stamp and append a cycle's collected rules (`collect_rules`
-    output) as one `part-<uuid>.parquet` file under `table_path`.
+    output) as one `part-<detected_at>-<uuid>.parquet` file under
+    `table_path`, then unlink the stamped files the TTL has expired.
 
     The rows are driver-local and few (one cycle's alerts), so pyarrow
     serializes them on the driver under ALERTS_SCHEMA (INT32, INT32,
     INT64, INT64, string, INT64; a null in a NOT NULL field raises
-    before anything is written). The bytes go to a hidden `_tmp-<uuid>`
-    name, which Spark's readers skip, and a Hadoop-FS rename publishes
-    the file whole. A quiet cycle writes nothing: an empty file would
-    still be listed by every later `recent_alerts`."""
+    before anything is written). The bytes go to a hidden
+    `_tmp-<detected_at>-<uuid>` name, which Spark's readers skip, and a
+    Hadoop-FS rename publishes the file whole. A quiet cycle writes
+    nothing and lists nothing: an empty file would still be listed by
+    every later `recent_alerts`, and without a new file the table has
+    not grown."""
     if not rules:
         return
     import pyarrow as pa
@@ -52,11 +81,15 @@ def append_alerts(
     ]
     buf = pa.BufferOutputStream()
     pq.write_table(arrow_rows_table(rows, ALERTS_SCHEMA), buf)
-    name = uuid.uuid4().hex
+    name = f"{detected_at}-{uuid.uuid4().hex}"
     tmp = f"{table_path}/_tmp-{name}"
     fs.write_bytes(spark, tmp, buf.getvalue().to_pybytes())
     if not fs.rename(spark, tmp, f"{table_path}/part-{name}.parquet"):
         raise OSError(f"append_alerts: could not publish {tmp}")
+    for child in fs.listdir(spark, table_path):
+        m = _STAMPED.fullmatch(child)
+        if m and int(m[1]) <= detected_at - ttl_sec:
+            fs.delete(spark, f"{table_path}/{child}")
 
 
 def recent_alerts(
@@ -71,41 +104,6 @@ def recent_alerts(
     except Exception:  # noqa: BLE001 — path-not-found on first run
         return None
     return df.where(F.col("detected_at") > F.lit(now - ttl_sec))
-
-
-def compact_alerts(
-    spark: SparkSession, table_path: str, *, now: int, keep_sec: int
-) -> int:
-    """Rewrite the alerts table keeping only the last `keep_sec`.
-
-    The TTL anti-join only ever reads recent rows, but the append-only
-    table grows forever; periodic compaction bounds it. Writes to a
-    sibling tmp dir then swaps via two Hadoop-FS renames.
-
-    Concurrency contract: the swap is NOT atomic — between the two
-    renames the table path briefly does not exist, and a concurrent
-    `recent_alerts` would see a missing table and run its cycle with
-    TTL dedup disabled (duplicate alerts for that cycle). Run
-    compaction from the same single-threaded scheduler as the
-    detection cycles (the reference's loop is likewise serial,
-    hha.py:315-327), between cycles. A crash between the renames
-    leaves the data intact at `<table>__old`; the next compaction (or
-    a manual rename) recovers it. Returns the retained row count.
-    """
-    try:
-        df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
-    except Exception:  # noqa: BLE001 — nothing to compact yet
-        return 0
-    kept = df.where(F.col("detected_at") > F.lit(now - keep_sec))
-    tmp = f"{table_path}__compact_tmp"
-    kept.write.mode("overwrite").parquet(tmp)
-    n = spark.read.schema(ALERTS_SCHEMA).parquet(tmp).count()
-    old = f"{table_path}__old"
-    fs.delete(spark, old)
-    fs.rename(spark, table_path, old)
-    fs.rename(spark, tmp, table_path)
-    fs.delete(spark, old)
-    return n
 
 
 def collect_rules(alerts: DataFrame) -> list[dict]:

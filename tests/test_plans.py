@@ -451,7 +451,7 @@ def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
     )
     rule = {"num_protocol": 2, "type_proto": 41, "sum_val": 1,
             "dst_ip": "10.100.7.3", "scope": "ip"}
-    append_alerts(spark, [rule], alerts_path, detected_at=now - 10)
+    append_alerts(spark, [rule], alerts_path, detected_at=now - 10, ttl_sec=300)
     alerts = detect_spikes(
         read_window(spark, hist_path, upper=now + 1),
         params=DetectorParams(), now=now,

@@ -170,8 +170,8 @@ def alert_files(path):
 
 def test_alerts_sink_ttl_window(spark, tmp_path):
     path = str(tmp_path / "alerts")
-    append_alerts(spark, [RULE], path, detected_at=NOW - 100)
-    append_alerts(spark, [RULE], path, detected_at=NOW - 999)
+    append_alerts(spark, [RULE], path, detected_at=NOW - 100, ttl_sec=300)
+    append_alerts(spark, [RULE], path, detected_at=NOW - 999, ttl_sec=300)
     assert len(alert_files(path)) == 2  # one file per append
     back = spark.read.parquet(path).where(F.col("detected_at") == NOW - 100).collect()
     assert [(r.num_protocol, r.type_proto, r.sum_val, r.dst_ip, r.scope) for r in back] == [
@@ -192,8 +192,8 @@ def test_append_is_one_driver_written_file_per_call(spark, tmp_path):
 
     path = str(tmp_path / "alerts")
     other = dict(RULE, dst_ip="10.100.7.3", sum_val=7)
-    append_alerts(spark, [RULE], path, detected_at=NOW - 10)
-    append_alerts(spark, [other], path, detected_at=NOW - 10)
+    append_alerts(spark, [RULE], path, detected_at=NOW - 10, ttl_sec=300)
+    append_alerts(spark, [other], path, detected_at=NOW - 10, ttl_sec=300)
     files = alert_files(path)
     assert len(files) == 2 and all(f.startswith("part-") for f in files)
     assert not [f for f in os.listdir(path) if "_tmp-" in f]
@@ -216,32 +216,83 @@ def test_append_rejects_null_in_not_null_field(spark, tmp_path):
 
     path = str(tmp_path / "alerts")
     with pytest.raises(ValueError, match="'num_protocol'"):
-        append_alerts(spark, [dict(RULE, num_protocol=None)], path, detected_at=NOW)
+        append_alerts(
+            spark, [dict(RULE, num_protocol=None)], path, detected_at=NOW, ttl_sec=300
+        )
     assert not (tmp_path / "alerts").exists()
 
 
-def test_compact_alerts_bounds_table(spark, tmp_path):
-    from hha_spark.sinks.alerts import compact_alerts
+def test_expired_alert_files_are_unlinked(spark, tmp_path):
+    """One alert per cycle at 10 s steps over more than three TTLs:
+    every append unlinks the stamped files the TTL has expired, so the
+    table never holds more than ceil(TTL/10) + 1 of them, and the TTL
+    window still reads the live ones."""
+    import math
 
     path = str(tmp_path / "alerts")
-    for age in (10, 100, 5000, 9000):
-        append_alerts(spark, [RULE], path, detected_at=NOW - age)
-    kept = compact_alerts(spark, path, now=NOW, keep_sec=300)
-    assert kept == 2
-    assert spark.read.parquet(path).count() == 2
-    # recent_alerts keeps working against the compacted table
-    assert recent_alerts(spark, path, now=NOW, ttl_sec=300).count() == 2
-    # compacting a missing table is a no-op
-    assert compact_alerts(spark, str(tmp_path / "nope"), now=NOW, keep_sec=1) == 0
+    ttl = DetectorParams().limit_detect_time_sec
+    bound = math.ceil(ttl / 10) + 1
+    for i in range(3 * ttl // 10 + 5):
+        now = NOW + 10 * i
+        append_alerts(spark, [RULE], path, detected_at=now, ttl_sec=ttl)
+        files = alert_files(path)
+        assert len(files) <= bound, (i, len(files))
+        assert all(f.startswith("part-") for f in files)
+    assert len(files) == ttl // 10
+    assert recent_alerts(spark, path, now=now, ttl_sec=ttl).count() == len(files)
+
+
+def test_legacy_unstamped_alert_file_suppresses_and_is_kept(spark, tmp_path):
+    """A `part-<uuid>.parquet` file from before stamped names is read
+    by the TTL anti-join like any other, and no append deletes it."""
+    import os
+    import uuid
+
+    data_root = str(tmp_path / "hist")
+    alerts_path = str(tmp_path / "alerts")
+    p = DetectorParams()
+    zones = zones_from_ints(spark, [IP])
+    append_alerts(spark, [RULE], alerts_path, detected_at=NOW - 10, ttl_sec=300)
+    (stamped,) = alert_files(alerts_path)
+    legacy = f"part-{uuid.uuid4().hex}.parquet"
+    os.rename(os.path.join(alerts_path, stamped), os.path.join(alerts_path, legacy))
+    # a new-key spike on the alerted key: suppressed by the legacy row
+    write_partitioned(hist_rows(spark, [(NOW - 5, 65, 11, 8000, IP)] * 2), data_root)
+    assert run_cycle(
+        spark, data_root=data_root, alerts_path=alerts_path,
+        params=p, zones=zones, now=NOW,
+    ) == []
+    # appends far past its TTL expire every stamped file, never it
+    for k in (1, 2):
+        append_alerts(spark, [RULE], alerts_path, detected_at=NOW + k * 1000, ttl_sec=300)
+    assert legacy in alert_files(alerts_path)
+    assert len(alert_files(alerts_path)) == 2
+
+
+def test_stale_tmp_file_past_ttl_is_removed(spark, tmp_path):
+    """An in-flight `_tmp-<stamp>-<uuid>` left by a crashed append is
+    unlinked once the TTL expires its stamp; a young one (a concurrent
+    append's) and foreign files are left alone."""
+    import os
+
+    path = str(tmp_path / "alerts")
+    os.makedirs(path)
+    stale = f"_tmp-{NOW - 1000}-{'a' * 32}"
+    young = f"_tmp-{NOW - 10}-{'b' * 32}"
+    spark_part = "part-00000-0d1e2f3a-4b5c-6d7e-8f90-a1b2c3d4e5f6-c000.snappy.parquet"
+    for name in (stale, young, spark_part):
+        open(os.path.join(path, name), "wb").close()
+    append_alerts(spark, [RULE], path, detected_at=NOW, ttl_sec=300)
+    left = set(os.listdir(path))
+    assert stale not in left
+    assert {young, spark_part} <= left
 
 
 def test_alerts_roundtrip_through_detect_spikes(spark, tmp_path):
     """Regression: detect_spikes writes sum_val as INT64; reading it
-    back under ALERTS_SCHEMA (and compacting) must not hit
+    back under ALERTS_SCHEMA must not hit
     PARQUET_COLUMN_DATA_TYPE_MISMATCH. Unlike the hand-built frames
     above, this goes through the real pipeline output."""
-    from hha_spark.sinks.alerts import compact_alerts
-
     data_root = str(tmp_path / "hist")
     alerts_path = str(tmp_path / "alerts")
     rows = [(NOW - 10, 65, 11, 8000, IP)] * 2
@@ -257,8 +308,6 @@ def test_alerts_roundtrip_through_detect_spikes(spark, tmp_path):
     back = spark.read.schema(ALERTS_SCHEMA).parquet(alerts_path)
     vals = back.select("sum_val", "dst_ip", "scope").collect()
     assert {(r.sum_val, r.dst_ip, r.scope) for r in vals} == {(2500, IP, "ip")}
-    # compaction reads + rewrites the real pipeline output
-    assert compact_alerts(spark, alerts_path, now=NOW, keep_sec=300) == 1
     assert recent_alerts(spark, alerts_path, now=NOW, ttl_sec=300).count() == 1
 
 
@@ -312,7 +361,7 @@ def test_quiet_cycle_writes_nothing(spark, tmp_path):
     write_partitioned(
         hist_rows(spark, [(NOW - 3610, 65, 11, 100, IP)] * 2), data_root
     )
-    append_alerts(spark, [], alerts_path, detected_at=NOW)
+    append_alerts(spark, [], alerts_path, detected_at=NOW, ttl_sec=300)
     assert run_cycle(
         spark, data_root=data_root, alerts_path=alerts_path,
         params=p, zones=zones, now=NOW - 3600,

@@ -5,15 +5,20 @@ TTL dedup; watchlist gating; state-table eviction."""
 from __future__ import annotations
 
 import os
+import tempfile
 
 import pytest
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 
 from hha_spark.config import DetectorParams
+from hha_spark.detector import run_cycle
 from hha_spark.operators.spike import detect_spikes
 from hha_spark.schemas import HISTOGRAM_SCHEMA, ZONES_SCHEMA
 from hha_spark.sources.histograms import write_partitioned
 from hha_spark.streaming.spike_stream import (
     evict_expired_hours,
+    make_batch_processor,
     run_streaming_detector,
 )
 
@@ -179,6 +184,59 @@ def test_restart_from_checkpoint_no_duplicate_alerts(env):
     q2.stop()
 
 
+def _rule_set(rules):
+    return sorted(tuple(sorted(r.items())) for r in rules)
+
+
+# (num_protocol, type_proto, dst_ip): two /32s of one /24 rollup, and a
+# third key on another protocol
+KEYS = [(65, 11, IP_A), (65, 11, IP_A + 1), (68, 11, IP_B)]
+
+
+@settings(
+    max_examples=8, deadline=None,
+    suppress_health_check=[HealthCheck.function_scoped_fixture],
+)
+@given(
+    rows=st.lists(
+        st.tuples(
+            st.integers(-3 * 3600, 60),
+            st.sampled_from(KEYS),
+            st.sampled_from([100, 550, 1000, 3500, 8000, 30000]),
+        ),
+        min_size=1, max_size=12,
+    ),
+    now_offset=st.integers(0, 3599),
+)
+@example(
+    # rows before the previous hour: the stream once read them (a 2 h
+    # retention window) and averaged the baseline to 550, not 1000
+    rows=[(-5000, KEYS[0], 100)] * 2 + [(-400, KEYS[0], 1000)] * 2
+    + [(-10, KEYS[0], 3500)] * 2,
+    now_offset=0,
+)
+def test_stream_processor_equals_run_cycle(spark, rows, now_offset):
+    """A micro-batch of the streaming processor emits exactly the rules
+    `run_cycle` emits over the same rows at the same `now`: the two
+    read one window, rows stamped before or after it included."""
+    now = NOW + now_offset
+    hist = [(now + dt, np_, tp, cnt, ip) for dt, (np_, tp, ip), cnt in rows]
+    with tempfile.TemporaryDirectory() as tmp:
+        emitted: list[list[dict]] = []
+        process = make_batch_processor(
+            spark, samples_root=f"{tmp}/samples", alerts_path=f"{tmp}/stream_alerts",
+            params=P, now_fn=lambda: now, on_rules=emitted.append,
+        )
+        process(hist_df(spark, hist), 0)
+        write_partitioned(hist_df(spark, hist), f"{tmp}/hist")
+        batch = run_cycle(
+            spark, data_root=f"{tmp}/hist", alerts_path=f"{tmp}/batch_alerts",
+            params=P, now=now,
+        )
+    assert len(emitted) == 1
+    assert _rule_set(emitted[0]) == _rule_set(batch)
+
+
 def test_state_table_eviction(spark, tmp_path):
     root = str(tmp_path / "state")
     rows = [
@@ -186,7 +244,7 @@ def test_state_table_eviction(spark, tmp_path):
         (NOW - 100, 65, 11, 100, IP_A),        # fresh
     ]
     write_partitioned(hist_df(spark, rows), root)
-    dropped = evict_expired_hours(root, now=NOW, retention_sec=2 * 3600)
+    dropped = evict_expired_hours(root, now=NOW, params=DetectorParams(history_hours=2))
     assert dropped == 1
     remaining = spark.read.parquet(root)
     assert remaining.count() == 1

@@ -52,6 +52,13 @@ def normalize(formatted: str) -> str:
     # subexpression-elimination aliases are numbered from a
     # per-session counter too (observed shifting in round 8)
     s = re.sub(r"_common_expr_\d+", "_common_expr_N", s)
+    # repartition(defaultParallelism[, cols]) counts follow the
+    # session's local[N], not the pinned shuffle partition count
+    s = re.sub(r"RoundRobinPartitioning\(\d+\)", "RoundRobinPartitioning(N)", s)
+    s = re.sub(
+        r"(hashpartitioning\([^()]*), \d+\), REPARTITION_BY_NUM",
+        r"\1, N), REPARTITION_BY_NUM", s,
+    )
     return s
 
 

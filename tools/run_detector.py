@@ -4,7 +4,10 @@ reference's `python hha.py`.
 Batch mode runs one detection cycle per `--interval` seconds (the
 reference's sleep loop, hha.py:315-327) against the partitioned
 histogram root; streaming mode hands scheduling to Structured
-Streaming. Thresholds come from an hha.conf-style INI (--conf) or
+Streaming, whose micro-batches run the same cycle over the --samples
+table. Each cycle appends its alerts to --alerts and unlinks the
+files the dedup TTL has expired, so no compaction job runs beside the
+service. Thresholds come from an hha.conf-style INI (--conf) or
 defaults; both modes re-read the watchlist from --zones-file, batch
 mode each cycle and streaming mode each micro-batch (comment lines and
 malformed IPs tolerated, like the Consul parser).
