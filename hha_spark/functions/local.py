@@ -68,9 +68,12 @@ def sql_over_views(
     boundary cost the formatter pays — keeps cache reuse intact. The
     views are deliberately left registered: replaced on the next
     call, never dropped (dropping is exactly the eviction being
-    avoided), and scoped to `session` (foreachBatch bodies run on a
-    per-batch clone, so nothing leaks to the main session). Every
-    frame must already live on `session`.
+    avoided). They live on `session`, which must be the session every
+    frame lives on: a foreachBatch body's views stay on its per-batch
+    clone, a streaming gate's flush views on the gate's own session
+    (queries/streaming_gate.py::_gate_session), and `run_cycle`
+    leaves `_hha_fused_{src,zones,prior}` on the detector's session,
+    replaced by each cycle.
 
     `template` is formatted with the view names only. Every value
     enters through `args`, which pass through to ``session.sql`` and

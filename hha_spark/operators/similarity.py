@@ -76,11 +76,14 @@ def cosine_pairs(
     *,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
+    passthrough: tuple[str, ...] = (),
 ) -> DataFrame:
     """All (query, candidate) cosine similarities.
 
-    Returns (qid, cid, cosine DOUBLE). Both inputs should already be
-    blocked/bounded — this is the exact kernel, not the pruner.
+    Returns (qid, cid, cosine DOUBLE [, passthrough...]), where
+    `passthrough` names candidate-side columns copied onto every
+    output row. Both inputs should already be blocked/bounded — this
+    is the exact kernel, not the pruner.
 
     The (small) query side is broadcast, so the cross product never
     shuffles: each candidate partition streams against the in-memory
@@ -91,7 +94,8 @@ def cosine_pairs(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
     )
     c = candidates.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv")
+        F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"),
+        *passthrough,
     )
     return (
         F.broadcast(q)
@@ -109,6 +113,7 @@ def cosine_pairs(
                     F.lit(0.0),
                 )
             ).alias("cosine"),
+            *passthrough,
         )
     )
 
@@ -362,44 +367,6 @@ def mutual_knn_graph(
 MAX_ARROW_QUERIES = 65536  # collected query side must stay driver-sized
 
 
-def _cosine_pairs_fallback(
-    queries: DataFrame,
-    candidates: DataFrame,
-    *,
-    id_col: str,
-    vec_col: str,
-    passthrough: tuple[str, ...],
-) -> DataFrame:
-    """Lazy expression-kernel twin of cosine_pairs_arrow's output
-    (same columns incl. passthrough) for query sides above the Arrow
-    cap. Bit-identical arithmetic (test_similarity.py pins the two
-    kernels equal), fully lazy, no driver matrix."""
-    q = queries.select(
-        F.col(id_col).alias("qid"), F.col(vec_col).alias("__qv")
-    )
-    c = candidates.select(
-        F.col(id_col).alias("cid"), F.col(vec_col).alias("__cv"),
-        *passthrough,
-    )
-    return (
-        F.broadcast(q)
-        .crossJoin(c)
-        .select(
-            "qid",
-            "cid",
-            (
-                dot_scaled(F.col("__qv"), F.col("__cv"))
-                / F.nullif(
-                    F.sqrt(norm_sq_scaled(F.col("__qv")))
-                    * F.sqrt(norm_sq_scaled(F.col("__cv"))),
-                    F.lit(0.0),
-                )
-            ).alias("cosine"),
-            *passthrough,
-        )
-    )
-
-
 def cosine_pairs_arrow(
     queries: DataFrame,
     candidates: DataFrame,
@@ -444,7 +411,7 @@ def cosine_pairs_arrow(
     # query set on the driver
     qrows = queries.select(id_col, vec_col).limit(MAX_ARROW_QUERIES + 1).collect()
     if len(qrows) > MAX_ARROW_QUERIES:
-        return _cosine_pairs_fallback(
+        return cosine_pairs(
             queries, candidates, id_col=id_col, vec_col=vec_col,
             passthrough=passthrough,
         )

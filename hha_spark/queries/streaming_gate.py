@@ -22,7 +22,6 @@ LSH-pruned collisions.
 
 from __future__ import annotations
 
-import itertools
 import os
 import shutil
 import tempfile
@@ -42,15 +41,14 @@ from hha_spark.queries.llm_ops import (
 )
 from hha_spark.sources import fs
 from hha_spark.sources.tables import events_ts_us, load_table
-
-_QUERY_SEQ = itertools.count()
+from hha_spark.streaming import replay_files
 
 # The driver session runs 200 shuffle partitions; a streaming query
 # pins that as its state-store/shuffle width at START and every
 # micro-batch then schedules 200 tasks per exchange — pure fixed cost
 # on a gate-sized replay (and a real knob in production too: size
-# state width to keys, not to the batch-analytics default). Scoped so
-# batch queries running after the gate see the session default again.
+# state width to keys, not to the batch-analytics default). Set only
+# on the gate's own session (_gate_session), never on the caller's.
 # Width 2: a gate micro-batch moves <= 100k rows through each
 # exchange, so task count and output-file count (each kind-partition
 # write emits one file per task) are the cost, not parallelism —
@@ -87,47 +85,71 @@ def _scratch_dir(prefix: str) -> str:
 
 
 @contextmanager
-def _gate_scratch(prefix: str):
-    tmp = _scratch_dir(prefix)
-    try:
-        yield tmp
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
-
-
-@contextmanager
-def _gate_shuffle(
-    spark: SparkSession,
-    partitions: str | None = None,
-    aqe: str = "false",
+def _gate_session(
+    spark: SparkSession, prefix: str, partitions: str = GATE_SHUFFLE_PARTITIONS
 ):
-    """Gate-scoped execution knobs: few shuffle partitions (the gates
-    move tiny per-batch volumes through many fixed-cost jobs) and AQE
-    OFF. Spark itself keeps AQE disabled inside streaming plans;
+    """A gate's own session and scratch dir, yielded as `(gs, tmp)`.
+
+    `gs = spark.newSession()` shares the SparkContext and the cache
+    but not the caller's temp views or runtime conf: the memory-sink
+    views, the `_hha_fused_*` views and the execution knobs a gate
+    sets all stay on gs, so the caller's session comes out of a gate
+    as it went in. Builder confs (UTC, ANSI, Arrow, nanosAsLong)
+    carry over to gs. `tmp` is removed on exit, so gates collect
+    what they read from it before returning.
+
+    Knobs on gs: few shuffle partitions (the gates move tiny
+    per-batch volumes through many fixed-cost jobs) and AQE OFF.
+    Spark itself keeps AQE disabled inside streaming plans;
     foreachBatch bodies are batch plans, so AQE re-engages there and
     each micro-batch pays one extra job + scheduler barrier per
     materialized query stage — measured 5-6 jobs/epoch with AQE vs
     3-4 without, ~0.25 s per gate at sf0.1, identical results (AQE's
     runtime re-planning has nothing to optimize at micro-batch
     volumes). A production deployment with large per-batch volumes
-    would leave AQE on; both knobs are execution-only and scoped to
-    the gate body. `partitions`/`aqe` override the defaults for the
-    gates whose per-batch work is real compute, not state plumbing
-    (the curation funnel's gopher/minhash/verify stages want width
-    and AQE like any batch job; the state gates want neither)."""
-    keys = {
-        "spark.sql.shuffle.partitions": partitions
-        or GATE_SHUFFLE_PARTITIONS,
-        "spark.sql.adaptive.enabled": aqe,
-    }
-    prev = {k: spark.conf.get(k) for k in keys}
-    for k, v in keys.items():
-        spark.conf.set(k, v)
+    would leave AQE on. `partitions` widens the curation gates,
+    whose per-batch gopher/minhash/verify stages are real compute,
+    not state plumbing."""
+    gs = spark.newSession()
+    gs.conf.set("spark.sql.shuffle.partitions", partitions)
+    gs.conf.set("spark.sql.adaptive.enabled", "false")
+    tmp = _scratch_dir(prefix)
     try:
-        yield
+        yield gs, tmp
     finally:
-        for k, v in prev.items():
-            spark.conf.set(k, v)
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _table_stream(gs: SparkSession, sf_dir: str, name: str) -> DataFrame:
+    """File stream over one fixture table. The file source wants a
+    DIRECTORY to monitor; the fixture table is a single file inside
+    sf_dir, so monitor sf_dir and pathGlobFilter down to that file."""
+    return (
+        gs.readStream.schema(load_table(gs, sf_dir, name).schema)
+        .format("parquet")
+        .option("pathGlobFilter", f"{name}.parquet")
+        .load(sf_dir)
+    )
+
+
+def _memory_replay(
+    stream: DataFrame, tmp: str, output_mode: str = "append"
+) -> DataFrame:
+    """One availableNow replay of `stream` (process everything now in
+    the source, then stop — one bounded run of the real streaming
+    machinery) into a memory sink, returned as a frame. The sink's
+    view is registered on the stream's session; a gate session runs
+    one replay, so the name is fixed."""
+    (
+        stream.writeStream.format("memory")
+        .queryName("_gate_sink")
+        .outputMode(output_mode)
+        .option("checkpointLocation", f"{tmp}/ckpt")
+        .trigger(availableNow=True)
+        .start()
+        .awaitTermination()
+    )
+    return stream.sparkSession.table("_gate_sink")
 
 
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -139,49 +161,25 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         incremental_dedup_stream,
     )
 
-    docs_path = f"{sf_dir}/documents.parquet"
-    batch_docs = _docs(spark, sf_dir)
-
-    # the corpus band table is batch-built and MATERIALIZED before the
-    # stream starts (the 100 TB shape: a stored table maintained by
-    # the batch pipeline) — the micro-batch plan then only computes
-    # the incoming batch's band keys and one equi-join against cache
-    corpus = batch_docs.where(~F.expr(NEW_BATCH_PRED))
-    bands = tracked_persist(corpus_band_table(corpus))
-    bands.count()
-
-    # the file stream source wants a DIRECTORY to monitor; the fixture
-    # table is a single file inside sf_dir, so monitor sf_dir and
-    # pathGlobFilter down to the one table's file
-    stream = (
-        spark.readStream.schema(batch_docs.schema)
-        .format("parquet")
-        .option("pathGlobFilter", "documents.parquet")
-        .load(sf_dir)
-        .where(F.expr(NEW_BATCH_PRED))
-    )
-    collisions = incremental_dedup_stream(stream, corpus_bands=bands)
-
-    # availableNow: process everything currently in the source, then
-    # stop — one bounded run of the real streaming machinery. The
-    # memory-sink table name is unique per invocation so repeated
-    # gate runs in one session never collide.
-    qname = f"_stream_dedup_inc_{next(_QUERY_SEQ)}"
-    with _gate_scratch("hha_stream_dedup_ckpt_") as ck, _gate_shuffle(spark):
-        q = (
-            collisions.writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{ck}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    with _gate_session(spark, "hha_stream_dedup_ckpt_") as (gs, ck):
+        batch_docs = _docs(gs, sf_dir)
+        # the corpus band table is batch-built and MATERIALIZED before
+        # the stream starts (the 100 TB shape: a stored table
+        # maintained by the batch pipeline) — the micro-batch plan
+        # then only computes the incoming batch's band keys and one
+        # equi-join against cache
+        corpus = batch_docs.where(~F.expr(NEW_BATCH_PRED))
+        bands = tracked_persist(corpus_band_table(corpus))
+        bands.count()
+        stream = _table_stream(gs, sf_dir, "documents").where(
+            F.expr(NEW_BATCH_PRED)
         )
-        q.awaitTermination()
-
-    cand = (
-        spark.table(qname)
-        .select("doc_id_new", "doc_id_corpus")
-        .distinct()
-    )
+        collisions = incremental_dedup_stream(stream, corpus_bands=bands)
+        cand = (
+            _memory_replay(collisions, ck)
+            .select("doc_id_new", "doc_id_corpus")
+            .distinct()
+        )
     toks = with_token_set(batch_docs).select("doc_id", "tokens")
     verified = (
         cand.join(
@@ -241,26 +239,8 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver-side copy is bounded.
     """
     from hha_spark.config import DetectorParams
+    from hha_spark.streaming.spike_stream import run_streaming_detector
 
-    ev = load_table(spark, sf_dir, "events")
-    ts_s = (
-        (events_ts_us(ev) / F.lit(1_000_000)).cast("long")
-        / F.lit(TIME_COMPRESS)
-    ).cast("long")
-    hist = ev.select(
-        ts_s.alias("timestamp"),
-        F.lit(None).cast("int").alias("subagent_id"),
-        F.lit(0).cast("int").alias("num_protocol"),
-        F.lit(0).cast("int").alias("type_proto"),
-        F.floor("value").cast("long").alias("CountPkt"),
-        (F.col("user_id") * IP_SCALE).cast("long").alias("dst_ip"),
-    )
-    now = hist.agg(F.max("timestamp")).first()[0]
-    zones = (
-        ev.where(F.expr("user_id % 7 = 0"))
-        .select((F.col("user_id") * IP_SCALE).cast("long").alias("ip"))
-        .distinct()
-    )
     params = DetectorParams(
         quotient_amplification=SPIKE_Q,
         limit_new_data=SPIKE_LIMIT_NEW,
@@ -271,36 +251,49 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
         # unbounded-below prev window must see every row
         history_hours=10 * 365 * 24,
     )
-    with _gate_scratch("hha_stream_spike_gate_") as tmp, _gate_shuffle(spark):
-        return _spike_gate_body(spark, tmp, hist, now, zones, params)
-
-
-def _spike_gate_body(spark, tmp, hist, now, zones, params):
-    from hha_spark.streaming.spike_stream import run_streaming_detector
-
-    hist.repartition(4).write.parquet(f"{tmp}/in")
-    q = run_streaming_detector(
-        spark,
-        data_root=f"{tmp}/in",
-        samples_root=f"{tmp}/state",
-        alerts_path=f"{tmp}/alerts",
-        checkpoint=f"{tmp}/ckpt",
-        params=params,
-        read_zones=lambda: zones,
-        now_fn=lambda: now,
-        available_now=True,
-    )
-    q.awaitTermination()
-    # a quiet stream writes no alerts file, so the table may not exist
-    rows = (
-        spark.read.parquet(f"{tmp}/alerts")
-        .select("num_protocol", "type_proto", "dst_ip", "sum_val", "scope")
-        .collect()
-        if fs.exists(spark, f"{tmp}/alerts")
-        else []
-    )
+    with _gate_session(spark, "hha_stream_spike_gate_") as (gs, tmp):
+        ev = load_table(gs, sf_dir, "events")
+        ts_s = (
+            (events_ts_us(ev) / F.lit(1_000_000)).cast("long")
+            / F.lit(TIME_COMPRESS)
+        ).cast("long")
+        hist = ev.select(
+            ts_s.alias("timestamp"),
+            F.lit(None).cast("int").alias("subagent_id"),
+            F.lit(0).cast("int").alias("num_protocol"),
+            F.lit(0).cast("int").alias("type_proto"),
+            F.floor("value").cast("long").alias("CountPkt"),
+            (F.col("user_id") * IP_SCALE).cast("long").alias("dst_ip"),
+        )
+        now = hist.agg(F.max("timestamp")).first()[0]
+        zones = (
+            ev.where(F.expr("user_id % 7 = 0"))
+            .select((F.col("user_id") * IP_SCALE).cast("long").alias("ip"))
+            .distinct()
+        )
+        hist.repartition(4).write.parquet(f"{tmp}/in")
+        q = run_streaming_detector(
+            gs,
+            data_root=f"{tmp}/in",
+            samples_root=f"{tmp}/state",
+            alerts_path=f"{tmp}/alerts",
+            checkpoint=f"{tmp}/ckpt",
+            params=params,
+            read_zones=lambda: zones,
+            now_fn=lambda: now,
+            available_now=True,
+        )
+        q.awaitTermination()
+        # a quiet stream writes no alerts file, so the table may not exist
+        rows = (
+            gs.read.parquet(f"{tmp}/alerts")
+            .select("num_protocol", "type_proto", "dst_ip", "sum_val", "scope")
+            .collect()
+            if fs.exists(gs, f"{tmp}/alerts")
+            else []
+        )
     return arrow_rows_frame(
-        spark,
+        gs,
         rows,
         "num_protocol int, type_proto int, dst_ip long, sum_val long, scope string",
     )
@@ -385,40 +378,34 @@ def stream_events_windowed(spark: SparkSession, sf_dir: str) -> DataFrame:
     `value` is floored to BIGINT before summing so the windowed total
     is exact-integer on both engines (the no-raw-float-SUM rule).
     """
+    return _windowed_gate(
+        spark, sf_dir, window_sec=WIN_SEC, watermark_sec=WIN_SEC,
+    )
+
+
+def _windowed_gate(spark: SparkSession, sf_dir: str, **window) -> DataFrame:
+    """Complete-mode availableNow replay of `windowed_counts(**window)`
+    over the events stream: the body of both window gates."""
     from hha_spark.streaming.windowed import windowed_counts
 
-    ev = load_table(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    prepared = stream.select(
-        (events_ts_us(stream) / F.lit(1_000_000)).cast("long").alias("ts_s"),
-        "event_type",
-        F.floor("value").cast("long").alias("val"),
-    )
-    counts = windowed_counts(
-        prepared,
-        time_col="ts_s",
-        key_cols=("event_type",),
-        value_col="val",
-        window_sec=WIN_SEC,
-        watermark_sec=WIN_SEC,
-    )
-    qname = f"_stream_windowed_{next(_QUERY_SEQ)}"
-    with _gate_scratch("hha_stream_win_ckpt_") as ck, _gate_shuffle(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{ck}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+    with _gate_session(spark, "hha_stream_win_ckpt_") as (gs, ck):
+        stream = _table_stream(gs, sf_dir, "events")
+        prepared = stream.select(
+            (events_ts_us(stream) / F.lit(1_000_000))
+            .cast("long")
+            .alias("ts_s"),
+            "event_type",
+            F.floor("value").cast("long").alias("val"),
         )
-        q.awaitTermination()
-    return spark.table(qname).select(
+        counts = windowed_counts(
+            prepared,
+            time_col="ts_s",
+            key_cols=("event_type",),
+            value_col="val",
+            **window,
+        )
+        sink = _memory_replay(counts, ck, "complete")
+    return sink.select(
         F.col("window_start").cast("long").alias("window_start"),
         "event_type",
         F.col("n").cast("long").alias("n"),
@@ -457,39 +444,27 @@ def stream_native_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one exchange on the id. The duplicate pressure here is total
     (2x every row) and in-batch, the operator's hardest case.
     """
-    ev = load_table(spark, sf_dir, "events")
+    with _gate_session(spark, "hha_stream_ddw_ckpt_") as (gs, ck):
 
-    def src() -> DataFrame:
-        s = (
-            spark.readStream.schema(ev.schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-        return s.select(
-            "event_id",
-            "event_type",
-            (events_ts_us(s) / F.lit(1_000_000)).cast("long").alias("ts_s"),
-        )
+        def src() -> DataFrame:
+            s = _table_stream(gs, sf_dir, "events")
+            return s.select(
+                "event_id",
+                "event_type",
+                (events_ts_us(s) / F.lit(1_000_000))
+                .cast("long")
+                .alias("ts_s"),
+            )
 
-    doubled = src().unionByName(src())
-    deduped = (
-        doubled.withColumn("t", F.timestamp_seconds(F.col("ts_s")))
-        .withWatermark("t", f"{DEDUP_WM_SEC} seconds")
-        .dropDuplicatesWithinWatermark(["event_id"])
-        .select("event_id", "event_type")
-    )
-    qname = f"_stream_native_dedup_{next(_QUERY_SEQ)}"
-    with _gate_scratch("hha_stream_ddw_ckpt_") as ck, _gate_shuffle(spark):
-        q = (
-            deduped.writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{ck}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        doubled = src().unionByName(src())
+        deduped = (
+            doubled.withColumn("t", F.timestamp_seconds(F.col("ts_s")))
+            .withWatermark("t", f"{DEDUP_WM_SEC} seconds")
+            .dropDuplicatesWithinWatermark(["event_id"])
+            .select("event_id", "event_type")
         )
-        q.awaitTermination()
-    return spark.table(qname).groupBy("event_type").agg(
+        sink = _memory_replay(deduped, ck)
+    return sink.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("event_id").cast("long").alias("sum_ids"),
     )
@@ -516,45 +491,9 @@ def stream_events_hopping(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle expresses (window_start = ts - ts%slide - k*slide,
     epoch-aligned exactly like Spark's default origin).
     """
-    from hha_spark.streaming.windowed import windowed_counts
-
-    ev = load_table(spark, sf_dir, "events")
-    stream = (
-        spark.readStream.schema(ev.schema)
-        .format("parquet")
-        .option("pathGlobFilter", "events.parquet")
-        .load(sf_dir)
-    )
-    prepared = stream.select(
-        (events_ts_us(stream) / F.lit(1_000_000)).cast("long").alias("ts_s"),
-        "event_type",
-        F.floor("value").cast("long").alias("val"),
-    )
-    counts = windowed_counts(
-        prepared,
-        time_col="ts_s",
-        key_cols=("event_type",),
-        value_col="val",
-        window_sec=HOP_WIN_SEC,
-        watermark_sec=HOP_WIN_SEC,
+    return _windowed_gate(
+        spark, sf_dir, window_sec=HOP_WIN_SEC, watermark_sec=HOP_WIN_SEC,
         slide_sec=HOP_SLIDE_SEC,
-    )
-    qname = f"_stream_hopping_{next(_QUERY_SEQ)}"
-    with _gate_scratch("hha_stream_hop_ckpt_") as ck, _gate_shuffle(spark):
-        q = (
-            counts.writeStream.format("memory")
-            .queryName(qname)
-            .outputMode("complete")
-            .option("checkpointLocation", f"{ck}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-    return spark.table(qname).select(
-        F.col("window_start").cast("long").alias("window_start"),
-        "event_type",
-        F.col("n").cast("long").alias("n"),
-        F.col("total").cast("long").alias("total"),
     )
 
 
@@ -605,44 +544,28 @@ def stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hha_spark.streaming.joins import attribution_join
 
-    ev = load_table(spark, sf_dir, "events")
+    with _gate_session(spark, "hha_stream_attr_ckpt_") as (gs, ck):
 
-    def side(event_type: str, ts_name: str) -> DataFrame:
-        s = (
-            spark.readStream.schema(ev.schema)
-            .format("parquet")
-            .option("pathGlobFilter", "events.parquet")
-            .load(sf_dir)
-        )
-        return s.where(F.col("event_type") == event_type).select(
-            "user_id",
-            (events_ts_us(s) / F.lit(1_000_000)).cast("long").alias(ts_name),
-        )
+        def side(event_type: str, ts_name: str) -> DataFrame:
+            s = _table_stream(gs, sf_dir, "events")
+            return s.where(F.col("event_type") == event_type).select(
+                "user_id",
+                (events_ts_us(s) / F.lit(1_000_000))
+                .cast("long")
+                .alias(ts_name),
+            )
 
-    joined = attribution_join(
-        side("click", "click_ts"),
-        side("purchase", "purchase_ts"),
-        max_delay_sec=ATTR_MAX_DELAY_SEC,
-        watermark_sec=ATTR_WATERMARK_SEC,
-    )
-    qname = f"_stream_attr_{next(_QUERY_SEQ)}"
-    with _gate_scratch("hha_stream_attr_ckpt_") as ck, _gate_shuffle(spark):
-        q = (
-            joined.writeStream.format("memory")
-            .queryName(qname)
-            .option("checkpointLocation", f"{ck}/ckpt")
-            .trigger(availableNow=True)
-            .start()
+        joined = attribution_join(
+            side("click", "click_ts"),
+            side("purchase", "purchase_ts"),
+            max_delay_sec=ATTR_MAX_DELAY_SEC,
+            watermark_sec=ATTR_WATERMARK_SEC,
         )
-        q.awaitTermination()
-    return (
-        spark.table(qname)
-        .groupBy("user_id")
-        .agg(
-            F.count(F.lit(1)).alias("n_attr"),
-            F.sum("delay_sec").cast("long").alias("sum_delay"),
-            F.min("delay_sec").cast("long").alias("min_delay"),
-        )
+        sink = _memory_replay(joined, ck)
+    return sink.groupBy("user_id").agg(
+        F.count(F.lit(1)).alias("n_attr"),
+        F.sum("delay_sec").cast("long").alias("sum_delay"),
+        F.min("delay_sec").cast("long").alias("min_delay"),
     )
 
 
@@ -793,26 +716,24 @@ def stream_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
     """
     from hha_spark.streaming.sessionize import (
         final_sessions,
-        run_streaming_sessionizer,
+        make_sessionize_processor,
     )
 
-    ev_raw = load_table(spark, sf_dir, "events")
-    ev = ev_raw.select("user_id", events_ts_us(ev_raw).alias("ts_us"))
-    with _gate_scratch("hha_stream_sess_") as tmp, _gate_shuffle(spark):
-        in_dir = _write_time_slices(ev, tmp, SESS_SLICES)
-        q = run_streaming_sessionizer(
-            spark,
-            data_root=in_dir,
+    with _gate_session(spark, "hha_stream_sess_") as (gs, tmp):
+        ev_raw = load_table(gs, sf_dir, "events")
+        ev = ev_raw.select("user_id", events_ts_us(ev_raw).alias("ts_us"))
+        replay_files(
+            gs,
+            make_sessionize_processor(
+                gs, store_root=f"{tmp}/store", gap_us=SESS_GAP_US
+            ),
+            data_root=_write_time_slices(ev, tmp, SESS_SLICES),
             schema="user_id long, ts_us long",
-            store_root=f"{tmp}/store",
             checkpoint=f"{tmp}/ckpt",
-            gap_us=SESS_GAP_US,
             max_files_per_trigger=2,
-            available_now=True,
         )
-        q.awaitTermination()
-        sessions = final_sessions(spark, store_root=f"{tmp}/store")
-        return _sessions_rollup(spark, sessions)
+        sessions = final_sessions(gs, store_root=f"{tmp}/store")
+        return _sessions_rollup(gs, sessions)
 
 
 ORACLE_STREAM_SESSIONIZE = f"""
@@ -897,7 +818,6 @@ def stream_cms_heavy(
         HEAVY_NUM,
     )
 
-    docs = _docs(spark, sf_dir)
     state: dict[tuple[int, int], int] = {}
     applied: set[int] = set()
 
@@ -921,24 +841,16 @@ def stream_cms_heavy(
         if batch_log is not None:
             batch_log.append(batch_id)
 
-    with _gate_scratch("hha_stream_cms_") as tmp, _gate_shuffle(spark):
+    with _gate_session(spark, "hha_stream_cms_") as (gs, tmp):
+        docs = _docs(gs, sf_dir)
         docs.repartition(4).write.parquet(f"{tmp}/in")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 2)
-            .load(f"{tmp}/in")
+        replay_files(
+            gs, merge_batch, data_root=f"{tmp}/in", schema=docs.schema,
+            checkpoint=f"{tmp}/ckpt", max_files_per_trigger=2,
         )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     counters = arrow_rows_frame(
-        spark,
+        gs,
         [(r, c, v) for (r, c), v in sorted(state.items())],
         "row long, col long, counter long",
     )
@@ -1006,7 +918,6 @@ def stream_temperature_mixture(
     from hha_spark.operators.corpus import mixture_readout
     from hha_spark.queries.corpus import BUDGET_PCT
 
-    docs = load_table(spark, sf_dir, "documents")
     state: dict[str, list[int]] = {}
     applied: set[int] = set()
 
@@ -1027,24 +938,16 @@ def stream_temperature_mixture(
         if batch_log is not None:
             batch_log.append(batch_id)
 
-    with _gate_scratch("hha_stream_mix_") as tmp, _gate_shuffle(spark):
+    with _gate_session(spark, "hha_stream_mix_") as (gs, tmp):
+        docs = _docs(gs, sf_dir)
         docs.repartition(4).write.parquet(f"{tmp}/in")
-        stream = (
-            spark.readStream.schema(docs.schema)
-            .format("parquet")
-            .option("maxFilesPerTrigger", 2)
-            .load(f"{tmp}/in")
+        replay_files(
+            gs, merge_batch, data_root=f"{tmp}/in", schema=docs.schema,
+            checkpoint=f"{tmp}/ckpt", max_files_per_trigger=2,
         )
-        q = (
-            stream.writeStream.foreachBatch(merge_batch)
-            .option("checkpointLocation", f"{tmp}/ckpt")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
 
     per_source = arrow_rows_frame(
-        spark,
+        gs,
         [(s, v[0], v[1]) for s, v in sorted(state.items())],
         "source string, n_docs long, n_tokens long",
     )
@@ -1151,33 +1054,33 @@ def stream_sessionize_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hha_spark.streaming.sessionize import (
         final_sessions_disorder,
-        run_disorder_sessionizer,
+        make_disorder_sessionize_processor,
     )
 
-    ev_raw = load_table(spark, sf_dir, "events")
-    ev = ev_raw.select("user_id", events_ts_us(ev_raw).alias("ts_us"))
-    with _gate_scratch("hha_stream_sessdis_") as tmp, _gate_shuffle(spark):
-        in_dir = _write_disorder_slices(
-            ev, tmp, SESS_SLICES, SESS_DISORDER_US
-        )
-        q = run_disorder_sessionizer(
-            spark,
-            data_root=in_dir,
+    with _gate_session(spark, "hha_stream_sessdis_") as (gs, tmp):
+        ev_raw = load_table(gs, sf_dir, "events")
+        ev = ev_raw.select("user_id", events_ts_us(ev_raw).alias("ts_us"))
+        replay_files(
+            gs,
+            make_disorder_sessionize_processor(
+                gs,
+                store_root=f"{tmp}/store",
+                gap_us=SESS_GAP_US,
+                disorder_us=SESS_DISORDER_US,
+            ),
+            data_root=_write_disorder_slices(
+                ev, tmp, SESS_SLICES, SESS_DISORDER_US
+            ),
             schema="user_id long, ts_us long",
-            store_root=f"{tmp}/store",
             checkpoint=f"{tmp}/ckpt",
-            gap_us=SESS_GAP_US,
-            disorder_us=SESS_DISORDER_US,
             max_files_per_trigger=2,
-            available_now=True,
         )
-        q.awaitTermination()
         sessions = final_sessions_disorder(
-            spark,
+            gs,
             store_root=f"{tmp}/store",
             gap_us=SESS_GAP_US,
         )
-        return _sessions_rollup(spark, sessions)
+        return _sessions_rollup(gs, sessions)
 
 
 QUERIES["stream_sessionize_disorder"] = stream_sessionize_disorder
@@ -1223,35 +1126,35 @@ def stream_attribution_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     from hha_spark.streaming.joins import (
         final_attributions,
-        run_disorder_attribution,
+        make_disorder_attribution_processor,
     )
 
-    ev = load_table(spark, sf_dir, "events")
-    two = ev.where(
-        F.col("event_type").isin("click", "purchase")
-    ).select(
-        "user_id",
-        (events_ts_us(ev) / F.lit(1_000_000)).cast("long").alias("ts_s"),
-        F.col("event_type").alias("etype"),
-    )
-    with _gate_scratch("hha_stream_attrdis_") as tmp, _gate_shuffle(spark):
-        in_dir = _write_disorder_slices(
-            two, tmp, SESS_SLICES, ATTR_DISORDER_SEC, ts_col="ts_s"
+    with _gate_session(spark, "hha_stream_attrdis_") as (gs, tmp):
+        ev = load_table(gs, sf_dir, "events")
+        two = ev.where(
+            F.col("event_type").isin("click", "purchase")
+        ).select(
+            "user_id",
+            (events_ts_us(ev) / F.lit(1_000_000)).cast("long").alias("ts_s"),
+            F.col("event_type").alias("etype"),
         )
-        q = run_disorder_attribution(
-            spark,
-            data_root=in_dir,
+        replay_files(
+            gs,
+            make_disorder_attribution_processor(
+                gs,
+                store_root=f"{tmp}/store",
+                max_delay_sec=ATTR_MAX_DELAY_SEC,
+                disorder_sec=ATTR_DISORDER_SEC,
+            ),
+            data_root=_write_disorder_slices(
+                two, tmp, SESS_SLICES, ATTR_DISORDER_SEC, ts_col="ts_s"
+            ),
             schema="user_id long, ts_s long, etype string",
-            store_root=f"{tmp}/store",
             checkpoint=f"{tmp}/ckpt",
-            max_delay_sec=ATTR_MAX_DELAY_SEC,
-            disorder_sec=ATTR_DISORDER_SEC,
             max_files_per_trigger=2,
-            available_now=True,
         )
-        q.awaitTermination()
         pairs = final_attributions(
-            spark,
+            gs,
             store_root=f"{tmp}/store",
             max_delay_sec=ATTR_MAX_DELAY_SEC,
         )
@@ -1265,7 +1168,7 @@ def stream_attribution_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("min_delay"),
         )
         # collected before the gate's scratch directories vanish
-        return arrow_rows_frame(spark, out.collect(), _ATTR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(gs, out.collect(), _ATTR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_attribution_disorder"] = stream_attribution_disorder
@@ -1306,13 +1209,33 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     corpus store itself. See streaming/curation_stream.py.
     """
     from hha_spark.operators.sketch import md5_mod
+
+    return _curation_gate(
+        spark, sf_dir,
+        md5_mod("curslice|", F.col("doc_id").cast("string"), 3), 3,
+        max_files_per_trigger=2,
+    )
+
+
+def _curation_gate(
+    spark: SparkSession,
+    sf_dir: str,
+    slice_col,
+    n_slices: int,
+    *,
+    max_files_per_trigger: int,
+    **processor_kw,
+) -> DataFrame:
+    """The body of the three curation gates: the documents table
+    written as `n_slices` files by `slice_col`, replayed through the
+    incremental curation funnel, flushed, and collected as the
+    per-source rollup before the scratch dir vanishes."""
     from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
     from hha_spark.streaming.curation_stream import (
         final_curation_funnel,
-        run_streaming_curation,
+        make_curation_funnel_processor,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
     # Width 4, AQE OFF. The r9-era shape wanted AQE (its heavy
     # gopher/repartition plan had stages worth re-planning); after
     # the round-10 rewrite — shuffle-free gopher map, single
@@ -1325,33 +1248,25 @@ def stream_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     # host's ±0.8 s noise — off is kept for the lower job count, not
     # a claimed wall win. At production batch volumes flip AQE back
     # on with the data.
-    with _gate_scratch("hha_stream_cur_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
-        in_dir = _write_file_slices(
-            docs,
-            md5_mod("curslice|", F.col("doc_id").cast("string"), 3),
-            tmp,
-            3,
-        )
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
+    with _gate_session(spark, "hha_stream_cur_", partitions="4") as (gs, tmp):
+        docs = _docs(gs, sf_dir).select("doc_id", "source", "text")
+        replay_files(
+            gs,
+            make_curation_funnel_processor(
+                gs, store_root=f"{tmp}/store", **processor_kw
+            ),
+            data_root=_write_file_slices(docs, slice_col, tmp, n_slices),
             schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
             checkpoint=f"{tmp}/ckpt",
-            max_files_per_trigger=2,
-            available_now=True,
+            max_files_per_trigger=max_files_per_trigger,
         )
-        q.awaitTermination()
         out = final_curation_funnel(
-            spark,
+            gs,
             store_root=f"{tmp}/store",
             budget_frac_pct=BUDGET_PCT,
             salt=FILL_SALT,
         )
-        # collected before the gate's scratch directories vanish
-        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(gs, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_funnel"] = stream_curation_funnel
@@ -1384,68 +1299,38 @@ def stream_curation_compacted(spark: SparkSession, sf_dir: str) -> DataFrame:
     fail the gate rather than quietly un-verify it.
     """
     from hha_spark.operators.sketch import md5_mod
-    from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
-    from hha_spark.streaming.curation_stream import (
-        final_curation_funnel,
-        run_streaming_curation,
-    )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
     stats: dict = {}
-    # width 4, AQE off — same sweep-backed knobs as
-    # stream_curation_funnel (see its comment)
-    with _gate_scratch("hha_stream_curc_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
-        # FOUR slices, one per micro-batch: a minor fold needs >= 2
-        # foldable stubs strictly below the newest two versions, so 4
-        # epochs is the minimum stream on which compact_every=1 fires
-        # a real fold (after epoch 3: olds = [v0, v1]). Sizes are
-        # SKEWED (1/8, 1/8, 1/8, 5/8 via min(md5 mod 8, 3)): the
-        # fold, the cross-batch merges, and the folded-history reads
-        # are exercised identically, but three of the four epochs
-        # carry an eighth of the corpus each, so the gate does not
-        # pay the full per-epoch funnel cost four times (measured
-        # ~12-14 s -> ~8 s; delivery stays md5-interleaved, so every
-        # slice still spans the id space)
-        in_dir = _write_file_slices(
-            docs,
-            F.least(
-                md5_mod("curslice|", F.col("doc_id").cast("string"), 8),
-                F.lit(3),
-            ),
-            tmp,
-            4,
+    # FOUR slices, one per micro-batch: a minor fold needs >= 2
+    # foldable stubs strictly below the newest two versions, so 4
+    # epochs is the minimum stream on which compact_every=1 fires a
+    # real fold (after epoch 3: olds = [v0, v1]). Sizes are SKEWED
+    # (1/8, 1/8, 1/8, 5/8 via min(md5 mod 8, 3)): the fold, the
+    # cross-batch merges, and the folded-history reads are exercised
+    # identically, but three of the four epochs carry an eighth of the
+    # corpus each, so the gate does not pay the full per-epoch funnel
+    # cost four times (measured ~12-14 s -> ~8 s; delivery stays
+    # md5-interleaved, so every slice still spans the id space)
+    out = _curation_gate(
+        spark, sf_dir,
+        F.least(
+            md5_mod("curslice|", F.col("doc_id").cast("string"), 8),
+            F.lit(3),
+        ),
+        4,
+        max_files_per_trigger=1,
+        stats=stats,
+        compact_every=1,
+    )
+    # explicit raise, not assert: the fold-fired invariant is the
+    # reason this gate exists, and `python -O` strips asserts — a bare
+    # assert would silently un-verify the compaction coverage in
+    # optimized runs
+    if stats.get("compactions", 0) < 1:
+        raise RuntimeError(
+            f"gate fixture no longer exercises a live fold: {stats}"
         )
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
-            schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
-            checkpoint=f"{tmp}/ckpt",
-            max_files_per_trigger=1,
-            available_now=True,
-            stats=stats,
-            compact_every=1,
-        )
-        q.awaitTermination()
-        # explicit raise, not assert: the fold-fired invariant is the
-        # reason this gate exists, and `python -O` strips asserts —
-        # a bare assert would silently un-verify the compaction
-        # coverage in optimized runs
-        if stats.get("compactions", 0) < 1:
-            raise RuntimeError(
-                "gate fixture no longer exercises a live fold: "
-                f"{stats}"
-            )
-        out = final_curation_funnel(
-            spark,
-            store_root=f"{tmp}/store",
-            budget_frac_pct=BUDGET_PCT,
-            salt=FILL_SALT,
-        )
-        # collected before the gate's scratch directories vanish
-        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+    return out
 
 
 QUERIES["stream_curation_compacted"] = stream_curation_compacted
@@ -1480,52 +1365,22 @@ def stream_curation_spilled(spark: SparkSession, sf_dir: str) -> DataFrame:
     O(labels) bytes written once, never re-broadcast per stage.
     """
     from hha_spark.operators.sketch import md5_mod
-    from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
-    from hha_spark.streaming.curation_stream import (
-        final_curation_funnel,
-        run_streaming_curation,
-    )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
     stats: dict = {}
-    # width 4, AQE off — same sweep-backed knobs as
-    # stream_curation_funnel (see its comment)
-    with _gate_scratch("hha_stream_curs_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
-        in_dir = _write_file_slices(
-            docs,
-            md5_mod("curslice|", F.col("doc_id").cast("string"), 3),
-            tmp,
-            3,
+    out = _curation_gate(
+        spark, sf_dir,
+        md5_mod("curslice|", F.col("doc_id").cast("string"), 3), 3,
+        max_files_per_trigger=2,
+        stats=stats,
+        label_spill_rows=0,
+    )
+    # explicit raise, not assert: the spill-fired invariant is the
+    # reason this gate exists (`python -O` strips asserts)
+    if stats.get("label_spills", 0) < 1:
+        raise RuntimeError(
+            f"gate fixture no longer exercises the label spill: {stats}"
         )
-        q = run_streaming_curation(
-            spark,
-            data_root=in_dir,
-            schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
-            checkpoint=f"{tmp}/ckpt",
-            max_files_per_trigger=2,
-            available_now=True,
-            stats=stats,
-            label_spill_rows=0,
-        )
-        q.awaitTermination()
-        # explicit raise, not assert: the spill-fired invariant is
-        # the reason this gate exists (`python -O` strips asserts)
-        if stats.get("label_spills", 0) < 1:
-            raise RuntimeError(
-                "gate fixture no longer exercises the label spill: "
-                f"{stats}"
-            )
-        out = final_curation_funnel(
-            spark,
-            store_root=f"{tmp}/store",
-            budget_frac_pct=BUDGET_PCT,
-            salt=FILL_SALT,
-        )
-        # collected before the gate's scratch directories vanish
-        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
+    return out
 
 
 QUERIES["stream_curation_spilled"] = stream_curation_spilled

@@ -33,6 +33,10 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.ansi.enabled", "false")
+        # Tolerate a TIMESTAMP(NANOS) events fixture
+        # ([PARQUET_TYPE_ILLEGAL] by default); harmless for MICROS
+        # files. A builder conf, so every newSession() inherits it.
+        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
         .config("spark.ui.enabled", "false")
         # stage progress bars (\r[Stage N: ...]) are pure console noise
         # here and pad any captured-output tail; the bench driver

@@ -8,7 +8,8 @@ data is laid out as date=/hour= directories (see sources/histograms.py).
 Event-time robustness: the reference reads whatever the parquet footer
 says (hha.py:304) — so do we. The fixture's `ts` column has shipped as
 both TIMESTAMP(NANOS) (readable only as BIGINT nanoseconds via
-`spark.sql.legacy.parquet.nanosAsLong`) and TIMESTAMP(MICROS,
+`spark.sql.legacy.parquet.nanosAsLong`, which session.py sets in the
+session builder) and TIMESTAMP(MICROS,
 isAdjustedToUTC=false) (arrives as TIMESTAMP_NTZ). `events_ts_us()`
 inspects the dataframe's actual dtype and yields exact integer
 microseconds-since-epoch either way; all downstream event-time math
@@ -133,11 +134,6 @@ def load_table(
         cached = per_session.get(memo_key)
         if cached is not None and cached[0] == fp:
             return cached[1]
-    if name == "events":
-        # Tolerate a TIMESTAMP(NANOS) fixture ([PARQUET_TYPE_ILLEGAL]
-        # by default); harmless for MICROS files. Runtime conf, safe
-        # to set per-read.
-        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if fanout:
         df = df.repartition(spark.sparkContext.defaultParallelism)

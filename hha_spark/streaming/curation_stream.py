@@ -375,7 +375,11 @@ def make_curation_funnel_processor(
     between epochs on the stream's own thread and touches only
     versions strictly below the newest two, which no future epoch or
     retry reads differently (the store module's reader-equivalence
-    argument)."""
+    argument).
+
+    Heals any crashed store compaction first (streaming/store.py
+    protocol contract: recovery must precede the first store read
+    after a restart)."""
     from hha_spark.operators.cluster import (
         SMALL_GRAPH_EDGES,
         connected_components,
@@ -387,6 +391,9 @@ def make_curation_funnel_processor(
         with_token_set,
     )
     from hha_spark.operators.text import gopher_repetition_rules
+    from hha_spark.streaming.store import recover_compaction
+
+    recover_compaction(spark, store_root)
 
     cap = MAX_LSH_BUCKET if max_bucket is None else max_bucket
 
@@ -736,47 +743,6 @@ def make_curation_funnel_processor(
                 f.unpersist()
 
     return process
-
-
-def run_streaming_curation(
-    spark: SparkSession,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    max_bucket: int | None = None,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-    stats: dict | None = None,
-    compact_every: int | None = None,
-    label_spill_rows: int | None = None,
-):
-    """File source -> foreachBatch(incremental curation funnel).
-    Returns the StreamingQuery. Heals any crashed store compaction
-    before the stream starts (streaming/store.py protocol contract:
-    recovery must precede the first store read after a restart)."""
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_curation_funnel_processor(
-            spark,
-            store_root=store_root,
-            max_bucket=max_bucket,
-            stats=stats,
-            compact_every=compact_every,
-            label_spill_rows=label_spill_rows,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_curation_funnel(

@@ -177,11 +177,15 @@ def make_disorder_attribution_processor(
     """Per-micro-batch body (see block comment above for the
     exactly-once argument). Per-epoch actions: one tiny max aggregate
     (doubles as the empty probe and materializes the cached event
-    union) and ONE kind-partitioned write."""
+    union) and ONE kind-partitioned write. Heals any crashed store
+    compaction first (streaming/store.py recovery contract)."""
     from hha_spark.streaming.sessionize import (
         _prune_store_versions,
         _read_versioned,
     )
+    from hha_spark.streaming.store import recover_compaction
+
+    recover_compaction(spark, store_root)
 
     def process(batch_df, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -237,42 +241,6 @@ def make_disorder_attribution_processor(
             all_ev.unpersist()
 
     return process
-
-
-def run_disorder_attribution(
-    spark,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    max_delay_sec: int,
-    disorder_sec: int,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """File source -> foreachBatch(bounded-disorder attribution).
-    Returns the StreamingQuery. Heals any crashed store compaction
-    first (streaming/store.py recovery contract)."""
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_disorder_attribution_processor(
-            spark,
-            store_root=store_root,
-            max_delay_sec=max_delay_sec,
-            disorder_sec=disorder_sec,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_attributions(

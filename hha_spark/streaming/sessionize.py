@@ -421,7 +421,14 @@ def make_sessionize_processor(
     epoch's true pre-state (the newest version strictly below this
     epoch, see read_open_state), so a redelivered epoch rewrites the
     same bytes instead of duplicating rows — effectively-exactly-once
-    on top of the file source's at-least-once replay."""
+    on top of the file source's at-least-once replay.
+
+    Heals any crashed store compaction first (streaming/store.py:
+    recovery must precede the first store read after a restart)."""
+    # lazy: store imports this module
+    from hha_spark.streaming.store import recover_compaction
+
+    recover_compaction(spark, store_root)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -460,45 +467,6 @@ def make_sessionize_processor(
         _prune_store_versions(session, store_root, current_epoch=epoch)
 
     return process
-
-
-def run_streaming_sessionizer(
-    spark: SparkSession,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    gap_us: int,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """File source -> foreachBatch(stateful sessionizer).
-
-    maxFilesPerTrigger=1 makes each input file its own micro-batch
-    (the gate writes time-sliced files, so the replay exercises the
-    cross-batch state path for real). Returns the StreamingQuery.
-    Heals any crashed store compaction first (streaming/store.py:
-    recovery must precede the first store read after a restart).
-    """
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_sessionize_processor(
-            spark,
-            store_root=store_root,
-            gap_us=gap_us,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_sessions(
@@ -668,12 +636,19 @@ def make_disorder_sessionize_processor(
     contract — use make_sessionize_processor. (The attribution join
     handles 0 via its strict maturity bound; this processor's bound
     is inclusive and does not.)
+
+    Heals any crashed store compaction first, as
+    make_sessionize_processor does.
     """
     if disorder_us <= 0:
         raise ValueError(
             "disorder_us must be > 0; use make_sessionize_processor "
             "for ordered (zero-disorder) delivery"
         )
+    # lazy: store imports this module
+    from hha_spark.streaming.store import recover_compaction
+
+    recover_compaction(spark, store_root)
 
     def process(batch_df: DataFrame, epoch_id: int) -> None:
         epoch = int(epoch_id)
@@ -717,42 +692,6 @@ def make_disorder_sessionize_processor(
             all_ev.unpersist()
 
     return process
-
-
-def run_disorder_sessionizer(
-    spark: SparkSession,
-    *,
-    data_root: str,
-    schema,
-    store_root: str,
-    checkpoint: str,
-    gap_us: int,
-    disorder_us: int,
-    max_files_per_trigger: int = 1,
-    available_now: bool = True,
-):
-    """File source -> foreachBatch(bounded-disorder sessionizer).
-    Returns the StreamingQuery. Heals any crashed store compaction
-    first (streaming/store.py recovery contract)."""
-    from hha_spark.streaming.store import recover_compaction
-
-    recover_compaction(spark, store_root)
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", str(max_files_per_trigger))
-        .parquet(data_root)
-    )
-    writer = stream.writeStream.foreachBatch(
-        make_disorder_sessionize_processor(
-            spark,
-            store_root=store_root,
-            gap_us=gap_us,
-            disorder_us=disorder_us,
-        )
-    ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    return writer.start()
 
 
 def final_sessions_disorder(

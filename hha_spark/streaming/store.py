@@ -59,8 +59,8 @@ without marker is discarded (nothing was deleted yet); staging with
 marker is rolled FORWARD (finish the deletes, finish the rename).
 `compact_store` begins by recovering, so a crashed compaction heals
 on the next maintenance run; a stream restarting earlier must
-recover FIRST, before its initial store read — every run_* runner in
-this repo does so at start. The marker file rides
+recover FIRST, before its initial store read — every make_*_processor
+factory over a store does so when it is built. The marker file rides
 into the merged dir as an underscore-prefixed file, which parquet
 readers ignore, and doubles as compaction provenance.
 
@@ -122,7 +122,7 @@ def recover_compaction(spark: SparkSession, store_root: str) -> str:
         # completed, so no deletes ran and the staging is safely
         # discardable (deletes only start after the marker rename
         # returns). Raising here instead would propagate out of every
-        # run_* runner's startup recovery and wedge ALL restarts —
+        # processor factory's startup recovery and wedge ALL restarts —
         # the exact failure the torn-marker handling exists to stop.
         fs.delete(spark, staging)
         return "discarded"

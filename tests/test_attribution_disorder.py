@@ -12,10 +12,10 @@ import os
 import shutil
 import time
 
+from hha_spark.streaming import replay_files
 from hha_spark.streaming.joins import (
     final_attributions,
     make_disorder_attribution_processor,
-    run_disorder_attribution,
 )
 
 D = 100   # max click->purchase delay
@@ -69,16 +69,18 @@ def _write_files(spark, tmp_path) -> str:
 
 def _run(spark, tmp_path, *, disorder_sec=W):
     store = str(tmp_path / f"store_w{disorder_sec}")
-    q = run_disorder_attribution(
+    replay_files(
         spark,
+        make_disorder_attribution_processor(
+            spark,
+            store_root=store,
+            max_delay_sec=D,
+            disorder_sec=disorder_sec,
+        ),
         data_root=_write_files(spark, tmp_path),
         schema=SCHEMA,
-        store_root=store,
         checkpoint=str(tmp_path / f"ckpt_w{disorder_sec}"),
-        max_delay_sec=D,
-        disorder_sec=disorder_sec,
     )
-    q.awaitTermination()
     return store
 
 

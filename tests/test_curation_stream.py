@@ -16,6 +16,7 @@ from pyspark.sql import functions as F
 
 from conftest import gopher_doc_text
 
+from hha_spark.streaming import replay_files
 from hha_spark.streaming.curation_stream import (
     _CUR_STORE_SCHEMA,
     _EDGE_SCHEMA,
@@ -25,7 +26,6 @@ from hha_spark.streaming.curation_stream import (
     final_curation_funnel,
     make_curation_funnel_processor,
     read_kind_history,
-    run_streaming_curation,
 )
 
 SCHEMA = "doc_id long, source string, text string"
@@ -54,17 +54,19 @@ def _run_stream(
     label_spill_rows=None,
 ):
     in_dir = _write_batches(spark, tmp_path, batches)
-    q = run_streaming_curation(
+    replay_files(
         spark,
+        make_curation_funnel_processor(
+            spark,
+            store_root=str(tmp_path / "store"),
+            max_bucket=max_bucket,
+            stats=stats,
+            label_spill_rows=label_spill_rows,
+        ),
         data_root=in_dir,
         schema=SCHEMA,
-        store_root=str(tmp_path / "store"),
         checkpoint=str(tmp_path / "ckpt"),
-        max_bucket=max_bucket,
-        stats=stats,
-        label_spill_rows=label_spill_rows,
     )
-    q.awaitTermination()
     return str(tmp_path / "store")
 
 
@@ -275,14 +277,13 @@ def test_stream_restart_resumes_from_checkpoint(spark, tmp_path):
     ckpt = str(tmp_path / "ckpt")
 
     def _run():
-        q = run_streaming_curation(
+        replay_files(
             spark,
+            make_curation_funnel_processor(spark, store_root=store),
             data_root=in_dir,
             schema=SCHEMA,
-            store_root=store,
             checkpoint=ckpt,
         )
-        q.awaitTermination()
 
     _run()  # consumes the first two files, then terminates
     v_first = _state_versions(spark, store)
@@ -356,7 +357,7 @@ def test_label_spill_threshold_cutover(spark, tmp_path):
 
 
 def test_label_spill_equals_batch(spark, tmp_path):
-    """Force the spill threshold to 0 (via the run_streaming_curation
+    """Force the spill threshold to 0 (via the processor's
     `label_spill_rows` parameter — the same plumbing the
     stream_curation_spilled gate uses) so EVERY epoch's
     driver-computed labels take the write-then-read-back spill

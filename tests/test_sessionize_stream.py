@@ -13,11 +13,12 @@ import time
 
 from pyspark.sql import functions as F
 
+from hha_spark.streaming import replay_files
 from hha_spark.streaming.sessionize import (
     final_sessions,
+    make_sessionize_processor,
     merge_adjacent_sessions,
     read_open_state,
-    run_streaming_sessionizer,
     sessionize_batch,
 )
 
@@ -59,15 +60,15 @@ def _run(spark, tmp_path):
         "store": str(tmp_path / "store"),
         "ckpt": str(tmp_path / "ckpt"),
     }
-    q = run_streaming_sessionizer(
+    replay_files(
         spark,
+        make_sessionize_processor(
+            spark, store_root=paths["store"], gap_us=GAP
+        ),
         data_root=_write_slices(spark, tmp_path),
         schema=SCHEMA,
-        store_root=paths["store"],
         checkpoint=paths["ckpt"],
-        gap_us=GAP,
     )
-    q.awaitTermination()
     return paths
 
 
@@ -207,19 +208,20 @@ def _disorder_paths(tmp_path):
 
 
 def _run_disorder(spark, tmp_path):
-    from hha_spark.streaming.sessionize import run_disorder_sessionizer
+    from hha_spark.streaming.sessionize import (
+        make_disorder_sessionize_processor,
+    )
 
     paths = _disorder_paths(tmp_path)
-    q = run_disorder_sessionizer(
+    replay_files(
         spark,
+        make_disorder_sessionize_processor(
+            spark, store_root=paths["store"], gap_us=GAP, disorder_us=DIS_W
+        ),
         data_root=_write_disorder_files(spark, tmp_path),
         schema=SCHEMA,
-        store_root=paths["store"],
         checkpoint=paths["ckpt"],
-        gap_us=GAP,
-        disorder_us=DIS_W,
     )
-    q.awaitTermination()
     return paths
 
 
@@ -280,15 +282,15 @@ def test_ordered_processor_is_wrong_on_disordered_delivery(spark, tmp_path):
         "store": str(tmp_path / "ostore"),
         "ckpt": str(tmp_path / "ockpt"),
     }
-    q = run_streaming_sessionizer(
+    replay_files(
         spark,
+        make_sessionize_processor(
+            spark, store_root=paths["store"], gap_us=GAP
+        ),
         data_root=_write_disorder_files(spark, tmp_path),
         schema=SCHEMA,
-        store_root=paths["store"],
         checkpoint=paths["ckpt"],
-        gap_us=GAP,
     )
-    q.awaitTermination()
     ordered = sorted(
         map(
             _session_key,
@@ -353,7 +355,7 @@ def test_disorder_restart_from_checkpoint_across_queries(spark, tmp_path):
     the restart WITH a fresh StreamingQuery."""
     from hha_spark.streaming.sessionize import (
         final_sessions_disorder,
-        run_disorder_sessionizer,
+        make_disorder_sessionize_processor,
     )
 
     in_dir = str(tmp_path / "din")
@@ -371,21 +373,23 @@ def test_disorder_restart_from_checkpoint_across_queries(spark, tmp_path):
     paths = _disorder_paths(tmp_path)
 
     def start():
-        return run_disorder_sessionizer(
+        replay_files(
             spark,
+            make_disorder_sessionize_processor(
+                spark,
+                store_root=paths["store"],
+                gap_us=GAP,
+                disorder_us=DIS_W,
+            ),
             data_root=in_dir,
             schema=SCHEMA,
-            store_root=paths["store"],
             checkpoint=paths["ckpt"],
-            gap_us=GAP,
-            disorder_us=DIS_W,
         )
 
     # first incarnation sees only files 0 and 1, drains them, dies
     write_file(0)
     write_file(1)
-    q1 = start()
-    q1.awaitTermination()
+    start()
     mid_versions = {
         d for d in os.listdir(paths["store"]) if d.startswith("v")
     }
@@ -393,8 +397,7 @@ def test_disorder_restart_from_checkpoint_across_queries(spark, tmp_path):
     # file 2 lands while the process is down; a NEW query on the same
     # checkpoint must pick up exactly there (epoch 2), not reprocess
     write_file(2)
-    q2 = start()
-    q2.awaitTermination()
+    start()
     assert "v2" in set(os.listdir(paths["store"]))
     assert "v2" not in mid_versions  # epoch 2 ran in the second query
 

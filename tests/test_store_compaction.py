@@ -440,7 +440,7 @@ def test_malformed_marker_json_is_discarded_not_raised(spark, tmp_path):
     """A marker that parses as JSON but lacks the base/folded fields
     (e.g. truncated to '{}') is treated exactly like a torn marker:
     staging discarded, store untouched, NO exception — a raise here
-    would propagate out of every run_* runner's startup recovery and
+    would propagate out of every processor factory's startup recovery and
     wedge all stream restarts (round-9 advisor, store.py:114)."""
     root = str(tmp_path / "store")
     _build_curation_store(spark, root)
@@ -461,8 +461,8 @@ def test_malformed_marker_json_is_discarded_not_raised(spark, tmp_path):
 
 def test_final_readers_heal_crashed_fold(spark, tmp_path):
     """A consumer that goes straight to a final flush — without first
-    restarting a run_* runner or invoking tools/compact.py — must not
-    silently read a store whose folded history lives only in
+    building a processor over the store or invoking tools/compact.py —
+    must not silently read a store whose folded history lives only in
     _compact.staging (round-9 advisor, curation_stream.py:488). Every
     store read rolls a complete staged fold forward itself."""
     root = str(tmp_path / "store")

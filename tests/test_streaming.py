@@ -513,3 +513,36 @@ def test_stream_merges_are_idempotent_on_redelivery(spark):
     a = got[cols].sort_values("source").reset_index(drop=True)
     b = want[cols].sort_values("source").reset_index(drop=True)
     assert a.equals(b)
+
+
+def test_gates_leave_the_caller_session_as_it_was(spark):
+    """Each streaming gate runs on a session of its own: running gates
+    leaves the caller's temp views and its shuffle width, AQE and
+    nanosAsLong confs as they were (stream_curation_spilled sets its
+    own width 4), and every gate still returns rows."""
+    from hha_spark.queries.streaming_gate import (
+        stream_attribution_disorder,
+        stream_curation_spilled,
+        stream_events_windowed,
+    )
+
+    keys = (
+        "spark.sql.shuffle.partitions",
+        "spark.sql.adaptive.enabled",
+        "spark.sql.legacy.parquet.nanosAsLong",
+    )
+
+    def caller_state():
+        views = {t.name for t in spark.catalog.listTables() if t.isTemporary}
+        return views, {k: spark.conf.get(k) for k in keys}
+
+    before = caller_state()
+    sf = "/root/testdata/sf0.001"
+    for gate in (
+        stream_events_windowed,
+        stream_events_windowed,
+        stream_attribution_disorder,
+        stream_curation_spilled,
+    ):
+        assert gate(spark, sf).collect(), gate.__name__
+    assert caller_state() == before

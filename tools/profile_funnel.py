@@ -1,8 +1,9 @@
 """Per-phase wall profile of the streaming-curation gates.
 
 Runs the same fixture each gate uses (md5-interleaved slices of the
-sf documents table through run_streaming_curation) with the
-processor's `stats` timers exposed, printing the per-phase split —
+sf documents table replayed through the curation funnel processor on
+a gate session) with the processor's `stats` timers exposed,
+printing the per-phase split —
 t_build (driver-side epoch-plan construction: py4j chatter + eager
 JVM analysis of every intermediate frame), t_cross_probe (the one
 tagged-union probe action), t_closure, t_write, t_prune, t_compact —
@@ -30,11 +31,11 @@ from pyspark.sql import functions as F  # noqa: E402
 
 from hha_spark.queries.streaming_gate import (  # noqa: E402
     _docs,
-    _gate_scratch,
-    _gate_shuffle,
+    _gate_session,
     _write_file_slices,
 )
 from hha_spark.session import get_spark  # noqa: E402
+from hha_spark.streaming import replay_files  # noqa: E402
 
 
 def run_gate(spark, sf_dir: str, gate: str) -> dict:
@@ -42,15 +43,13 @@ def run_gate(spark, sf_dir: str, gate: str) -> dict:
     from hha_spark.queries.corpus import BUDGET_PCT, FILL_SALT
     from hha_spark.streaming.curation_stream import (
         final_curation_funnel,
-        run_streaming_curation,
+        make_curation_funnel_processor,
     )
 
-    docs = _docs(spark, sf_dir).select("doc_id", "source", "text")
     stats: dict = {}
     t_all = time.monotonic()
-    with _gate_scratch("hha_prof_cur_") as tmp, _gate_shuffle(
-        spark, partitions="4", aqe="false"
-    ):
+    with _gate_session(spark, "hha_prof_cur_", partitions="4") as (gs, tmp):
+        docs = _docs(gs, sf_dir).select("doc_id", "source", "text")
         if gate == "compacted":
             slice_col = F.least(
                 md5_mod("curslice|", F.col("doc_id").cast("string"), 8),
@@ -67,22 +66,20 @@ def run_gate(spark, sf_dir: str, gate: str) -> dict:
         in_dir = _write_file_slices(docs, slice_col, tmp, n_slices)
         t_setup = time.monotonic() - t_all
         t0 = time.monotonic()
-        q = run_streaming_curation(
-            spark,
+        replay_files(
+            gs,
+            make_curation_funnel_processor(
+                gs, store_root=f"{tmp}/store", stats=stats, **kw
+            ),
             data_root=in_dir,
             schema="doc_id long, source string, text string",
-            store_root=f"{tmp}/store",
             checkpoint=f"{tmp}/ckpt",
             max_files_per_trigger=per_trigger,
-            available_now=True,
-            stats=stats,
-            **kw,
         )
-        q.awaitTermination()
         t_stream = time.monotonic() - t0
         t0 = time.monotonic()
         out = final_curation_funnel(
-            spark,
+            gs,
             store_root=f"{tmp}/store",
             budget_frac_pct=BUDGET_PCT,
             salt=FILL_SALT,
