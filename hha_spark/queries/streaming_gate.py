@@ -40,7 +40,7 @@ from hha_spark.queries.llm_ops import (
     _docs,
 )
 from hha_spark.sources import fs
-from hha_spark.sources.tables import events_ts_us, load_table
+from hha_spark.sources.tables import _TABLE_MEMO, events_ts_us, load_table
 from hha_spark.streaming import replay_files
 
 # The driver session runs 200 shuffle partitions; a streaming query
@@ -94,9 +94,13 @@ def _gate_session(
     but not the caller's temp views or runtime conf: the memory-sink
     views, the `_hha_fused_*` views and the execution knobs a gate
     sets all stay on gs, so the caller's session comes out of a gate
-    as it went in. Builder confs (UTC, ANSI, Arrow, nanosAsLong)
-    carry over to gs. `tmp` is removed on exit, so gates collect
-    what they read from it before returning.
+    as it went in. Builder confs (UTC, ANSI, Arrow) carry over to gs,
+    runtime ones do not, so gs sets nanosAsLong itself: a session the
+    repo did not build may still meet a TIMESTAMP(NANOS) events file.
+    `tmp` is removed on exit, and gs's reader memo with it, so gates
+    collect what they read from gs and return frames bound to the
+    caller's `spark`: whatever runs on a gate's result runs with the
+    caller's knobs.
 
     Knobs on gs: few shuffle partitions (the gates move tiny
     per-batch volumes through many fixed-cost jobs) and AQE OFF.
@@ -113,10 +117,13 @@ def _gate_session(
     gs = spark.newSession()
     gs.conf.set("spark.sql.shuffle.partitions", partitions)
     gs.conf.set("spark.sql.adaptive.enabled", "false")
+    gs.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     tmp = _scratch_dir(prefix)
     try:
         yield gs, tmp
     finally:
+        # a memo value holds its session, so the weak key never dies
+        _TABLE_MEMO.pop(gs, None)
         shutil.rmtree(tmp, ignore_errors=True)
 
 
@@ -133,13 +140,18 @@ def _table_stream(gs: SparkSession, sf_dir: str, name: str) -> DataFrame:
 
 
 def _memory_replay(
-    stream: DataFrame, tmp: str, output_mode: str = "append"
+    spark: SparkSession,
+    stream: DataFrame,
+    tmp: str,
+    output_mode: str = "append",
 ) -> DataFrame:
     """One availableNow replay of `stream` (process everything now in
     the source, then stop — one bounded run of the real streaming
-    machinery) into a memory sink, returned as a frame. The sink's
-    view is registered on the stream's session; a gate session runs
-    one replay, so the name is fixed."""
+    machinery) into a memory sink, returned as a local frame on
+    `spark`. The sink's view is registered on the stream's (gate)
+    session under a fixed name, since a gate session runs one replay;
+    its rows already sit on the driver, so they are copied JVM-side
+    into the caller's frame and the view is dropped."""
     (
         stream.writeStream.format("memory")
         .queryName("_gate_sink")
@@ -149,7 +161,13 @@ def _memory_replay(
         .start()
         .awaitTermination()
     )
-    return stream.sparkSession.table("_gate_sink")
+    gs = stream.sparkSession
+    sink = gs.table("_gate_sink")._jdf
+    rows = spark._jsparkSession.createDataFrame(
+        sink.collectAsList(), sink.schema()
+    )
+    gs.catalog.dropTempView("_gate_sink")
+    return DataFrame(rows, spark)
 
 
 def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -176,11 +194,11 @@ def stream_dedup_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         collisions = incremental_dedup_stream(stream, corpus_bands=bands)
         cand = (
-            _memory_replay(collisions, ck)
+            _memory_replay(spark, collisions, ck)
             .select("doc_id_new", "doc_id_corpus")
             .distinct()
         )
-    toks = with_token_set(batch_docs).select("doc_id", "tokens")
+    toks = with_token_set(_docs(spark, sf_dir)).select("doc_id", "tokens")
     verified = (
         cand.join(
             toks.select(
@@ -239,7 +257,8 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     the driver-side copy is bounded.
     """
     from hha_spark.config import DetectorParams
-    from hha_spark.streaming.spike_stream import run_streaming_detector
+    from hha_spark.schemas import HISTOGRAM_SCHEMA
+    from hha_spark.streaming import make_batch_processor
 
     params = DetectorParams(
         quotient_amplification=SPIKE_Q,
@@ -272,18 +291,21 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             .distinct()
         )
         hist.repartition(4).write.parquet(f"{tmp}/in")
-        q = run_streaming_detector(
+        replay_files(
             gs,
+            make_batch_processor(
+                gs,
+                samples_root=f"{tmp}/state",
+                alerts_path=f"{tmp}/alerts",
+                params=params,
+                read_zones=lambda: zones,
+                now_fn=lambda: now,
+            ),
             data_root=f"{tmp}/in",
-            samples_root=f"{tmp}/state",
-            alerts_path=f"{tmp}/alerts",
+            schema=HISTOGRAM_SCHEMA,
             checkpoint=f"{tmp}/ckpt",
-            params=params,
-            read_zones=lambda: zones,
-            now_fn=lambda: now,
-            available_now=True,
+            max_files_per_trigger=256,
         )
-        q.awaitTermination()
         # a quiet stream writes no alerts file, so the table may not exist
         rows = (
             gs.read.parquet(f"{tmp}/alerts")
@@ -293,7 +315,7 @@ def stream_spike_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
             else []
         )
     return arrow_rows_frame(
-        gs,
+        spark,
         rows,
         "num_protocol int, type_proto int, dst_ip long, sum_val long, scope string",
     )
@@ -404,7 +426,7 @@ def _windowed_gate(spark: SparkSession, sf_dir: str, **window) -> DataFrame:
             value_col="val",
             **window,
         )
-        sink = _memory_replay(counts, ck, "complete")
+        sink = _memory_replay(spark, counts, ck, "complete")
     return sink.select(
         F.col("window_start").cast("long").alias("window_start"),
         "event_type",
@@ -463,7 +485,7 @@ def stream_native_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
             .dropDuplicatesWithinWatermark(["event_id"])
             .select("event_id", "event_type")
         )
-        sink = _memory_replay(deduped, ck)
+        sink = _memory_replay(spark, deduped, ck)
     return sink.groupBy("event_type").agg(
         F.count(F.lit(1)).cast("long").alias("n"),
         F.sum("event_id").cast("long").alias("sum_ids"),
@@ -561,7 +583,7 @@ def stream_attribution_join(spark: SparkSession, sf_dir: str) -> DataFrame:
             max_delay_sec=ATTR_MAX_DELAY_SEC,
             watermark_sec=ATTR_WATERMARK_SEC,
         )
-        sink = _memory_replay(joined, ck)
+        sink = _memory_replay(spark, joined, ck)
     return sink.groupBy("user_id").agg(
         F.count(F.lit(1)).alias("n_attr"),
         F.sum("delay_sec").cast("long").alias("sum_delay"),
@@ -733,7 +755,7 @@ def stream_sessionize_incremental(spark: SparkSession, sf_dir: str) -> DataFrame
             max_files_per_trigger=2,
         )
         sessions = final_sessions(gs, store_root=f"{tmp}/store")
-        return _sessions_rollup(gs, sessions)
+        return _sessions_rollup(spark, sessions)
 
 
 ORACLE_STREAM_SESSIONIZE = f"""
@@ -849,8 +871,9 @@ def stream_cms_heavy(
             checkpoint=f"{tmp}/ckpt", max_files_per_trigger=2,
         )
 
+    docs = _docs(spark, sf_dir)
     counters = arrow_rows_frame(
-        gs,
+        spark,
         [(r, c, v) for (r, c), v in sorted(state.items())],
         "row long, col long, counter long",
     )
@@ -947,7 +970,7 @@ def stream_temperature_mixture(
         )
 
     per_source = arrow_rows_frame(
-        gs,
+        spark,
         [(s, v[0], v[1]) for s, v in sorted(state.items())],
         "source string, n_docs long, n_tokens long",
     )
@@ -1080,7 +1103,7 @@ def stream_sessionize_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             store_root=f"{tmp}/store",
             gap_us=SESS_GAP_US,
         )
-        return _sessions_rollup(gs, sessions)
+        return _sessions_rollup(spark, sessions)
 
 
 QUERIES["stream_sessionize_disorder"] = stream_sessionize_disorder
@@ -1168,7 +1191,7 @@ def stream_attribution_disorder(spark: SparkSession, sf_dir: str) -> DataFrame:
             .alias("min_delay"),
         )
         # collected before the gate's scratch directories vanish
-        return arrow_rows_frame(gs, out.collect(), _ATTR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(spark, out.collect(), _ATTR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_attribution_disorder"] = stream_attribution_disorder
@@ -1266,7 +1289,7 @@ def _curation_gate(
             budget_frac_pct=BUDGET_PCT,
             salt=FILL_SALT,
         )
-        return arrow_rows_frame(gs, out.collect(), _CUR_ROLLUP_SCHEMA)
+        return arrow_rows_frame(spark, out.collect(), _CUR_ROLLUP_SCHEMA)
 
 
 QUERIES["stream_curation_funnel"] = stream_curation_funnel

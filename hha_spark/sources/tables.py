@@ -9,7 +9,8 @@ Event-time robustness: the reference reads whatever the parquet footer
 says (hha.py:304) — so do we. The fixture's `ts` column has shipped as
 both TIMESTAMP(NANOS) (readable only as BIGINT nanoseconds via
 `spark.sql.legacy.parquet.nanosAsLong`, which session.py sets in the
-session builder) and TIMESTAMP(MICROS,
+session builder and load_table sets on any other session that meets
+such a file) and TIMESTAMP(MICROS,
 isAdjustedToUTC=false) (arrives as TIMESTAMP_NTZ). `events_ts_us()`
 inspects the dataframe's actual dtype and yields exact integer
 microseconds-since-epoch either way; all downstream event-time math
@@ -66,6 +67,30 @@ def _dir_fingerprint(path: str):
         return (st.st_ino, st.st_mtime_ns, st.st_size, n)
     except OSError:
         return None
+
+
+def _nanos_footer(path: str) -> bool:
+    """Whether the parquet table at `path` (one file, or a directory
+    of part files) stores a TIMESTAMP(NANOS) column, read from one
+    footer. A path that is not local (a remote URI) counts as NANOS:
+    there the footer costs a round trip, and the conf is harmless
+    for MICROS files."""
+    import os
+
+    import pyarrow.parquet as pq
+
+    if os.path.isdir(path):
+        parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
+        if not parts:
+            return False
+        path = os.path.join(path, parts[0])
+    elif not os.path.isfile(path):
+        return True
+    sc = pq.read_metadata(path).schema
+    return any(
+        "timeUnit=nanoseconds" in str(sc.column(i).logical_type)
+        for i in range(len(sc))
+    )
 
 
 def events_ts_us(df: DataFrame, col: str = "ts") -> Column:
@@ -134,6 +159,11 @@ def load_table(
         cached = per_session.get(memo_key)
         if cached is not None and cached[0] == fp:
             return cached[1]
+    if name == "events" and _nanos_footer(f"{sf_dir}/{name}.parquet"):
+        # [PARQUET_TYPE_ILLEGAL] otherwise. get_spark and gate
+        # sessions already set it; a session built elsewhere (the
+        # driver's) gets it here, and only when the file needs it.
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
     if fanout:
         df = df.repartition(spark.sparkContext.defaultParallelism)

@@ -440,6 +440,39 @@ def test_events_ts_us_both_encodings(spark):
     assert got_ntz == micros
 
 
+def test_load_table_reads_nanos_events_on_a_session_without_the_conf(
+    spark, tmp_path
+):
+    """A session the engine did not build (nanosAsLong false, as on
+    the driver's own session) still reads a TIMESTAMP(NANOS) events
+    file through load_table; a MICROS file leaves its conf alone."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from hha_spark.sources.tables import _TABLE_MEMO, events_ts_us, load_table
+
+    key = "spark.sql.legacy.parquet.nanosAsLong"
+    micros = [1_700_000_000_000_000, 1_700_000_123_456_789]
+    for unit, scale in (("ns", 1_000), ("us", 1)):
+        (tmp_path / unit).mkdir()
+        ts = pa.array([m * scale for m in micros], pa.timestamp(unit))
+        pq.write_table(
+            pa.table({"ts": ts}), tmp_path / unit / "events.parquet",
+            version="2.6",
+        )
+    other = spark.newSession()
+    other.conf.set(key, "false")
+    try:
+        us = load_table(other, str(tmp_path / "us"), "events")
+        assert other.conf.get(key) == "false"
+        ns = load_table(other, str(tmp_path / "ns"), "events")
+        assert dict(ns.dtypes)["ts"] == "bigint"
+        for df in (ns, us):
+            assert [r[0] for r in df.select(events_ts_us(df)).collect()] == micros
+    finally:
+        _TABLE_MEMO.pop(other, None)
+
+
 def test_try_load_table_retries_then_none(spark, tmp_path):
     """Read-failure tolerance on the flat-tables path (hha.py:305-311):
     a persistently missing table yields None after the retry budget; a

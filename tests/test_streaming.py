@@ -519,7 +519,8 @@ def test_gates_leave_the_caller_session_as_it_was(spark):
     """Each streaming gate runs on a session of its own: running gates
     leaves the caller's temp views and its shuffle width, AQE and
     nanosAsLong confs as they were (stream_curation_spilled sets its
-    own width 4), and every gate still returns rows."""
+    own width 4), and every gate still returns rows, on a frame bound
+    to the caller's session."""
     from hha_spark.queries.streaming_gate import (
         stream_attribution_disorder,
         stream_curation_spilled,
@@ -544,5 +545,7 @@ def test_gates_leave_the_caller_session_as_it_was(spark):
         stream_attribution_disorder,
         stream_curation_spilled,
     ):
-        assert gate(spark, sf).collect(), gate.__name__
+        out = gate(spark, sf)
+        assert out.sparkSession is spark, gate.__name__
+        assert out.collect(), gate.__name__
     assert caller_state() == before
