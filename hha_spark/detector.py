@@ -5,7 +5,9 @@ One cycle = read pruned windows -> detect_spikes (S1-S8) -> gate by
 watchlist -> suppress recently-alerted keys -> append to the alerts
 table -> emit rules. The reference's hand-rolled pieces map as:
 
-    wall-clock window bounds (hha.py:320-323) -> `now` parameter
+    wall-clock window bounds (hha.py:320-323) -> `now` parameter, bound
+                                                 as a one-row clock the
+                                                 bounds are computed from
     hour-file name math (hha.py:293-301)      -> `cycle_window` +
                                                  partition pruning
     Consul thread + shared set (hha.py:41-71) -> per-cycle zones read
@@ -46,8 +48,10 @@ def cycle_window(now: int, params: DetectorParams) -> tuple[int, int]:
     retention an unbounded scan would average the baseline over all
     history. `history_hours=2` reproduces the reference's lower edge
     exactly; the bound sits one second before the oldest hour, since
-    `read_window`'s row filter is strict (ts > lower) and the hourly
-    file layout keeps a row on that boundary."""
+    the row cut is strict (ts > lower) and the hourly file layout keeps
+    a row on that boundary. `read_window` prunes the cycle's hours with
+    these bounds on the driver; `detect_spikes` cuts the rows with the
+    same bounds computed from its clock's `_now`."""
     hour_start = (now // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
     lower = hour_start - (params.history_hours - 1) * SECONDS_PER_HOUR - 1
     return lower, now + 1
@@ -65,9 +69,11 @@ def run_cycle(
 ) -> list[dict]:
     """Execute one detection cycle; returns the emitted rules.
 
-    One pruned scan of `cycle_window` feeds TTL-suppressed S1-S8, run
+    One scan of `cycle_window`'s hours feeds TTL-suppressed S1-S8, run
     by ONE action (the rules collect); the rules are appended at `now`
-    from the driver, and tracked persists are released. The streaming
+    from the driver, and tracked persists are released. `now` enters
+    the plan only through `detect_spikes`' one-row clock, so from the
+    second cycle on nothing is compiled (operators/spike.py). The streaming
     micro-batch processor (streaming/spike_stream.py) calls this same
     function over its samples table.
 
@@ -75,12 +81,16 @@ def run_cycle(
     `Observation` nodes piggyback on the plan the cycle already
     executes (no extra scan, no extra job — the executor-side
     accumulators fill during the rule materialization), recording
-    input volume, the observed time span, and alert counts per scope.
+    input volume and the observed time span (of the rows in the
+    cycle's hours, before the clock's row cut), and alert counts per
+    scope.
     This is the Spark-native replacement for the reference's stage
     timers + print statements (hha.py stage timing)."""
     p = params or DetectorParams()
     now = int(time.time()) if now is None else now
     lower, upper = cycle_window(now, p)
+    # the window's hours; detect_spikes cuts their rows to the window
+    # and the alerts to the TTL, both on its clock
     hist = read_window(spark, data_root, lower=lower, upper=upper)
     if metrics_out is not None:
         obs_in = Observation("cycle_input")
@@ -91,7 +101,7 @@ def run_cycle(
             F.max("timestamp").alias("max_ts"),
         )
 
-    prior = recent_alerts(spark, alerts_path, now=now, ttl_sec=p.limit_detect_time_sec)
+    prior = recent_alerts(spark, alerts_path)
     alerts = detect_spikes(hist, params=p, now=now, zones=zones, prior_alerts=prior)
     if metrics_out is not None:
         obs_alerts = Observation("cycle_alerts")

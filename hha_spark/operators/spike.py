@@ -11,12 +11,20 @@ Spark-first design decisions (vs the reference):
     conditional aggregation (one scan, one shuffle, no /32 join),
     `buckets` the /32 alerts and the /24 avg-of-avg in ONE grouped
     aggregate over it, `alerts` one explode of both scopes. Every
-    value (the `now`-derived bounds, Q, the new-key limits, the TTL
-    cut, the scope labels) is a named parameter marker and every
+    value (`now`, Q, the new-key limits, the window spans, the TTL,
+    the scope labels) is a named parameter marker and every
     identifier comes from a fixed `SpikeShape`, so the text never
     changes between cycles and building it is one parse and one
     analysis, where the Column chain it replaced was a dozen eagerly
     analysed DataFrame steps.
+  * the generated code does not change between cycles either. A
+    marker still becomes a literal in the generated Java, so `now`,
+    the one value that moves every cycle, binds only a one-row clock
+    relation (`_CLOCK`), broadcast once. The cycle's row window, both
+    spike windows and the TTL cut are arithmetic on its `_now` column
+    over markers fixed by `DetectorParams`. So from the second cycle
+    of one shape on, every stage hits Spark's codegen cache and
+    nothing is compiled (tests/test_plans.py).
   * /24 derivation is a native bitmask expression (functions/ip.py),
     not a Python UDF (hha.py:20) — keeps whole-stage codegen intact.
   * nothing needs the reference's RDD round-trip materialization hack
@@ -60,6 +68,7 @@ from pyspark.sql.types import IntegralType
 from hha_spark.config import DetectorParams
 from hha_spark.functions.ip import _NET24_MASK
 from hha_spark.functions.local import sql_over_views
+from hha_spark.sources.histograms import SECONDS_PER_HOUR
 
 # S2's bucket value: the average of the non-NULL per-key averages in
 # `c`, NULL when there are none. floor(avg(int)) == integer floor
@@ -145,10 +154,8 @@ class SpikeShape:
     bucket  SQL expression over `entity`: the bucket's base value
     value   the counter averaged per window
     time    the timestamp the window bounds apply to
-    now     a column of the input holding a data-derived `now`; the
-            windows are then `now - :cur_span` / `now - :prev_span`.
-            None: the bounds are the markers `:cur_lower` /
-            `:prev_upper`.
+    now     a column of the input holding `now`; the windows are
+            `time > now - :cur_span` and `time < now - :prev_span`
     """
 
     keys: tuple[str, ...]
@@ -156,7 +163,7 @@ class SpikeShape:
     bucket: str
     value: str
     time: str
-    now: str | None = None
+    now: str
 
 
 def _integral(df: DataFrame, col: str) -> bool:
@@ -196,10 +203,7 @@ def _fused_cte(shape: SpikeShape, integral: bool) -> str:
     else:
         v = f"CAST({_id(shape.value)} AS DECIMAL(18,6))"
         floor = "CAST(FLOOR({s} / {n}) AS BIGINT)"
-    if shape.now is None:
-        lo, hi = ":cur_lower", ":prev_upper"
-    else:
-        lo, hi = f"{_id(shape.now)} - :cur_span", f"{_id(shape.now)} - :prev_span"
+    lo, hi = f"{_id(shape.now)} - :cur_span", f"{_id(shape.now)} - :prev_span"
     cur = floor.format(s="_cur_sum", n="_cur_n")
     prev = floor.format(s="_prev_sum", n="_prev_n")
     return f"""_sums AS (
@@ -208,7 +212,7 @@ def _fused_cte(shape: SpikeShape, integral: bool) -> str:
          SUM(CASE WHEN {t} > {lo} THEN 1 ELSE 0 END) AS _cur_n,
          SUM(CASE WHEN {t} < {hi} THEN {v} END) AS _prev_sum,
          SUM(CASE WHEN {t} < {hi} THEN 1 ELSE 0 END) AS _prev_n
-  FROM {{src}} GROUP BY {keys}),
+  FROM _src GROUP BY {keys}),
 _avgs AS (
   SELECT {keys},
          CASE WHEN _cur_n > 0 THEN {cur} END AS sum_val,
@@ -272,13 +276,20 @@ alerts AS (
   WHERE _a IS NOT NULL)"""
 
 
-def spike_statement(shape: SpikeShape, *, integral: bool, tail: str) -> str:
-    """The S1-S7 CTE chain (`fused`, `buckets`, `alerts`) over the view
-    `{src}`, finished by `tail` — a fixed SELECT over those CTEs. The
-    text holds identifiers from `shape` and named parameter markers
-    only, so it is the same string for every `now` and every
-    threshold."""
-    return f"WITH {_fused_cte(shape, integral)},\n{_alert_ctes(shape)}\n{tail}"
+# the statement's input as it is: the view `{src}`
+_SRC = "_src AS (SELECT * FROM {src})"
+
+
+def spike_statement(
+    shape: SpikeShape, *, integral: bool, tail: str, source: str = _SRC
+) -> str:
+    """The S1-S7 CTE chain (`fused`, `buckets`, `alerts`) over the CTE
+    `_src`, finished by `tail` — a fixed SELECT over those CTEs.
+    `source` defines `_src` and any CTE ahead of it; by default `_src`
+    is the view `{src}`. The text holds identifiers from `shape` and
+    named parameter markers only, so it is the same string for every
+    `now` and every threshold."""
+    return f"WITH {source},\n{_fused_cte(shape, integral)},\n{_alert_ctes(shape)}\n{tail}"
 
 
 def run_spike_statement(
@@ -287,28 +298,50 @@ def run_spike_statement(
     tail: str,
     args: Mapping[str, object],
     frames: Mapping[str, DataFrame] | None = None,
+    source: str = _SRC,
 ) -> DataFrame:
     """`spike_statement` over `df` (the `{src}` view) and `frames`, with
     `args` bound to its parameter markers."""
     return sql_over_views(
         df.sparkSession,
-        spike_statement(shape, integral=_integral(df, shape.value), tail=tail),
+        spike_statement(
+            shape, integral=_integral(df, shape.value), tail=tail, source=source
+        ),
         {"src": df, **(frames or {})}, args=dict(args),
     )
 
 
-# the histogram fact table's identifiers
+# the histogram fact table's identifiers; `_now` comes from the clock
 HISTOGRAM_SHAPE = SpikeShape(
     keys=("num_protocol", "type_proto", "dst_ip"),
     entity="dst_ip",
     bucket=f"`dst_ip` & {_NET24_MASK}",
     value="CountPkt",
     time="timestamp",
+    now="_now",
 )
+# The cycle's clock: `now`, its one per-cycle value, as a one-row
+# relation. Spark writes a literal into the generated Java, so a bound
+# spliced in as a literal or bound to a marker changes the code of
+# every stage it reaches, and each cycle would compile them anew. A
+# value read from a relation is data. It is a VALUES table because the
+# other one-row forms are still literals in the generated code: a
+# `SELECT :now` over no table is a codegen'd projection of the
+# literal, and `ScalarSubquery.doGenCode` emits its result as one.
+# Both readers project it the same way (`_now` alone), so its
+# broadcast is built once and reused.
+_CLOCK = "_clock AS (SELECT * FROM VALUES (CAST(:now AS BIGINT)) AS _clock(_now))"
+# The rows of `detector.cycle_window(now)`, each carrying `_now`: the
+# start of now's hour less `:history_back` < timestamp < now + 1.
+_CYCLE_SOURCE = f"""{_CLOCK},
+_src AS (
+  SELECT /*+ BROADCAST(c) */ h.*, c._now FROM {{src}} h JOIN _clock c
+    ON h.`timestamp` > c._now - pmod(c._now, {SECONDS_PER_HOUR}) - :history_back
+   AND h.`timestamp` < c._now + 1)"""
 _GATE = " LEFT SEMI JOIN {zones} z ON a.dst_ip = z.ip"
 _DEDUP = (
-    " LEFT ANTI JOIN (SELECT num_protocol, type_proto, dst_ip FROM {prior}"
-    " WHERE detected_at > :ttl_cut) r"
+    " LEFT ANTI JOIN (SELECT /*+ BROADCAST(c) */ p.num_protocol, p.type_proto,"
+    " p.dst_ip FROM {prior} p JOIN _clock c ON p.detected_at > c._now - :ttl_sec) r"
     " ON a.num_protocol = r.num_protocol AND a.type_proto = r.type_proto"
     " AND a.dst_ip = r.dst_ip"
 )
@@ -326,6 +359,23 @@ def _detect_tail(gated: bool, deduped: bool) -> str:
     )
 
 
+def _cycle_args(params: DetectorParams, now: int) -> dict[str, object]:
+    """The values `_CYCLE_SOURCE` and the S1-S7 chain bind: `now`, which
+    the clock carries, and constants of `params`."""
+    p = params
+    return {
+        "now": now,
+        "history_back": (p.history_hours - 1) * SECONDS_PER_HOUR + 1,
+        "cur_span": p.cur_window_sec,
+        "prev_span": p.prev_window_sec,
+        "q": p.quotient_amplification,
+        "limit_new": p.limit_new_data,
+        "limit_new_net": p.limit_new_data_net,
+        "scope_entity": "ip",
+        "scope_bucket": "net",
+    }
+
+
 def detect_spikes(
     histograms: DataFrame,
     *,
@@ -334,10 +384,16 @@ def detect_spikes(
     zones: DataFrame | None = None,
     prior_alerts: DataFrame | None = None,
 ) -> DataFrame:
-    """Full S1-S8 detection cycle over the histogram fact table, as
-    ONE parameterized SQL statement (`spike_statement` over
+    """Full S1-S8 detection cycle at `now` over the histogram fact
+    table, as ONE parameterized SQL statement (`spike_statement` over
     `HISTOGRAM_SHAPE` plus the S8 tail). Nothing is persisted: the
     fact data is scanned once per action.
+
+    Only the rows of `detector.cycle_window(now, params)` count: the
+    reference reads the current and previous hourly file and nothing
+    newer than `now` (hha.py:147,293-297). The statement cuts them on
+    its one-row clock (`_CLOCK`), so the caller may pass any superset,
+    such as `read_window`'s hours.
 
     Returns alerts with columns
         (num_protocol, type_proto, sum_val, dst_ip, scope)
@@ -353,27 +409,20 @@ def detect_spikes(
     the network *base address* itself is watchlisted). None: no
     gating.
     prior_alerts: optional DataFrame with (num_protocol, type_proto,
-    dst_ip, detected_at) — alerts already raised within
-    `limit_detect_time_sec` are suppressed by a broadcast anti-join
-    (hha.py:234-244). None: no dedup.
+    dst_ip, detected_at) — alerts raised within
+    `limit_detect_time_sec` (`detected_at > now - ttl`, cut on the
+    clock) are suppressed by a broadcast anti-join (hha.py:234-244).
+    None: no dedup.
     """
-    p = params
     frames = {}
-    args = {
-        "cur_lower": now - p.cur_window_sec,
-        "prev_upper": now - p.prev_window_sec,
-        "q": p.quotient_amplification,
-        "limit_new": p.limit_new_data,
-        "limit_new_net": p.limit_new_data_net,
-        "scope_entity": "ip",
-        "scope_bucket": "net",
-    }
+    args = _cycle_args(params, now)
     if zones is not None:
         frames["zones"] = zones
     if prior_alerts is not None:
         frames["prior"] = prior_alerts
-        args["ttl_cut"] = now - p.limit_detect_time_sec
+        args["ttl_sec"] = params.limit_detect_time_sec
     return run_spike_statement(
         histograms, HISTOGRAM_SHAPE,
         _detect_tail(zones is not None, prior_alerts is not None), args, frames,
+        source=_CYCLE_SOURCE,
     )

@@ -4,7 +4,8 @@ The reference remembers raised alerts in an in-memory dict whose
 entries expire after LimitDetectTimeSec and which dies with the
 process (hha.py:223-249). Here that dict is a table: it survives
 restarts, and the TTL dedup becomes a broadcast anti-join against
-`recent_alerts`. It is the dedup state, not a long-term alert log —
+`recent_alerts` that cuts `detected_at > now - ttl_sec`. It is the
+dedup state, not a long-term alert log —
 the rules a cycle emits are its output (`collect_rules`), and files
 expire with the TTL like the dict's entries.
 
@@ -34,7 +35,6 @@ import re
 import uuid
 
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
 
 from hha_spark.functions.local import arrow_rows_table
 from hha_spark.schemas import ALERTS_SCHEMA
@@ -92,18 +92,22 @@ def append_alerts(
             fs.delete(spark, f"{table_path}/{child}")
 
 
-def recent_alerts(
-    spark: SparkSession, table_path: str, *, now: int, ttl_sec: int
-) -> DataFrame | None:
-    """Alerts raised within the TTL — the dedup anti-join's right side.
+def recent_alerts(spark: SparkSession, table_path: str) -> DataFrame | None:
+    """The alerts table — the dedup anti-join's right side.
+
+    It holds little more than the alerts raised within the TTL, since
+    `append_alerts` unlinks the files past it. The exact cut
+    (`detected_at > now - ttl_sec`) is the anti-join's, made once on
+    the detector's one-row clock (operators/spike.py::detect_spikes):
+    a cut written here with a literal `now` would change the generated
+    code of the read every cycle.
 
     Returns None when the table doesn't exist yet (first cycle).
     """
     try:
-        df = spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
+        return spark.read.schema(ALERTS_SCHEMA).parquet(table_path)
     except Exception:  # noqa: BLE001 — path-not-found on first run
         return None
-    return df.where(F.col("detected_at") > F.lit(now - ttl_sec))
 
 
 def collect_rules(alerts: DataFrame) -> list[dict]:

@@ -11,8 +11,7 @@ partitioned layout
 and the same selection is a WHERE clause: Catalyst's partition
 pruning turns the `timestamp` window into directory pruning, no
 driver-side file probing, and the scan parallelizes over whatever
-files remain. `read_window` also applies the row-level bound so
-parquet row-group min/max skipping engages inside each kept file.
+files remain.
 
 For parity testing against the reference's naming scheme,
 `write_hourly` can also emit `level_<unixhour>` flat files
@@ -74,21 +73,25 @@ def read_window(
     lower: int | None = None,
     upper: int | None = None,
 ) -> DataFrame:
-    """Read the partitioned layout, pruned to the window's hours.
+    """Read the partitioned layout, pruned to the hours of the open
+    window (lower, upper).
 
     The partition predicate keeps exactly the hours that hold some
-    integer timestamp of the open window (lower, upper): the hours of
-    `lower + 1` through `upper - 1`. So pruning never drops a row the
-    row filter keeps, and never lists an hour whose rows it would all
-    skip.
+    integer timestamp of the window: the hours of `lower + 1` through
+    `upper - 1`. It runs on the driver, while the files are listed, so
+    it never reaches generated code. The rows of a kept hour are not
+    cut to the window: the detector cuts them with bounds computed
+    from its one-row clock (operators/spike.py::detect_spikes), where
+    bounds written here as literals would change the generated code
+    of the scan every cycle.
     """
     conds = []
     if lower is not None:
         hour_floor = ((lower + 1) // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
-        conds += [_hour_bound(">", hour_floor), f"timestamp > {int(lower)}"]
+        conds.append(_hour_bound(">", hour_floor))
     if upper is not None:
         hour_ceil = ((upper - 1) // SECONDS_PER_HOUR) * SECONDS_PER_HOUR
-        conds += [_hour_bound("<", hour_ceil), f"timestamp < {int(upper)}"]
+        conds.append(_hour_bound("<", hour_ceil))
     df = spark.read.schema(_PARTITIONED_SCHEMA).parquet(root)
     if conds:
         # one SQL predicate is one py4j call, where the equivalent

@@ -139,15 +139,13 @@ def run_streaming_detector(
     trigger_sec: int | None = None,
     now_fn: Callable[[], float] = time.time,
     on_rules: Callable[[list[dict]], None] | None = None,
-    available_now: bool = False,
 ):
     """File source -> foreachBatch(full detector) -> alerts table.
 
     `trigger_sec` plays the reference's sleepInterval (hha.conf:26);
-    `now_fn` is injectable so tests replay deterministically.
-    `available_now=True` processes everything currently in the source
-    then stops — one bounded run of the real machinery (the
-    driver-gate replay mode; mutually exclusive with `trigger_sec`).
+    `now_fn` is injectable so tests replay deterministically. A
+    bounded replay of the same processor goes through
+    `streaming.replay_files` (queries/streaming_gate.py).
     Returns the StreamingQuery.
     """
     p = params or DetectorParams()
@@ -167,8 +165,6 @@ def run_streaming_detector(
             on_rules=on_rules,
         )
     ).option("checkpointLocation", checkpoint)
-    if available_now:
-        writer = writer.trigger(availableNow=True)
-    elif trigger_sec:
+    if trigger_sec:
         writer = writer.trigger(processingTime=f"{trigger_sec} seconds")
     return writer.start()

@@ -115,8 +115,9 @@ def test_fused_equals_two_frame_compare(spark, rows):
               r.prev_sum_val2)
         # every marker is bound, the unread alert CTEs' too
         for r in run_spike_statement(
-            df, SpikeShape(("k",), "k", "k", "v", "ts"), "SELECT * FROM fused",
-            {"cur_lower": NOW - 90, "prev_upper": NOW - 300, "q": q,
+            df.withColumn("now", F.lit(NOW).cast("long")),
+            SpikeShape(("k",), "k", "k", "v", "ts", "now"), "SELECT * FROM fused",
+            {"cur_span": 90, "prev_span": 300, "q": q,
              "limit_new": limit, "limit_new_net": limit,
              "scope_entity": "ip", "scope_bucket": "net"},
         ).collect()

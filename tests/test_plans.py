@@ -420,22 +420,13 @@ def test_ccnet_buckets_windows_are_lang_partitioned(spark):
     assert "BroadcastHashJoin" in plan  # head-vocabulary join
 
 
-def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
-    """The detector cycle is one linear plan: one scan of the fact
-    data, nothing persisted, no union, no sort-merge join, and no join
-    at all besides the two broadcast S8 gates. A run_cycle leaves the
-    block manager's pinned RDDs as it found them."""
-    from hha_spark.caching import pinned_rdd_count, release_tracked
-    from hha_spark.config import DetectorParams
-    from hha_spark.detector import run_cycle
-    from hha_spark.operators.spike import detect_spikes
+def _small_detector_store(spark, tmp_path, now, ip):
+    """A three-row histogram store with one alerting key, and an alerts
+    table holding one alert raised 10 s before `now`."""
     from hha_spark.schemas import HISTOGRAM_SCHEMA
-    from hha_spark.sinks.alerts import append_alerts, recent_alerts
-    from hha_spark.sources.histograms import read_window, write_partitioned
-    from hha_spark.sources.watchlist import zones_from_ints
+    from hha_spark.sinks.alerts import append_alerts
+    from hha_spark.sources.histograms import write_partitioned
 
-    now = 1_700_000_000
-    ip = 174327308
     hist_path = str(tmp_path / "histograms")
     alerts_path = str(tmp_path / "alerts")
     write_partitioned(
@@ -452,28 +443,60 @@ def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
     rule = {"num_protocol": 2, "type_proto": 41, "sum_val": 1,
             "dst_ip": "10.100.7.3", "scope": "ip"}
     append_alerts(spark, [rule], alerts_path, detected_at=now - 10, ttl_sec=300)
+    return hist_path, alerts_path
+
+
+def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
+    """The detector cycle is one linear plan: one scan of the fact
+    data, nothing persisted, no union, no sort-merge join, no
+    cartesian product. Its joins are the two broadcast S8 gates and
+    the one-row clock, joined to the fact rows and to the alerts
+    table: one LocalTableScan broadcast once, its second reader reusing
+    the broadcast. A run_cycle leaves the block manager's pinned RDDs
+    as it found them."""
+    from hha_spark.caching import pinned_rdd_count, release_tracked
+    from hha_spark.config import DetectorParams
+    from hha_spark.detector import cycle_window, run_cycle
+    from hha_spark.operators.spike import detect_spikes
+    from hha_spark.sinks.alerts import recent_alerts
+    from hha_spark.sources.histograms import read_window
+    from hha_spark.sources.watchlist import zones_from_ints
+
+    now = 1_700_000_000
+    ip = 174327308
+    hist_path, alerts_path = _small_detector_store(spark, tmp_path, now, ip)
+    lower, upper = cycle_window(now, DetectorParams())
     alerts = detect_spikes(
-        read_window(spark, hist_path, upper=now + 1),
+        read_window(spark, hist_path, lower=lower, upper=upper),
         params=DetectorParams(), now=now,
         zones=zones_from_ints(spark, [ip]),
-        prior_alerts=recent_alerts(spark, alerts_path, now=now, ttl_sec=300),
+        prior_alerts=recent_alerts(spark, alerts_path),
     )
     optimized = alerts._jdf.queryExecution().optimizedPlan().toString()
+    # the final adaptive plan, where the clock's broadcast is reused
+    assert len(alerts.collect()) == 1
     plan = plan_of(alerts)
+    final = plan[plan.index("== Final Plan =="):plan.index("== Initial Plan ==")]
 
     # the fact scan (the one reading CountPkt) plus the alerts table
-    scans = [ln for ln in plan.splitlines() if "FileScan parquet" in ln]
+    scans = [ln for ln in final.splitlines() if "FileScan parquet" in ln]
     assert len(scans) == 2
     assert sum("CountPkt" in ln for ln in scans) == 1
     assert "InMemoryRelation" not in optimized
     assert "Union" not in optimized
     assert "SortMergeJoin" not in plan
+    assert "CartesianProduct" not in plan
     joins = [ln.strip() for ln in optimized.splitlines() if "Join " in ln]
-    assert len(joins) == 2, joins
+    assert len(joins) == 4, joins
     assert sum("LeftSemi" in j for j in joins) == 1
     assert sum("LeftAnti" in j for j in joins) == 1
+    assert sum("Inner" in j for j in joins) == 2
     assert all("broadcast" in j for j in joins)
-    assert plan.count("BroadcastHashJoin") == 2
+    assert final.count("BroadcastHashJoin") == 2
+    assert final.count("BroadcastNestedLoopJoin") == 2
+    clock = [ln for ln in final.splitlines() if "LocalTableScan [_now" in ln]
+    assert len(clock) == 1, clock
+    assert final.count("ReusedExchange [_now") == 1
 
     # run_cycle releases tracked persists at its end: release the ones
     # earlier tests left first, so the counts compare this cycle alone
@@ -485,3 +508,29 @@ def test_detect_spikes_scans_fact_data_once(spark, tmp_path):
     )
     assert len(rules) == 1
     assert pinned_rdd_count(spark) == pinned
+
+
+def test_warm_detector_cycle_compiles_nothing(spark, tmp_path):
+    """`now` reaches the cycle's plan only as the clock's data, so the
+    generated code of every stage is the same from cycle to cycle: the
+    third of three cycles 10 s apart finds every class in the codegen
+    cache and compiles none. A `now`-derived literal anywhere in the
+    plan (a row bound, a window bound, the TTL cut) makes it compile
+    again."""
+    from hha_spark.config import DetectorParams
+    from hha_spark.detector import run_cycle
+    from hha_spark.sources.watchlist import zones_from_ints
+
+    now = 1_700_000_000
+    ip = 174327308
+    hist_path, alerts_path = _small_detector_store(spark, tmp_path, now, ip)
+    metrics = spark._jvm.org.apache.spark.metrics.source.CodegenMetrics
+    compiled = []
+    for t in (now, now + 10, now + 20):
+        before = metrics.METRIC_COMPILATION_TIME().getCount()
+        run_cycle(
+            spark, data_root=hist_path, alerts_path=alerts_path,
+            params=DetectorParams(), zones=zones_from_ints(spark, [ip]), now=t,
+        )
+        compiled.append(metrics.METRIC_COMPILATION_TIME().getCount() - before)
+    assert compiled[2] == 0, compiled

@@ -1,6 +1,7 @@
-"""tools/run_detector.py: the watchlist file is re-read every batch
-cycle and every streaming micro-batch, so an edit to --zones-file
-reaches the next one; the tool starts from any working directory."""
+"""tools/run_detector.py: the watchlist file, or the Consul KV
+directory, is re-read every batch cycle and the file every streaming
+micro-batch, so an edit reaches the next one; the tool starts from any
+working directory."""
 
 from __future__ import annotations
 
@@ -32,10 +33,9 @@ def _load_tool(monkeypatch):
     return tool
 
 
-def test_zones_file_is_reread_each_cycle(spark, tmp_path, monkeypatch):
-    tool = _load_tool(monkeypatch)
-    zones_file = tmp_path / "zones.txt"
-    zones_file.write_text("10.0.0.1\n")
+def _two_batch_cycles(tool, spark, monkeypatch, argv, edit) -> list[list[int]]:
+    """Run the tool's batch loop for two cycles with `run_cycle` faked,
+    calling `edit()` between them; returns each cycle's watchlist."""
     seen: list[list[int]] = []
 
     def fake_cycle(spark_, *, zones, **kwargs):
@@ -44,7 +44,7 @@ def test_zones_file_is_reread_each_cycle(spark, tmp_path, monkeypatch):
 
     def fake_sleep(_seconds):
         if len(seen) == 1:
-            zones_file.write_text("# edited\n10.0.0.2\n10.0.0.3\n")
+            edit()
             return
         raise _Stop
 
@@ -55,14 +55,84 @@ def test_zones_file_is_reread_each_cycle(spark, tmp_path, monkeypatch):
         tool, "time", types.SimpleNamespace(time=time.time, sleep=fake_sleep)
     )
     with pytest.raises(_Stop):
-        tool.main([
-            "--data-root", str(tmp_path / "hist"),
-            "--alerts", str(tmp_path / "alerts"),
-            "--zones-file", str(zones_file),
-            "--interval", "1",
-        ])
+        tool.main(argv + ["--interval", "1"])
+    return seen
+
+
+def test_zones_file_is_reread_each_cycle(spark, tmp_path, monkeypatch):
+    tool = _load_tool(monkeypatch)
+    zones_file = tmp_path / "zones.txt"
+    zones_file.write_text("10.0.0.1\n")
+    seen = _two_batch_cycles(tool, spark, monkeypatch, [
+        "--data-root", str(tmp_path / "hist"),
+        "--alerts", str(tmp_path / "alerts"),
+        "--zones-file", str(zones_file),
+    ], lambda: zones_file.write_text("# edited\n10.0.0.2\n10.0.0.3\n"))
     ip = lambda s: int(ipaddress.IPv4Address(s))  # noqa: E731
     assert seen == [[ip("10.0.0.1")], [ip("10.0.0.2"), ip("10.0.0.3")]]
+
+
+def test_consul_watchlist_is_reread_each_cycle(spark, tmp_path, monkeypatch):
+    """--consul-host/--consul-key-dir: every batch cycle fetches the KV
+    directory again over the Consul HTTP API, as the reference's
+    poller does (hha.py:41-71), so an edit in Consul gates the next
+    cycle."""
+    import base64
+    import json
+    import urllib.request
+
+    tool = _load_tool(monkeypatch)
+    kv = {"a": "10.0.0.1\nnot-an-ip\n"}
+    urls: list[str] = []
+
+    class _Response:
+        def __init__(self, body: bytes):
+            self.body = body
+
+        def __enter__(self):
+            return self
+
+        def __exit__(self, *exc):
+            return False
+
+        def read(self) -> bytes:
+            return self.body
+
+    def fake_urlopen(url, timeout=None):
+        urls.append(url)
+        entries = [{"Key": "hha/zones/", "Value": None}] + [
+            {"Key": f"hha/zones/{k}", "Value": base64.b64encode(v.encode()).decode()}
+            for k, v in kv.items()
+        ]
+        return _Response(json.dumps(entries).encode())
+
+    monkeypatch.setattr(urllib.request, "urlopen", fake_urlopen)
+    seen = _two_batch_cycles(tool, spark, monkeypatch, [
+        "--data-root", str(tmp_path / "hist"),
+        "--alerts", str(tmp_path / "alerts"),
+        "--consul-host", "consul.test:8501",
+        "--consul-key-dir", "/hha/zones/",
+    ], lambda: kv.update(a="# edited\n10.0.0.2\n", b="10.0.0.3\n"))
+    ip = lambda s: int(ipaddress.IPv4Address(s))  # noqa: E731
+    assert seen == [[ip("10.0.0.1")], [ip("10.0.0.2"), ip("10.0.0.3")]]
+    assert urls == ["http://consul.test:8501/v1/kv/hha/zones?recurse=true"] * 2
+
+
+@pytest.mark.parametrize("extra", [
+    ["--zones-file", "zones.txt", "--consul-host", "h", "--consul-key-dir", "d"],
+    ["--consul-host", "h"],
+    ["--consul-key-dir", "d"],
+    ["--consul-host", "h:port", "--consul-key-dir", "d"],
+])
+def test_watchlist_address_errors(monkeypatch, extra):
+    """One watchlist source at a time, and a Consul address needs its
+    key directory: the tool exits with a usage error before any
+    session starts."""
+    tool = _load_tool(monkeypatch)
+    monkeypatch.setattr(tool, "get_spark", lambda *a, **k: pytest.fail("started"))
+    with pytest.raises(SystemExit) as exc:
+        tool.main(["--data-root", "d", "--alerts", "a", "--once"] + extra)
+    assert exc.value.code == 2
 
 
 def test_streaming_mode_rereads_zones_file_each_micro_batch(

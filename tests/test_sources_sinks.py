@@ -47,14 +47,16 @@ def test_partitioned_roundtrip_and_pruning(spark, tmp_path):
     assert [(f.name, f.dataType) for f in full.schema.fields] == [
         (f.name, f.dataType) for f in HISTOGRAM_SCHEMA.fields
     ]
-    # window bounds prune partitions AND filter rows
+    # window bounds prune partitions; the rows of a kept hour are
+    # the detector's to cut (tests/test_spike.py)
     cur = read_window(spark, root, lower=NOW - 90)
     assert [r.CountPkt for r in cur.collect()] == [300]
     plan = cur._jdf.queryExecution().executedPlan().toString()
     assert "PartitionFilters: [" in plan
-    # the pruned scan must not read every hour directory
+    # the pruned scan must not read every hour directory: the current
+    # hour is dropped, the previous hour's row at NOW - 3600 is kept
     prev = read_window(spark, root, upper=NOW - 3600 - 10)
-    assert prev.count() == 1
+    assert sorted(r.CountPkt for r in prev.collect()) == [100, 200]
 
 
 MIDNIGHT = 1_700_006_400  # a UTC midnight: the hour grid crosses a date
@@ -177,9 +179,11 @@ def test_alerts_sink_ttl_window(spark, tmp_path):
     assert [(r.num_protocol, r.type_proto, r.sum_val, r.dst_ip, r.scope) for r in back] == [
         (65, 11, 100, IP, "ip")
     ]
-    recent = recent_alerts(spark, path, now=NOW, ttl_sec=300)
-    assert recent.count() == 1
-    assert recent_alerts(spark, str(tmp_path / "missing"), now=NOW, ttl_sec=300) is None
+    # the TTL cut is the detector's anti-join (tests/test_spike.py);
+    # the table holds both files until an append unlinks the older
+    recent = recent_alerts(spark, path)
+    assert sorted(r.detected_at for r in recent.collect()) == [NOW - 999, NOW - 100]
+    assert recent_alerts(spark, str(tmp_path / "missing")) is None
 
 
 def test_append_is_one_driver_written_file_per_call(spark, tmp_path):
@@ -203,7 +207,7 @@ def test_append_is_one_driver_written_file_per_call(spark, tmp_path):
             "INT32", "INT32", "INT64", "INT64", "BYTE_ARRAY", "INT64"
         ]
         assert str(schema.column(4).logical_type) == "String"
-    recent = recent_alerts(spark, path, now=NOW, ttl_sec=300)
+    recent = recent_alerts(spark, path)
     assert sorted((r.dst_ip, r.sum_val) for r in recent.collect()) == [
         (IP, 100), (174327555, 7)
     ]
@@ -239,7 +243,9 @@ def test_expired_alert_files_are_unlinked(spark, tmp_path):
         assert len(files) <= bound, (i, len(files))
         assert all(f.startswith("part-") for f in files)
     assert len(files) == ttl // 10
-    assert recent_alerts(spark, path, now=now, ttl_sec=ttl).count() == len(files)
+    # every file left holds one alert, all of them still inside the TTL
+    live = [r.detected_at for r in recent_alerts(spark, path).collect()]
+    assert len(live) == len(files) and min(live) > now - ttl
 
 
 def test_legacy_unstamped_alert_file_suppresses_and_is_kept(spark, tmp_path):
@@ -308,7 +314,7 @@ def test_alerts_roundtrip_through_detect_spikes(spark, tmp_path):
     back = spark.read.schema(ALERTS_SCHEMA).parquet(alerts_path)
     vals = back.select("sum_val", "dst_ip", "scope").collect()
     assert {(r.sum_val, r.dst_ip, r.scope) for r in vals} == {(2500, IP, "ip")}
-    assert recent_alerts(spark, alerts_path, now=NOW, ttl_sec=300).count() == 1
+    assert recent_alerts(spark, alerts_path).count() == 1
 
 
 def test_full_cycle_with_cross_cycle_dedup(spark, tmp_path):

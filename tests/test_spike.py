@@ -8,6 +8,8 @@ watchlist gating, TTL dedup.
 
 from __future__ import annotations
 
+from hypothesis import HealthCheck, example, given, settings
+from hypothesis import strategies as st
 from pyspark.sql import functions as F
 
 from hha_spark.config import DetectorParams
@@ -35,12 +37,13 @@ def hist_df(spark, rows):
 
 def fused_rows(df):
     """The detector statement's `fused` CTE (S1+S3+S4) at NOW under P:
-    per key, (sum_val, prev_sum_val, prev_sum_val2). Spark rejects an
+    per key, (sum_val, prev_sum_val, prev_sum_val2). NOW is bound as
+    the `_now` column HISTOGRAM_SHAPE windows on. Spark rejects an
     unbound marker even in an unread CTE, so the alert CTEs' markers
     are bound too."""
     args = {
-        "cur_lower": NOW - P.cur_window_sec,
-        "prev_upper": NOW - P.prev_window_sec,
+        "cur_span": P.cur_window_sec,
+        "prev_span": P.prev_window_sec,
         "q": P.quotient_amplification,
         "limit_new": P.limit_new_data,
         "limit_new_net": P.limit_new_data_net,
@@ -48,7 +51,8 @@ def fused_rows(df):
         "scope_bucket": "net",
     }
     return run_spike_statement(
-        df, HISTOGRAM_SHAPE, "SELECT * FROM fused", args
+        df.withColumn("_now", F.lit(NOW).cast("long")), HISTOGRAM_SHAPE,
+        "SELECT * FROM fused", args,
     ).collect()
 
 
@@ -345,3 +349,54 @@ def test_statement_text_holds_no_values(spark, monkeypatch):
             if isinstance(value, int) and value >= 77:
                 assert str(value) not in text
     assert len({tuple(sorted(a.items())) for _, a in sent}) == 4
+
+
+HOUR_EDGE = (NOW // 3600) * 3600
+
+
+@given(
+    now=st.integers(HOUR_EDGE - 7300, HOUR_EDGE + 7300),
+    hours=st.integers(1, 3),
+)
+@example(now=HOUR_EDGE, hours=1)
+@example(now=HOUR_EDGE - 1, hours=2)
+@settings(max_examples=12, deadline=None,
+          suppress_health_check=[HealthCheck.function_scoped_fixture])
+def test_clock_row_cut_is_cycle_window(spark, now, hours):
+    """detect_spikes cuts its input to `cycle_window` with bounds it
+    computes from the clock's `_now`: rows on and next to each bound
+    are kept exactly when lower < ts < upper."""
+    from dataclasses import replace
+
+    from hha_spark.detector import cycle_window
+    from hha_spark.operators.spike import _CYCLE_SOURCE, _cycle_args
+
+    params = replace(P, history_hours=hours)
+    lower, upper = cycle_window(now, params)
+    ts = [lower - 1, lower, lower + 1, upper - 1, upper, upper + 1]
+    got = run_spike_statement(
+        hist_df(spark, [(t, 65, 11, 1, IP_A) for t in ts]), HISTOGRAM_SHAPE,
+        "SELECT `timestamp` FROM _src", _cycle_args(params, now),
+        source=_CYCLE_SOURCE,
+    ).collect()
+    assert sorted(r.timestamp for r in got) == [t for t in ts if lower < t < upper]
+
+
+def test_ttl_cut_is_strict(spark):
+    """An alert raised exactly `limit_detect_time_sec` before `now` has
+    expired; one raised a second later still suppresses
+    (`detected_at > now - ttl`, the complement of the
+    `detected_at <= now - ttl` files `append_alerts` unlinks)."""
+    ttl = P.limit_detect_time_sec
+    rows = (
+        key_rows((65, 11, IP_A), CUR_TS, 8000)
+        + key_rows((68, 11, IP_C), CUR_TS, 8000)
+    )
+    prior = spark.createDataFrame(
+        [(65, 11, IP_A, NOW - ttl), (68, 11, IP_C, NOW - ttl + 1)],
+        "num_protocol int, type_proto int, dst_ip long, detected_at long",
+    )
+    got = alerts_set(
+        detect_spikes(hist_df(spark, rows), params=P, now=NOW, prior_alerts=prior)
+    )
+    assert {(a[3], a[4]) for a in got if a[4] == "ip"} == {(IP_A, "ip")}
